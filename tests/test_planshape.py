@@ -278,3 +278,98 @@ def test_incremental_dedup_probe_shape(spark, tmp_path):
     plan = _plan_of(incremental_dedup_survivors(batch, idx))
     assert "LeftSemi" in plan, plan
     assert re.search(r"BroadcastHashJoin.*LeftAnti", plan), plan
+
+
+# physical operators that run rows through a Python worker process
+_PYTHON_NODES = (
+    "ExistingRDD",
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+)
+
+
+def test_default_batch_and_stream_plans_start_no_python_worker(spark):
+    """The default-config routed plan and the streaming micro-batch's
+    parse/enrich/window plan are JVM-only: the built-in dims are local
+    relations, not a PythonRDD scan."""
+    from trace_aware_reservoir_otel_spark.streaming.pipeline import _prepared_batch
+
+    tr = generate_transcripts(spark, n_convs=50, seed=42)
+    cfg = PipelineConfig()
+    routed, _ = build_routed(tr, cfg)
+    for plan in (_plan_of(routed), _plan_of(_prepared_batch(tr, cfg))):
+        assert "LocalTableScan" in plan
+        found = [node for node in _PYTHON_NODES if node in plan]
+        assert not found, f"{found} in plan:\n{plan}"
+
+
+def test_dims_plan_as_local_table_scan(spark):
+    from trace_aware_reservoir_otel_spark.operators.enrich import (
+        dim_role_df,
+        dim_tool_df,
+    )
+    from trace_aware_reservoir_otel_spark.schema import (
+        DIM_ROLE_SCHEMA,
+        DIM_TOOL_SCHEMA,
+    )
+
+    for df, schema in (
+        (dim_role_df(spark), DIM_ROLE_SCHEMA),
+        (dim_tool_df(spark), DIM_TOOL_SCHEMA),
+    ):
+        plan = _plan_of(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert df.schema == schema
+
+
+def test_local_frame_round_trip(spark):
+    from pyspark.sql import types as T
+
+    from trace_aware_reservoir_otel_spark.session import local_frame
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), False),
+            T.StructField("n", T.LongType(), True),
+            T.StructField("x", T.DoubleType(), True),
+            T.StructField("b", T.BooleanType(), False),
+        ]
+    )
+    rows = [("a", 1 << 40, 0.5, True), ("b", None, None, False)]
+    df = local_frame(spark, rows, schema)
+    assert df.schema == schema
+    # the JVM side keeps the nullability too, not just the Python wrapper
+    assert df.select("*").schema == schema
+    assert [tuple(r) for r in df.collect()] == rows
+    assert "LocalTableScan" in _plan_of(df)
+
+    empty = local_frame(spark, [], "metric string, value double")
+    assert empty.schema == T.StructType.fromDDL("metric string, value double")
+    assert empty.collect() == []
+
+
+@pytest.mark.parametrize(
+    "ids", [["d", "a", "c", "b", "e"], [5 << 40, 1, 3, 2 << 40, 9]]
+)
+def test_cc_driver_union_find_is_local_relation(spark, ids):
+    """The driver union-find's labels come back as a local relation,
+    keeping the edge frame's id type (string or long)."""
+    from trace_aware_reservoir_otel_spark.operators.dedup import (
+        _cc_driver_union_find,
+    )
+
+    a, b, c, d, e = ids
+    id_type = "string" if isinstance(a, str) else "bigint"
+    edges = [(a, b), (b, c), (d, e)]
+    sym = spark.createDataFrame(
+        edges + [(y, x) for x, y in edges], f"a {id_type}, b {id_type}"
+    )
+    out = _cc_driver_union_find(sym)
+    assert out.schema["id"].dataType == sym.schema["a"].dataType
+    assert "LocalTableScan" in _plan_of(out)
+    assert dict(map(tuple, out.collect())) == {
+        a: min(a, b, c), b: min(a, b, c), c: min(a, b, c),
+        d: min(d, e), e: min(d, e),
+    }

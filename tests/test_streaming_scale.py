@@ -88,7 +88,7 @@ def test_roll_io_is_bounded_by_closing_windows(spark, tmp_path_factory):
 
 
 def test_vacuum_removes_exported_state(spark, tmp_path_factory):
-    """Exported windows' spill/pre partitions must be deleted, so state
+    """Exported windows' spill partitions must be deleted, so state
     volume is O(open windows) on a continuous stream."""
     cfg = PipelineConfig(
         size_k=5, window_duration_s=60, seed=42, late_tolerance_s=None,
@@ -104,8 +104,10 @@ def test_vacuum_removes_exported_state(spark, tmp_path_factory):
     done = _exported_buckets(state)
     rolled = {b for b, bid in done.items() if bid is not None}
     assert rolled
+    # rolls aggregate units from the spill: no per-batch partial layer
+    assert not os.path.exists(os.path.join(state, "pre"))
     leftovers = []
-    for sub in ("spill", "pre"):
+    for sub in ("spill",):
         root = os.path.join(state, sub)
         for bdir in os.listdir(root):
             for leaf in os.listdir(os.path.join(root, bdir)):
@@ -160,6 +162,32 @@ def test_crash_before_mark_recovers_idempotently(spark, tmp_path_factory):
     assert got == exp
     rows_in, rows_out = incremental_conservation(spark, state, out)
     assert rows_in == rows_out == df.count()
+
+
+def test_footer_count_mismatch_fails_the_batch(
+    spark, tmp_path_factory, monkeypatch
+):
+    """Per-bucket counts read from the spill's parquet footers must add up
+    to the rows the spill write observed. A footer listing that finds
+    nothing would otherwise record the batch with rows_in = 0 and skip its
+    partials: rows vanish while conservation still balances."""
+    import trace_aware_reservoir_otel_spark.streaming.pipeline as sp
+
+    cfg = PipelineConfig(
+        size_k=5, window_duration_s=60, seed=42, late_tolerance_s=None,
+        export_bucket_windows=4,
+    )
+    base = str(tmp_path_factory.mktemp("stream_footer_skip"))
+    df = generate_transcripts(spark, n_convs=30, seed=3)
+    in_dir = _write_time_sliced(spark, base, cfg, df, n_files=2)
+    state = os.path.join(base, "state")
+    monkeypatch.setattr(sp, "_bucket_counts_from_footers", lambda _dir: {})
+    with pytest.raises(Exception, match=r"observed \d+ rows but the parquet footers"):
+        run_incremental_routed(
+            spark, in_dir, cfg, state, os.path.join(base, "ck"),
+            os.path.join(base, "out"),
+        )
+    assert _read_epoch(state) == []  # nothing recorded for the batch
 
 
 def test_lateness_rolls_mid_stream_equals_batch(spark, tmp_path_factory):

@@ -23,6 +23,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from trace_aware_reservoir_otel_spark.session import local_frame
 from trace_aware_reservoir_otel_spark.sources.tables import TABLES
 
 SEED = 42
@@ -1010,7 +1011,7 @@ def _q_flagship_via_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the temp dir disappears
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1085,7 +1086,7 @@ def _q_flagship_via_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
         )
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1229,7 +1230,7 @@ def _q_enrich_from_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
         )
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

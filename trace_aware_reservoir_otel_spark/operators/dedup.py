@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from trace_aware_reservoir_otel_spark.functions.hashing import pbig
+from trace_aware_reservoir_otel_spark.session import local_frame
 
 
 def _hash64(col: Column, salt: str, portable: bool, seed: int) -> Column:
@@ -501,7 +502,7 @@ def _cc_driver_union_find(sym: DataFrame) -> DataFrame:
     schema = T.StructType(
         [T.StructField("id", id_type), T.StructField("comp", id_type)]
     )
-    return sym.sparkSession.createDataFrame(out, schema)
+    return local_frame(sym.sparkSession, out, schema)
 
 
 _CC_DRIVER_MAX_EDGES = 2_000_000  # symmetric rows; ~32 MB of (long, long)

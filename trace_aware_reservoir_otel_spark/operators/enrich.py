@@ -5,7 +5,9 @@ positional); the north star adds dimension enrichment. Dims are tiny
 (<= 100 rows) so both joins are explicit `F.broadcast` — zero shuffle of
 the fact side at any scale; left joins so unknown keys survive with NULL
 attributes (FIXTURES.md §2: transcripts contain a tool absent from
-dim_tool).
+dim_tool). The built-in dims are local relations (`session.local_frame`):
+they plan as a LocalTableScan, so an enriched query starts no Python
+worker.
 """
 
 from __future__ import annotations
@@ -18,14 +20,15 @@ from trace_aware_reservoir_otel_spark.schema import (
     DIM_TOOL_ROWS,
     DIM_TOOL_SCHEMA,
 )
+from trace_aware_reservoir_otel_spark.session import local_frame
 
 
 def dim_role_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DIM_ROLE_ROWS, DIM_ROLE_SCHEMA)
+    return local_frame(spark, DIM_ROLE_ROWS, DIM_ROLE_SCHEMA)
 
 
 def dim_tool_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DIM_TOOL_ROWS, DIM_TOOL_SCHEMA)
+    return local_frame(spark, DIM_TOOL_ROWS, DIM_TOOL_SCHEMA)
 
 
 def write_dims(spark: SparkSession, dim_dir: str) -> None:

@@ -56,6 +56,7 @@ from trace_aware_reservoir_otel_spark.plans import commit
 from trace_aware_reservoir_otel_spark.functions.parse import with_parsed_fields
 from trace_aware_reservoir_otel_spark.operators.enrich import enrich
 from trace_aware_reservoir_otel_spark.operators.windows import with_tumbling_window
+from trace_aware_reservoir_otel_spark.session import local_frame
 from trace_aware_reservoir_otel_spark.plans.pipeline import (
     _merge_pre,
     _unit_pre_aggregate,
@@ -253,7 +254,8 @@ def finalize(
         if int(vals[s]) > 0
     }
     commit.commit_write(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(s, n, cfg.run_id) for s, n in counts.items()],
             "sink string, rows long, run_id string",
         ),
@@ -365,4 +367,4 @@ def state_metrics(spark: SparkSession, state_dir: str) -> DataFrame:
         ("state_rows", float(n_rows)),
         ("units_done", float(len(read_manifest(state_dir)))),
     ]
-    return spark.createDataFrame(rows, "metric string, value double")
+    return local_frame(spark, rows, "metric string, value double")

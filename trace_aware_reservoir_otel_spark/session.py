@@ -6,13 +6,17 @@ pandas UDF boundary, UTC session time so epoch arithmetic is portable to
 the DuckDB oracle, shuffle partitions sized to cores (not the 200 default,
 which thrashes small local runs and under-partitions big ones — on a real
 cluster this would be ~2-3x total cores or AQE-advisory driven).
+
+`local_frame` is the one way the library turns driver-side Python rows
+into a DataFrame.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 
 def get_spark(
@@ -43,6 +47,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark 4 records the Python call site of every DataFrame/Column
+        # API call for error messages, at ~3 py4j round trips per call. A
+        # streaming roll builds its plan from ~80 such calls: a quarter of
+        # its py4j traffic (measured: 10k of 41k calls over a 104-batch
+        # stream's rolls). Errors still carry the JVM-side plan context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # broadcast decisions: the STATIC planner sees only size estimates
         # (file size x column-pruning ratio), which at sf1.0 made it
         # broadcast-build multi-million-row fact sides (lineitem in the Q3
@@ -82,3 +92,36 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: "Iterable[Sequence]",
+    schema: "T.StructType | str",
+) -> DataFrame:
+    """DataFrame of driver-side `rows` (tuples or Rows, in `schema`'s field
+    order; `schema` a StructType or a DDL string), planned as a JVM
+    LocalRelation / LocalTableScan.
+
+    `createDataFrame(list_of_tuples)` goes parallelize -> PythonRDD ->
+    Scan ExistingRDD, so every query over the frame forks Python workers
+    just to unpickle constant rows (measured on a 4-core VM: the enrich
+    dims' 9 rows cost 1.3-1.7 s of worker CPU per query). An Arrow table typed by the Spark
+    schema is handed to the JVM directly instead. `createDataFrame` of a
+    pandas frame is not used: it depends on
+    spark.sql.execution.arrow.pyspark.enabled and silently falls back to
+    the pickling path when that conf is off. The schema, nullability
+    included, is kept exactly."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -47,7 +47,7 @@ asserted in tests/test_streaming_scale.py):
    reads per roll;
  - per-roll IO is O(closing windows) via explicit leaf-directory reads;
    summed over the stream's life, spill is read exactly ONCE;
- - exported windows' spill/pre partitions are vacuumed, so state volume
+ - exported windows' spill partitions are vacuumed, so state volume
    is O(open windows) + the compact conv-start index;
  - lateness: with `late_tolerance_s` plus a declared `max_conv_span_s`,
    rollover fires mid-stream (horizon = window end + tolerance + span;
@@ -70,6 +70,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from trace_aware_reservoir_otel_spark import fsutil
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
 from trace_aware_reservoir_otel_spark.schema import TRANSCRIPTS_SCHEMA
+from trace_aware_reservoir_otel_spark.session import local_frame
 
 
 def stream_transcripts(
@@ -492,11 +493,26 @@ def _state_leaf_dirs(state_dir: str, sub: str, buckets: "list") -> "list[str]":
     return paths
 
 
+def _spill_schema(spark: SparkSession, cfg: PipelineConfig) -> T.StructType:
+    """The spill table's schema, partition columns included, from
+    analysing the per-batch plan over an empty local frame. Reading spill
+    with it skips parquet schema inference, a Spark job per read."""
+    batch = _prepared_batch(local_frame(spark, [], TRANSCRIPTS_SCHEMA), cfg)
+    return T.StructType(
+        batch.schema.fields
+        + [
+            T.StructField("batch_id", T.LongType()),
+            T.StructField("window_bucket", T.LongType()),
+        ]
+    )
+
+
 def _read_state_buckets(
     spark: SparkSession,
     state_dir: str,
     sub: str,
     buckets: "list",
+    schema: T.StructType,
 ) -> "DataFrame | None":
     """Read ONLY the given export buckets' state partitions, as an
     explicit list of leaf directories — reading a non-closing bucket's
@@ -506,7 +522,11 @@ def _read_state_buckets(
     paths = _state_leaf_dirs(state_dir, sub, buckets)
     if not paths:
         return None
-    return spark.read.option("basePath", f"{state_dir}/{sub}").parquet(*paths)
+    return (
+        spark.read.schema(schema)
+        .option("basePath", f"{state_dir}/{sub}")
+        .parquet(*paths)
+    )
 
 
 def _write_convstart(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
@@ -559,7 +579,7 @@ def merged_conv_starts(spark: SparkSession, state_dir: str) -> DataFrame:
     if commit.current_version(snap) is not None:
         parts.append(commit.read_committed(spark, snap))
     if not parts:
-        return spark.createDataFrame([], _CONVSTART_SCHEMA)
+        return local_frame(spark, [], _CONVSTART_SCHEMA)
     cs = parts[0]
     for p in parts[1:]:
         cs = cs.unionByName(p)
@@ -611,17 +631,19 @@ def _scale_batch(batch_df: DataFrame) -> DataFrame:
     (measured: blanket repartition was a net loss). Size the target from
     the batch's actual input bytes — ~1 MB of raw input per task, capped
     at the session's parallelism — and repartition only when that exceeds
-    the scan's own split count."""
+    the scan's own split count. A batch under 2 MB has target 1 and never
+    repartitions, so it skips the split-count probe: an RDD conversion
+    (measured 60-80 ms warm, 1.6 s on a session's first call)."""
     sc = batch_df.sparkSession.sparkContext
     try:
         total = 0
         for uri in batch_df.inputFiles():
             p = uri[len("file://"):] if uri.startswith("file://") else uri
             total += os.path.getsize(p)
-    except Exception:  # non-file source / inaccessible paths: leave as-is
+    except OSError:  # non-local / inaccessible paths: leave as-is
         return batch_df
     target = min(sc.defaultParallelism, max(1, int(total // _BATCH_TASK_BYTES)))
-    if target > batch_df.rdd.getNumPartitions():
+    if target > 1 and target > batch_df.rdd.getNumPartitions():
         return batch_df.repartition(target)
     return batch_df
 
@@ -637,7 +659,9 @@ def _prepared_batch(batch_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 def _vacuum_exported(state_dir: str, buckets: "list") -> None:
-    """Delete exported buckets' spill/pre leaf directories. Runs AFTER the
+    """Delete exported buckets' spill leaf directories (and the `pre`
+    unit-partial leafs that state written by earlier versions holds, which
+    rolls no longer read). Runs AFTER the
     mark, so a crash in between leaves inert extra state (filtered out by
     the done-set on every later roll), never missing state. Spill written
     by LATER batches (stragglers) lands in new leaf dirs and survives
@@ -726,6 +750,7 @@ def _route_buckets(
     out_dir: str,
     buckets: "list",
     batch_id: "int | None",
+    spill_schema: T.StructType,
 ) -> None:
     """Route the given (closed) export buckets' spilled rows using state
     read from ONLY those buckets' partitions, and write them with
@@ -734,9 +759,9 @@ def _route_buckets(
     layout unit, not a semantic one) with the batch plan, so the paths
     cannot drift.
 
-    Scale shape: per roll this reads the closing buckets' spill + unit
-    partials (explicit leaf paths) plus, when lateness is on, the compact
-    conv-start index — never the full state history. Summed over a
+    Scale shape: per roll this reads the closing buckets' spill
+    (explicit leaf paths, `spill_schema` so no inference job) plus, when
+    lateness is on, the compact conv-start index — never the full state history. Summed over a
     stream's life the spill reads are exactly ONE pass over the input.
     Commit order: routed write -> metrics record (Observation counts) ->
     exported marks -> vacuum; a crash between any two steps re-routes the
@@ -744,7 +769,7 @@ def _route_buckets(
     from pyspark.sql import Observation
 
     from trace_aware_reservoir_otel_spark.plans.pipeline import (
-        _merge_pre,
+        _unit_pre_aggregate,
         _units_from_pre,
         apply_routing,
         capacity_and_winners,
@@ -752,35 +777,33 @@ def _route_buckets(
 
     if not buckets:
         return
-    spill = _read_state_buckets(spark, state_dir, "spill", buckets)
+    spill = _read_state_buckets(spark, state_dir, "spill", buckets, spill_schema)
     if spill is None:
         _mark_exported(state_dir, buckets, batch_id)
         return
     rows = spill.drop("batch_id", "window_bucket")
-    pre_df = _read_state_buckets(spark, state_dir, "pre", buckets)
     invalid = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
+    valid = rows.filter(~invalid)
     persisted: "list[DataFrame]" = []
     starts = None
-    if pre_df is not None:
-        merged = _merge_pre(pre_df.drop("batch_id", "window_bucket"), cfg)
-        if cfg.late_tolerance_s is not None:
-            starts = merged_conv_starts(spark, state_dir)
-        units, late_units = _units_from_pre(
-            merged, rows.filter(~invalid), cfg, persisted, conv_starts=starts
-        )
-        kept_units, evicted_keys, winners = capacity_and_winners(units, cfg)
-        routed = rows.join(
-            F.broadcast(
-                winners.select("window_start_s", "conv_id").withColumn(
-                    "_won", F.lit(True)
-                )
-            ),
-            on=["window_start_s", "conv_id"],
-            how="left",
-        )
-    else:
-        late_units, evicted_keys = None, None
-        routed = rows.withColumn("_won", F.lit(None).cast("boolean"))
+    if cfg.late_tolerance_s is not None:
+        starts = merged_conv_starts(spark, state_dir)
+    # the closing buckets' units aggregate straight from their spilled rows
+    # (the batch plan's own unit aggregate over the same rows), so no
+    # per-batch partial has to be written and merged back
+    units, late_units = _units_from_pre(
+        _unit_pre_aggregate(valid, cfg), valid, cfg, persisted, conv_starts=starts
+    )
+    kept_units, evicted_keys, winners = capacity_and_winners(units, cfg)
+    routed = rows.join(
+        F.broadcast(
+            winners.select("window_start_s", "conv_id").withColumn(
+                "_won", F.lit(True)
+            )
+        ),
+        on=["window_start_s", "conv_id"],
+        how="left",
+    )
     routed = apply_routing(routed, invalid, late_units, evicted_keys)
 
     if (
@@ -848,6 +871,7 @@ def _roll(
     out_dir: str,
     batch_id: int,
     watermark_s: float,
+    spill_schema: T.StructType,
 ) -> None:
     """Close and export every bucket whose last window's end passed the
     event-time high watermark minus the required slack. Decisions come
@@ -889,7 +913,7 @@ def _roll(
     closed = sorted(
         b for b in seen if (b + 1) * span <= horizon and b not in done
     )
-    _route_buckets(spark, cfg, state_dir, out_dir, closed, batch_id)
+    _route_buckets(spark, cfg, state_dir, out_dir, closed, batch_id, spill_schema)
 
 
 def run_incremental_routed(
@@ -906,14 +930,14 @@ def run_incremental_routed(
 ) -> None:
     """Streaming fan-out with rollover export (processor.go:317-347).
 
-    Per micro-batch: unit partials + parsed/enriched/windowed rows spill
-    to batch_id-keyed paths sub-partitioned by EXPORT BUCKET (groups of
+    Per micro-batch: parsed/enriched/windowed rows spill to batch_id-keyed
+    paths sub-partitioned by EXPORT BUCKET (groups of
     `cfg.export_bucket_windows` consecutive windows — bounds file counts
     against sparse-window long tails); per-bucket row counts + the
     event-time high watermark go to the epoch manifest (one tiny record
     per batch). Buckets past the rollover horizon are routed reading only
-    their own partitions and their spill/pre is vacuumed after the export
-    mark — state volume is O(open buckets), per-roll IO is O(closing
+    their own spill partitions (units aggregate from those rows) and their
+    spill is vacuumed after the export mark — state volume is O(open buckets), per-roll IO is O(closing
     buckets), and the stream's total spill reads are ONE pass over the
     input however long it runs.
 
@@ -926,6 +950,7 @@ def run_incremental_routed(
     output, one pass later."""
     stream = stream_transcripts(spark, input_dir, max_files_per_trigger)
     rolling = cfg.late_tolerance_s is None or cfg.max_conv_span_s is not None
+    spill_schema = _spill_schema(spark, cfg)
     span = _bucket_span_s(cfg)
     saved = next(iter(_read_epoch(state_dir)), None)
     if saved is None and _epoch_summary(state_dir).get("bucket_span_s") is not None:
@@ -945,54 +970,47 @@ def run_incremental_routed(
         # parquet FOOTERS driver-side — the former separate
         # groupBy(bucket).collect() job re-read and re-aggregated the
         # whole batch purely for bookkeeping (guide §1: don't compute
-        # things twice). The unit partials still derive from the written
-        # spill (page-cache-warm re-read; an in-memory persist of the
-        # parsed batch was measured SLOWER than the parquet round-trip).
+        # things twice). Units are aggregated at roll time from the
+        # closing buckets' spill; only the conv-start index (lateness on)
+        # re-reads this batch's spill.
         from pyspark.sql import Observation
 
-        from trace_aware_reservoir_otel_spark.plans.pipeline import (
-            _unit_pre_aggregate,
-        )
-
         prepared = _prepared_batch(_scale_batch(batch_df), cfg)
+        spill_dir = f"{state_dir}/spill/batch_id={batch_id}"
         obs = Observation(f"spill_{batch_id}")
-        (
-            prepared.observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.max(F.unix_timestamp("ts")).alias("mx"),
-            )
-            .withColumn("window_bucket", _bucket_expr(cfg))
-            .write.mode("overwrite")
-            .partitionBy("window_bucket")
-            .parquet(f"{state_dir}/spill/batch_id={batch_id}")
+        spill = prepared.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.max(F.unix_timestamp("ts")).alias("mx"),
+        ).withColumn("window_bucket", _bucket_expr(cfg))
+        spill.write.mode("overwrite").partitionBy("window_bucket").parquet(
+            spill_dir
         )
         vals = obs.get
-        counts = _bucket_counts_from_footers(
-            f"{state_dir}/spill/batch_id={batch_id}"
-        )
-        mx = vals["mx"] if int(vals["n"] or 0) > 0 else None
-        if counts:
-            spill_df = spark.read.parquet(
-                f"{state_dir}/spill/batch_id={batch_id}"
+        n = int(vals["n"] or 0)
+        counts = _bucket_counts_from_footers(spill_dir)
+        if sum(counts.values()) != n:
+            # recording footer counts that miss rows would drop them from
+            # every later roll while conservation still balanced
+            raise RuntimeError(
+                f"micro-batch {batch_id}: the spill write observed {n} rows "
+                f"but the parquet footers under {spill_dir} count "
+                f"{sum(counts.values())} ({counts})"
             )
+        mx = vals["mx"] if n > 0 else None
+        if counts and cfg.late_tolerance_s is not None:
+            # the written schema is known: no inference job
+            spill_df = spark.read.schema(spill.schema).parquet(spill_dir)
             valid = spill_df.filter(
                 F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
             )
-            pre = _unit_pre_aggregate(valid, cfg)
-            pre.withColumn("window_bucket", _bucket_expr(cfg)).write.mode(
-                "overwrite"
-            ).partitionBy("window_bucket").parquet(
-                f"{state_dir}/pre/batch_id={batch_id}"
+            _write_convstart(valid, batch_id, state_dir)
+            root = f"{state_dir}/convstart"
+            n_partials = sum(
+                1 for d in os.listdir(root) if d.startswith("batch_id=")
             )
-            if cfg.late_tolerance_s is not None:
-                _write_convstart(valid, batch_id, state_dir)
-                root = f"{state_dir}/convstart"
-                n_partials = sum(
-                    1 for d in os.listdir(root) if d.startswith("batch_id=")
-                )
-                if n_partials > convstart_compact_threshold:
-                    compact_conv_starts(spark, state_dir)
+            if n_partials > convstart_compact_threshold:
+                compact_conv_starts(spark, state_dir)
         fsutil.upsert_jsonl_atomic(
             _epoch_path(state_dir),
             {
@@ -1005,7 +1023,10 @@ def run_incremental_routed(
             key_fields=("batch_id",),
         )
         if rolling:
-            _roll(spark, cfg, state_dir, out_dir, batch_id, watermark_s)
+            _roll(
+                spark, cfg, state_dir, out_dir, batch_id, watermark_s,
+                spill_schema,
+            )
         # fold closed-out epoch/metrics records into their summaries so the
         # per-batch manifest rewrite stays O(open records) over the
         # stream's life (exported buckets' records drain as they close)
@@ -1052,7 +1073,9 @@ def flush_incremental(
         int(k) for rec in epoch for k in rec.get("bucket_counts", {})
     } | disk
     remaining = sorted(b for b in seen if b not in done)
-    _route_buckets(spark, cfg, state_dir, out_dir, remaining, None)
+    _route_buckets(
+        spark, cfg, state_dir, out_dir, remaining, None, _spill_schema(spark, cfg)
+    )
 
     # stragglers: exported buckets' spill leaf dirs written by batches
     # AFTER the export (vacuum at export time removed everything earlier)
@@ -1137,7 +1160,7 @@ def streaming_metrics(spark: SparkSession, state_dir: str) -> DataFrame:
         ("buckets_exported", float(len(done))),
         *[(f"rows_{s}", float(n)) for s, n in sinks.items()],
     ]
-    return spark.createDataFrame(rows, "metric string, value double")
+    return local_frame(spark, rows, "metric string, value double")
 
 
 def read_exported(spark: SparkSession, state_dir: str, out_dir: str) -> DataFrame:
