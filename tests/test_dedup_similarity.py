@@ -318,6 +318,7 @@ def test_real_bmp_resize(spark):
 def test_connected_components_and_survivors(spark):
     from trace_aware_reservoir_otel_spark.operators.dedup import (
         connected_components,
+        connected_components_two_phase,
         dedup_survivors,
     )
 
@@ -329,8 +330,8 @@ def test_connected_components_and_survivors(spark):
     want = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
     comp = {r["id"]: r["comp"] for r in connected_components(edges).collect()}
     assert comp == want
-    # the distributed propagation path (forced past the driver union-find
-    # fast path) must produce identical labels
+    # the distributed fallback (large-star/small-star, forced past the
+    # driver union-find) must produce identical labels
     dist = {
         r["id"]: r["comp"]
         for r in connected_components(edges, driver_max_edges=0).collect()
@@ -346,41 +347,47 @@ def test_connected_components_and_survivors(spark):
 
     import pytest as _pytest
 
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 9)], "doc_a long, doc_b long"
+    )
     with _pytest.raises(RuntimeError, match="converge"):
-        # chain needs > 1 propagation round; driver_max_edges=0 forces the
-        # distributed path so the non-convergence contract stays testable
-        connected_components(edges, max_iter=1, driver_max_edges=0)
+        # a chain needs more than one star alternation; a half-contracted
+        # labeling must raise, never be returned
+        connected_components_two_phase(chain, max_iter=1)
 
 
 def test_connected_components_edge_plan_executes_once(spark):
     """The (potentially expensive) upstream edge plan must be materialized
-    once, not re-executed per propagation round: a chain graph forces
-    multiple rounds, and an accumulator tap on the edge frame counts how
-    many times its rows actually flow."""
-    import pandas as pd
-
+    once, not re-executed per union branch or per round of the
+    distributed fallback (forced with driver_max_edges=0): a chain graph
+    forces several star alternations, and an accumulator tap on the edge
+    frame counts how many times its rows actually flow."""
     from trace_aware_reservoir_otel_spark.operators.dedup import (
         connected_components,
     )
 
-    # chain 1-2-3-...-8: diameter 7 -> several propagation rounds
+    # chain 1-2-3-...-8: diameter 7 -> several star alternations
     raw = [(i, i + 1) for i in range(1, 8)]
     edges = spark.createDataFrame(raw, "doc_a long, doc_b long")
-    acc = spark.sparkContext.accumulator(0)
+    for kw in ({}, {"driver_max_edges": 0}):
+        acc = spark.sparkContext.accumulator(0)
 
-    def tap(it):
-        for pdf in it:
-            acc.add(len(pdf))
-            yield pdf
+        def tap(it, acc=acc):
+            for pdf in it:
+                acc.add(len(pdf))
+                yield pdf
 
-    tapped = edges.mapInPandas(tap, edges.schema)
-    comp = {r["id"]: r["comp"] for r in connected_components(tapped).collect()}
-    assert comp == {i: 1 for i in range(1, 9)}
-    # the DIRECTED edge list is checkpointed before symmetrization (round
-    # 6), so the caller's edge plan executes exactly ONCE — each edge row
-    # flows a single time; per-round or per-union-branch re-execution
-    # would multiply this
-    assert acc.value == len(raw), acc.value
+        tapped = edges.mapInPandas(tap, edges.schema)
+        comp = {
+            r["id"]: r["comp"]
+            for r in connected_components(tapped, **kw).collect()
+        }
+        assert comp == {i: 1 for i in range(1, 9)}, kw
+        # the DIRECTED edge list is checkpointed before symmetrization and
+        # the fallback reads that checkpoint, so the caller's edge plan
+        # executes exactly ONCE — each edge row flows a single time;
+        # per-round or per-union-branch re-execution would multiply this
+        assert acc.value == len(raw), (kw, acc.value)
 
 
 def test_ivf_index_probe_prunes_partitions(spark, tmp_path_factory):
@@ -507,29 +514,38 @@ def test_ivf_skewed_cell_no_forced_broadcast(spark, tmp_path_factory):
     assert len(hinted) == 10
 
 
-def test_two_phase_cc_matches_propagation_and_handles_deep_chains(spark):
+def test_two_phase_cc_matches_union_find_and_handles_deep_chains(spark):
     """Large-star/small-star alternation must produce the identical
-    min-of-component labeling as min-label propagation, and converge in
-    O(log n) alternations on a chain whose diameter would defeat the
-    propagation round budget."""
+    min-of-component labeling as the driver union-find — self-loop-only
+    vertices included, as singleton components — and converge in
+    O(log n) alternations on a long chain."""
     from trace_aware_reservoir_otel_spark.operators.dedup import (
         connected_components,
         connected_components_two_phase,
     )
 
+    # (5, 5): a vertex whose only edge is a self-loop; (2, 2): a self-loop
+    # on a vertex that also has real edges
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
+        [(1, 2), (5, 5), (2, 3), (2, 2), (3, 4), (10, 11), (11, 12), (10, 12),
+         (20, 21)],
         "doc_a long, doc_b long",
     )
-    got = {
-        r["id"]: r["comp"]
-        for r in connected_components_two_phase(edges).collect()
-    }
+    two_phase = connected_components_two_phase(edges).collect()
+    got = {r["id"]: r["comp"] for r in two_phase}
+    assert len(two_phase) == len(got)  # one row per vertex
     want = {r["id"]: r["comp"] for r in connected_components(edges).collect()}
     assert got == want
+    assert got[5] == 5
+    fallback = {
+        r["id"]: r["comp"]
+        for r in connected_components(edges, driver_max_edges=0).collect()
+    }
+    assert fallback == want
+    loops_only = spark.createDataFrame([(7, 7)], "doc_a long, doc_b long")
+    assert [tuple(r) for r in connected_components_two_phase(loops_only).collect()] == [(7, 7)]
 
-    # 200-node chain: diameter 199 >> propagation's default 25 rounds,
-    # but ~log2(200) star alternations
+    # 200-node chain: diameter 199, ~log2(200) star alternations
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 200)], "doc_a long, doc_b long"
     )

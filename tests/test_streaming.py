@@ -1,6 +1,6 @@
 """Streaming semantics: watermark window counts, stateful sessionization
-(trace-buffer analog), and incremental-reservoir equivalence with the
-batch pipeline."""
+(trace-buffer analog), and rollover-export equivalence with the batch
+pipeline."""
 
 import os
 
@@ -8,27 +8,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
-from trace_aware_reservoir_otel_spark.operators.reservoir import (
-    conversation_units,
-    topk_units,
-)
 from trace_aware_reservoir_otel_spark.operators.windows import with_tumbling_window
 from trace_aware_reservoir_otel_spark.streaming.pipeline import (
-    incremental_winners,
-    run_incremental,
     stream_transcripts,
     streaming_sessionize,
     streaming_window_counts,
 )
 from trace_aware_reservoir_otel_spark.synth import generate_transcripts
-
-# hash_impl='md5' because test_incremental_reservoir_equals_batch compares
-# against conversation_units (portable-md5 priorities); merged_units honors
-# cfg.hash_impl, so both sides must pin the same scheme
-CFG = PipelineConfig(
-    size_k=5, window_duration_s=60, seed=42, late_tolerance_s=None, hash_impl="md5"
-)
-
 
 def _write_stream_file(df, in_dir, name):
     """Materialize df as a single plain parquet FILE (the file-stream
@@ -113,37 +99,10 @@ def test_streaming_sessionize_emits_on_watermark(spark, tmp_path_factory):
     assert "conv-b" not in got
 
 
-def test_incremental_reservoir_equals_batch(spark, tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("stream_inc"))
-    df, in_dir = _write_batches(spark, base)
-    run_incremental(
-        spark, in_dir, CFG,
-        state_dir=os.path.join(base, "state"),
-        checkpoint_dir=os.path.join(base, "ck"),
-    )
-    inc = incremental_winners(spark, os.path.join(base, "state"), CFG)
-    batch_units = conversation_units(
-        with_tumbling_window(df, "ts", 60), seed=CFG.seed
-    )
-    batch = topk_units(batch_units, CFG.size_k)
-    w_inc = {(r["window_start_s"], r["conv_id"]) for r in inc.collect()}
-    w_batch = {(r["window_start_s"], r["conv_id"]) for r in batch.collect()}
-    assert w_inc == w_batch
-    # restart-safety: re-running the stream (same checkpoint) adds nothing
-    run_incremental(
-        spark, in_dir, CFG,
-        state_dir=os.path.join(base, "state"),
-        checkpoint_dir=os.path.join(base, "ck"),
-    )
-    inc2 = incremental_winners(spark, os.path.join(base, "state"), CFG)
-    assert {(r["window_start_s"], r["conv_id"]) for r in inc2.collect()} == w_inc
-
-
 # --- streaming routed fan-out (rollover export) ------------------------------
 
 from trace_aware_reservoir_otel_spark.plans.pipeline import run_pipeline  # noqa: E402
 from trace_aware_reservoir_otel_spark.streaming.pipeline import (  # noqa: E402
-    _write_pre,
     flush_incremental,
     incremental_conservation,
     run_incremental_routed,
@@ -223,34 +182,6 @@ def test_streaming_routed_late_tolerance_flush(spark, tmp_path_factory):
     got = _routed_histogram(spark.read.parquet(f"{out}/routed"))
     exp = _routed_histogram(run_pipeline(df, cfg).routed)
     assert got == exp
-
-
-def test_batch_replay_is_idempotent(spark, tmp_path_factory):
-    """foreachBatch is at-least-once: re-delivering a batch with the same
-    batch_id must not change merged state (the batch_id-keyed overwrite)."""
-    import glob
-
-    base = str(tmp_path_factory.mktemp("stream_replay"))
-    df, in_dir = _write_batches(spark, base)
-    state = os.path.join(base, "state")
-    run_incremental(
-        spark, in_dir, CFG, state_dir=state,
-        checkpoint_dir=os.path.join(base, "ck"),
-    )
-    before = {
-        (r["window_start_s"], r["conv_id"])
-        for r in incremental_winners(spark, state, CFG).collect()
-    }
-    n_before = spark.read.parquet(f"{state}/pre").count()
-    # replay batch 0 (same content, same id) — simulated mid-write failure retry
-    f0 = sorted(glob.glob(os.path.join(in_dir, "*.parquet")))[0]
-    _write_pre(spark.read.parquet(f0), 0, CFG, state)
-    assert spark.read.parquet(f"{state}/pre").count() == n_before
-    after = {
-        (r["window_start_s"], r["conv_id"])
-        for r in incremental_winners(spark, state, CFG).collect()
-    }
-    assert after == before
 
 
 def test_straggler_rows_route_to_late_arrival_dlq(spark, tmp_path_factory):

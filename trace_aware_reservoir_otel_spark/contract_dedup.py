@@ -613,7 +613,8 @@ def oracle_ann_ivf_topk() -> str:
 
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the MinHash-LSH
-    candidate pairs (min-label propagation, operators/dedup.py). Pairs are
+    candidate pairs (operators/dedup.connected_components: a driver
+    union-find, large-star/small-star above its edge bound). Pairs are
     not clusters — A~B, B~C must collapse to one group before survivor
     selection."""
     from trace_aware_reservoir_otel_spark.operators.dedup import (
@@ -630,7 +631,8 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _walk_cte() -> str:
     """Recursive reachability over the LSH pair set; min(dst) per id is the
-    component label — the oracle for the iterative Spark propagation."""
+    component label — the oracle for both Spark component algorithms (the
+    driver union-find and the large-star/small-star alternation)."""
     return (
         "pairs as (\n"
         "      select * from (" + oracle_lsh_pairs() + ") t\n"
@@ -660,8 +662,9 @@ def oracle_dup_clusters() -> str:
 def q_dup_clusters_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same clusters via the large-star/small-star alternation
     (operators/dedup.connected_components_two_phase) — the O(log n)-round
-    path for adversarial component diameters, checked against the same
-    recursive-CTE oracle as the propagation variant."""
+    algorithm `connected_components` falls back to above its driver edge
+    bound, forced here at any size and checked against the same
+    recursive-CTE oracle."""
     from trace_aware_reservoir_otel_spark.operators.dedup import (
         connected_components_two_phase,
     )

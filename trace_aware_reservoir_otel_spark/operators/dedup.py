@@ -462,15 +462,17 @@ def simhash_near_pairs(
 def _cc_driver_union_find(sym: DataFrame) -> DataFrame:
     """Exact min-label components via a driver-side union-find over an
     already-materialized (a, b) symmetric edge frame. Only called when the
-    edge count is under _CC_DRIVER_MAX_EDGES — the edge list is
+    edge count is under the driver edge bound — the edge list is
     O(duplicate pairs), already broadcast-sized downstream, so the collect
-    is bounded by construction. Replaces O(rounds) Spark jobs (each a
-    join + groupBy + count action) with one collect — the per-round job
-    overhead dominated every small-pair CC consumer (measured: SemDeDup's
-    ~20-pair component step cost seconds of pure round overhead).
+    is bounded by construction. One collect replaces the O(log n) rounds
+    of Spark jobs the distributed fallback
+    (`connected_components_two_phase`) runs — per-round job overhead
+    dominated every small-pair CC consumer (measured: SemDeDup's ~20-pair
+    component step cost seconds of pure round overhead).
 
-    Labels are identical to the propagation fixpoint: component id =
-    min member id (unique fixpoint, engine-independent)."""
+    Component id = min member id, the same labels as the fallback
+    (unique, engine-independent); a self-loop-only vertex is its own
+    component."""
     rows = sym.collect()
     parent: dict = {}
 
@@ -512,7 +514,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 25,
     driver_max_edges: int = _CC_DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """(id, component) for every vertex of the undirected near-duplicate
@@ -520,73 +521,24 @@ def connected_components(
     between pairwise near-dup detection and an actual deduplicated corpus
     (pairs are not clusters: A~B, B~C must collapse to one survivor).
 
-    Algorithm: min-label propagation — each round every vertex takes the
-    minimum label among itself and its neighbors, iterated to fixpoint.
-    Spark-first shape: the per-round work is ONE equi-join of the edge
-    list against the label frame plus a groupBy-min (both id-level
-    relations, never documents), so each round is a bounded unit-level
-    shuffle. Rounds = O(component diameter); near-dup clusters are
-    shallow (pairs / stars / small cliques), so convergence is typically
-    3-5 rounds. For adversarial diameter (long chains) use
-    `connected_components_two_phase` — the large-star/small-star
-    alternation (Kiveris et al.), O(log n) rounds, identical labels.
-    Lineage is truncated every round (localCheckpoint) so
-    the plan stays constant-size instead of growing by two joins per
-    round; early-exit when a round changes nothing. Deterministic: the
-    min-label fixpoint is unique.
-
-    Raises RuntimeError if max_iter rounds do not reach the fixpoint
-    (returning a half-converged labeling would silently under-merge)."""
+    Near-dup edge sets are O(duplicates): when the symmetric edge count is
+    at most `driver_max_edges` (the overwhelmingly common case; the count
+    is free on the checkpointed edges), a driver union-find labels them
+    with one bounded collect. Above it, the large-star/small-star
+    alternation (`connected_components_two_phase`, O(log n) rounds) runs
+    on the same checkpointed edges. Both give identical labels."""
     # materialize the DIRECTED edge list once, BEFORE symmetrizing: the
-    # union's two branches would otherwise each execute the caller's
-    # (typically expensive — LSH candidate generation, within-cell cosine)
-    # edge plan — measured 2x the pair cost on SemDeDup. The symmetrized
-    # frame is then derived from the checkpointed RDD and checkpointed
-    # itself so each propagation round still joins a materialized `sym`.
+    # union's two branches (and the fallback) would otherwise each execute
+    # the caller's (typically expensive — LSH candidate generation,
+    # within-cell cosine) edge plan — measured 2x the pair cost on SemDeDup
     e = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).localCheckpoint()
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym = sym.localCheckpoint()
-    # near-dup edge sets are O(duplicates) — when the materialized count is
-    # small (the overwhelmingly common case; the count is free on the
-    # checkpointed RDD), a driver union-find replaces O(rounds) join jobs
-    # with one bounded collect. Above the threshold the distributed
-    # propagation below runs unchanged.
     if sym.count() <= driver_max_edges:
         return _cc_driver_union_find(sym)
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(
-                labels.select(F.col("id").alias("b"), F.col("comp").alias("nc")),
-                on="b",
-            )
-            .groupBy("a")
-            .agg(F.min("nc").alias("nbmin"))
-            .withColumnRenamed("a", "id")
-        )
-        merged = labels.join(nbr_min, on="id", how="left").select(
-            "id",
-            "comp",
-            F.least(F.col("comp"), F.coalesce(F.col("nbmin"), F.col("comp"))).alias(
-                "new_comp"
-            ),
-        )
-        merged = merged.localCheckpoint()
-        changed = merged.filter(F.col("comp") != F.col("new_comp")).count()
-        labels = merged.select("id", F.col("new_comp").alias("comp"))
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds; "
-        "raise max_iter (component diameter exceeds it)"
-    )
+    return connected_components_two_phase(e, "a", "b")
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -630,42 +582,48 @@ def connected_components_two_phase(
     max_iter: int = 50,
 ) -> DataFrame:
     """(id, component) via alternating large-star/small-star (Kiveris et
-    al.) — the O(log n)-round accelerator for ADVERSARIAL component
-    diameters, where min-label propagation (`connected_components`) needs
-    O(diameter) rounds. A 10^6-node chain converges in ~20 alternations
-    instead of 10^6 propagations; each alternation is two id-level
-    groupBy-min + join rounds, the same shuffle unit as one propagation.
+    al., "Connected Components in MapReduce and Beyond") — the distributed
+    algorithm behind `connected_components` when the edge list exceeds
+    the driver bound. O(log n) alternations whatever the component
+    diameter: a 10^6-node chain converges in ~20; each alternation is two
+    id-level groupBy-min + join rounds.
 
     Fixpoint: both operations leave the edge set unchanged exactly when it
     is a union of min-rooted stars; labels are then star edges plus their
-    centers. The check is exact (two one-row exceptAll probes), not a
-    hash. Lineage truncated per alternation (localCheckpoint). Same
-    min-of-component labels as `connected_components` — interchangeable,
-    and asserted equal in tests. Raises RuntimeError on non-convergence
-    rather than returning a half-contracted labeling."""
-    e = (
+    centers, plus vertices whose only edges are self-loops (their own
+    singleton components). The check is exact (two one-row exceptAll
+    probes), not a hash. Lineage truncated per alternation
+    (localCheckpoint). Same min-of-component labels as the driver
+    union-find, asserted equal in tests. Raises RuntimeError on
+    non-convergence rather than returning a half-contracted labeling."""
+    d = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()
     )
-    if not e.head(1):
-        return e.select(F.col("u").alias("id"), F.col("v").alias("comp")).limit(0)
-    for _ in range(max_iter):
-        nxt = _small_star(_large_star(e)).localCheckpoint()
-        unchanged = (
-            not nxt.exceptAll(e).head(1) and not e.exceptAll(nxt).head(1)
-        )
-        e = nxt
-        if unchanged:
-            centers = e.select(F.col("v").alias("id")).distinct()
-            return e.select(F.col("u").alias("id"), F.col("v").alias("comp")).unionByName(
-                centers.select("id", F.col("id").alias("comp"))
+    loops = d.filter(F.col("u") == F.col("v")).select(F.col("u").alias("id"))
+    e = d.filter(F.col("u") != F.col("v"))
+    labels = e.select(F.col("u").alias("id"), F.col("v").alias("comp")).limit(0)
+    if e.head(1):
+        for _ in range(max_iter):
+            nxt = _small_star(_large_star(e)).localCheckpoint()
+            unchanged = (
+                not nxt.exceptAll(e).head(1) and not e.exceptAll(nxt).head(1)
             )
-    raise RuntimeError(
-        f"connected_components_two_phase did not converge in {max_iter} "
-        "alternations; raise max_iter"
-    )
+            e = nxt
+            if unchanged:
+                centers = e.select(F.col("v").alias("id")).distinct()
+                labels = e.select(
+                    F.col("u").alias("id"), F.col("v").alias("comp")
+                ).unionByName(centers.select("id", F.col("id").alias("comp")))
+                break
+        else:
+            raise RuntimeError(
+                f"connected_components_two_phase did not converge in "
+                f"{max_iter} alternations; raise max_iter"
+            )
+    singletons = loops.join(labels.select("id"), on="id", how="left_anti")
+    return labels.unionByName(singletons.select("id", F.col("id").alias("comp")))
 
 
 def dedup_survivors(

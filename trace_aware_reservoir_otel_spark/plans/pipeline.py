@@ -111,8 +111,8 @@ def _with_unit_priorities(units: DataFrame, cfg: PipelineConfig, weighted: bool)
 def _unit_pre_aggregate(valid: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """The associative per-(window, conv) partial aggregate — the ONLY
     reduction of the fact table the engine ever makes. Every consumer
-    (batch plan, checkpoint state, streaming micro-batches) computes this
-    same frame; partials over any disjoint cover of the input merge back
+    (batch plan, checkpoint state, streaming rolls) computes this same
+    frame; partials over any disjoint cover of the input merge back
     with `_merge_pre` (sum/min/max/min-struct are associative and
     replay-order-free)."""
     weighted = cfg.weight_col is not None
@@ -134,7 +134,7 @@ def _unit_pre_aggregate(valid: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 def _merge_pre(pre: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Merge `_unit_pre_aggregate` partials from overlapping covers of the
-    input (streaming micro-batches, checkpoint slices) back into the exact
+    input (checkpoint slices) back into the exact
     unit frame an uninterrupted aggregation would produce."""
     weighted = cfg.weight_col is not None
     aggs = [

@@ -77,7 +77,7 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         .config("spark.executor.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         # v2 commit: task outputs move at task commit instead of one
-        # serial job-commit rename pass — the streaming spill/pre/routed
+        # serial job-commit rename pass — the streaming spill/routed
         # writes commit many small bucket-partition files per micro-batch
         # and the serial pass was measurable. Durability is unchanged for
         # this engine: batch sinks land behind the snapshot-pointer commit

@@ -2,7 +2,7 @@
 
 The reference is a push-based streaming processor with processing-time
 windows and a session-buffered trace map (window.go, trace_buffer.go).
-Spark-first, the same semantics split into three composable pieces:
+Spark-first, the same semantics split into four composable pieces:
 
  - `stream_transcripts`      : file-stream source (stand-in for Kafka /
    Iceberg streaming read; maxFilesPerTrigger bounds batch size the way
@@ -15,15 +15,6 @@ Spark-first, the same semantics split into three composable pieces:
    with an event-time inactivity timeout — the exact analog of the
    reference's trace buffer (accumulate spans per trace, emit on
    inactivity gap, trace_buffer.go:144-185), Arrow-batched, bounded state.
- - `run_incremental`         : foreachBatch incremental reservoir — each
-   micro-batch writes its per-(window,conv) partial aggregates to a
-   batch_id-keyed state path (overwrite: foreachBatch is at-least-once, so
-   a replayed batch rewrites its own partition instead of double-counting),
-   and the winner set is re-derived from merged state at any point.
-   Because priorities are pure functions of (seed, window, conv), the
-   incremental winner set after N batches equals the batch pipeline's
-   winner set on the union of inputs — checkpoint/restart-safe by
-   construction (fixes §2.11.3 double-count).
  - `run_incremental_routed`  : the full streaming fan-out — the analog of
    the reference's hot path, rollover export (processor.go:317-347). Rows
    buffer per window (spill, batch_id-keyed AND window-sub-partitioned);
@@ -165,84 +156,6 @@ def streaming_sessionize(
             outputMode="update",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-    )
-
-
-def _write_pre(batch_df: DataFrame, batch_id: int, cfg: PipelineConfig, state_dir: str) -> None:
-    """One micro-batch's unit partials, written idempotently: the path is
-    keyed by batch_id and overwritten, so an at-least-once foreachBatch
-    replay rewrites identical content instead of double-appending. Within
-    the batch directory, partials are sub-partitioned by export bucket, so
-    rollover reads exactly the closing buckets' leaf directories and
-    vacuum deletes an exported bucket's state with a directory remove —
-    per-roll IO is O(closing buckets), not O(total state history)."""
-    from trace_aware_reservoir_otel_spark.operators.windows import with_tumbling_window
-    from trace_aware_reservoir_otel_spark.plans.pipeline import _unit_pre_aggregate
-
-    valid = batch_df.filter(
-        F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
-    )
-    pre = _unit_pre_aggregate(
-        with_tumbling_window(valid, "ts", cfg.window_duration_s), cfg
-    )
-    pre.withColumn("window_bucket", _bucket_expr(cfg)).write.mode(
-        "overwrite"
-    ).partitionBy("window_bucket").parquet(f"{state_dir}/pre/batch_id={batch_id}")
-
-
-def run_incremental(
-    spark: SparkSession,
-    input_dir: str,
-    cfg: PipelineConfig,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Incremental reservoir state accumulation via foreachBatch.
-
-    Each micro-batch overwrites its batch_id-keyed partial-aggregate
-    partition; the merged state (see `merged_units`) reproduces the batch
-    pipeline's sampling population exactly, at any prefix of the stream."""
-    stream = stream_transcripts(spark, input_dir, max_files_per_trigger)
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _write_pre(batch_df, batch_id, cfg, state_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def merged_units(spark: SparkSession, state_dir: str, cfg: PipelineConfig) -> DataFrame:
-    """Merge batch partials into the exact (window, conv) unit frame the
-    batch pipeline would compute (associative combiners + the same
-    cfg-driven priorities as plans/pipeline)."""
-    from trace_aware_reservoir_otel_spark.plans.pipeline import (
-        _merge_pre,
-        _with_unit_priorities,
-    )
-
-    pre = spark.read.parquet(f"{state_dir}/pre").drop("batch_id", "window_bucket")
-    merged = _merge_pre(pre, cfg).withColumnRenamed("n_all", "n_turns")
-    weighted = cfg.weight_col is not None
-    keep = ["window_start_s", "conv_id", "n_turns", "min_ts_s", "max_ts_s",
-            "min_turn", "ts_of_min_turn"] + (["_w"] if weighted else [])
-    return _with_unit_priorities(merged.select(*keep), cfg, weighted)
-
-
-def incremental_winners(
-    spark: SparkSession, state_dir: str, cfg: PipelineConfig
-) -> DataFrame:
-    from trace_aware_reservoir_otel_spark.operators.reservoir import topk_units
-
-    units = merged_units(spark, state_dir, cfg)
-    return topk_units(
-        units, cfg.size_k, "window_start_s", "conv_id",
-        cfg.salt_buckets, cfg.method, cfg.priority,
     )
 
 
@@ -473,9 +386,9 @@ def _bucket_counts_from_footers(batch_dir: str) -> "dict[str, int]":
     return counts
 
 
-def _state_leaf_dirs(state_dir: str, sub: str, buckets: "list") -> "list[str]":
-    """Leaf directories (batch_id=N/window_bucket=B) holding the given
-    buckets' state — discovered by a bucket-keyed directory listing, so it
+def _state_leaf_dirs(state_dir: str, buckets: "list") -> "list[str]":
+    """Spill leaf directories (batch_id=N/window_bucket=B) holding the
+    given buckets' rows — discovered by a bucket-keyed directory listing, so it
     works regardless of whether the writing batches' epoch records were
     already folded into the summary. O(open batch dirs): vacuum removes
     emptied batch dirs, so the listing never grows with stream age."""
@@ -486,7 +399,7 @@ def _state_leaf_dirs(state_dir: str, sub: str, buckets: "list") -> "list[str]":
         paths.extend(
             p
             for p in _glob.glob(
-                f"{state_dir}/{sub}/batch_id=*/window_bucket={int(b)}"
+                f"{state_dir}/spill/batch_id=*/window_bucket={int(b)}"
             )
             if os.path.isdir(p)
         )
@@ -510,21 +423,20 @@ def _spill_schema(spark: SparkSession, cfg: PipelineConfig) -> T.StructType:
 def _read_state_buckets(
     spark: SparkSession,
     state_dir: str,
-    sub: str,
     buckets: "list",
     schema: T.StructType,
 ) -> "DataFrame | None":
-    """Read ONLY the given export buckets' state partitions, as an
+    """Read ONLY the given export buckets' spill partitions, as an
     explicit list of leaf directories — reading a non-closing bucket's
     data is structurally impossible, not merely optimizer-pruned. basePath
     keeps the partition columns. Returns None when nothing exists (e.g.
     already vacuumed)."""
-    paths = _state_leaf_dirs(state_dir, sub, buckets)
+    paths = _state_leaf_dirs(state_dir, buckets)
     if not paths:
         return None
     return (
         spark.read.schema(schema)
-        .option("basePath", f"{state_dir}/{sub}")
+        .option("basePath", f"{state_dir}/spill")
         .parquet(*paths)
     )
 
@@ -659,52 +571,48 @@ def _prepared_batch(batch_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 def _vacuum_exported(state_dir: str, buckets: "list") -> None:
-    """Delete exported buckets' spill leaf directories (and the `pre`
-    unit-partial leafs that state written by earlier versions holds, which
-    rolls no longer read). Runs AFTER the
+    """Delete exported buckets' spill leaf directories. Runs AFTER the
     mark, so a crash in between leaves inert extra state (filtered out by
     the done-set on every later roll), never missing state. Spill written
     by LATER batches (stragglers) lands in new leaf dirs and survives
     until flush routes it to dlq."""
     import shutil
 
+    root = os.path.join(state_dir, "spill")
+    if not os.path.isdir(root):
+        return
     keys = {str(int(b)) for b in buckets}
-    for sub in ("spill", "pre"):
-        root = os.path.join(state_dir, sub)
-        if not os.path.isdir(root):
+    for bdir in os.listdir(root):
+        if not bdir.startswith("batch_id="):
             continue
-        for bdir in os.listdir(root):
-            if not bdir.startswith("batch_id="):
-                continue
-            for key in keys:
-                leaf = os.path.join(root, bdir, f"window_bucket={key}")
-                if os.path.isdir(leaf):
-                    shutil.rmtree(leaf)
+        for key in keys:
+            leaf = os.path.join(root, bdir, f"window_bucket={key}")
+            if os.path.isdir(leaf):
+                shutil.rmtree(leaf)
     _prune_empty_batch_dirs(state_dir)
 
 
 def _prune_empty_batch_dirs(state_dir: str) -> None:
-    """Remove batch_id= dirs whose every leaf was vacuumed, so the
+    """Remove spill batch_id= dirs whose every leaf was vacuumed, so the
     bucket-keyed directory listings (_state_leaf_dirs, flush's disk scan)
     stay O(open batches) over the stream's life."""
-    for sub in ("spill", "pre"):
-        root = os.path.join(state_dir, sub)
-        if not os.path.isdir(root):
-            continue
-        for bdir in os.listdir(root):
-            if not bdir.startswith("batch_id="):
-                continue
-            p = os.path.join(root, bdir)
-            if not any(e.startswith("window_bucket=") for e in os.listdir(p)):
-                import shutil
+    import shutil
 
-                shutil.rmtree(p, ignore_errors=True)
+    root = os.path.join(state_dir, "spill")
+    if not os.path.isdir(root):
+        return
+    for bdir in os.listdir(root):
+        if not bdir.startswith("batch_id="):
+            continue
+        p = os.path.join(root, bdir)
+        if not any(e.startswith("window_bucket=") for e in os.listdir(p)):
+            shutil.rmtree(p, ignore_errors=True)
 
 
 def _revacuum_done(state_dir: str, done: "dict") -> None:
-    """Re-vacuum leaf dirs of already-exported buckets written by batches
-    at-or-before the bucket's export mark. A replayed micro-batch (roll
-    ran, engine commit did not) rewrites its spill/pre leafs for a bucket
+    """Re-vacuum spill leaf dirs of already-exported buckets written by
+    batches at-or-before the bucket's export mark. A replayed micro-batch
+    (roll ran, engine commit did not) rewrites its spill leafs for a bucket
     that was already exported+vacuumed; the straggler scan only looks at
     batch_id > mark, so without this sweep those dirs leak forever —
     correct counts, but state volume would quietly stop being O(open
@@ -712,33 +620,30 @@ def _revacuum_done(state_dir: str, done: "dict") -> None:
     import shutil
 
     marked = {str(int(b)): bid for b, bid in done.items() if bid is not None}
-    if not marked:
+    root = os.path.join(state_dir, "spill")
+    if not marked or not os.path.isdir(root):
         return
-    # Cost discipline (round-4 ADVICE): this runs on every roll, so it must
-    # be O(open on-disk state), never O(all marks ever). Iterate the leafs
-    # that actually exist in each (bounded, pruned) open batch dir and look
+    # Cost discipline: this runs on every roll, so it must be O(open
+    # on-disk state), never O(all marks ever). Iterate the leafs that
+    # actually exist in each (bounded, pruned) open batch dir and look
     # each up in the mark map — not the mark map against every batch dir.
     # Common case (no replay happened): every open batch dir is newer than
     # every mark, and the max-mark guard skips the listdir walk entirely.
     max_mark = max(marked.values())
     pruned = False
-    for sub in ("spill", "pre"):
-        root = os.path.join(state_dir, sub)
-        if not os.path.isdir(root):
+    for bdir in os.listdir(root):
+        if not bdir.startswith("batch_id="):
             continue
-        for bdir in os.listdir(root):
-            if not bdir.startswith("batch_id="):
+        k = int(bdir.split("=", 1)[1])
+        if k > max_mark:
+            continue  # written after every mark: cannot be a replay leak
+        for entry in os.listdir(os.path.join(root, bdir)):
+            if not entry.startswith("window_bucket="):
                 continue
-            k = int(bdir.split("=", 1)[1])
-            if k > max_mark:
-                continue  # written after every mark: cannot be a replay leak
-            for entry in os.listdir(os.path.join(root, bdir)):
-                if not entry.startswith("window_bucket="):
-                    continue
-                bid = marked.get(entry.split("=", 1)[1])
-                if bid is not None and k <= bid:
-                    shutil.rmtree(os.path.join(root, bdir, entry))
-                    pruned = True
+            bid = marked.get(entry.split("=", 1)[1])
+            if bid is not None and k <= bid:
+                shutil.rmtree(os.path.join(root, bdir, entry))
+                pruned = True
     if pruned:
         _prune_empty_batch_dirs(state_dir)
 
@@ -777,7 +682,7 @@ def _route_buckets(
 
     if not buckets:
         return
-    spill = _read_state_buckets(spark, state_dir, "spill", buckets, spill_schema)
+    spill = _read_state_buckets(spark, state_dir, buckets, spill_schema)
     if spill is None:
         _mark_exported(state_dir, buckets, batch_id)
         return
