@@ -91,6 +91,80 @@ def test_write_sinks_lands_through_snapshot_commit(spark, tmp_path):
     assert metrics.count() == counts["metrics"]
 
 
+
+def _leaf_dirs(root):
+    """Relative paths of the directories that hold parquet data files."""
+    return {
+        os.path.relpath(d, root)
+        for d, _sub, files in os.walk(root)
+        if any(f.endswith(".parquet") for f in files)
+    }
+
+
+def test_routed_table_is_bucketed_by_sink_and_export_bucket(spark, tmp_path):
+    """Batch and checkpoint write the routed table partitioned by (sink,
+    window_bucket): a bucket spans export_bucket_windows windows, so the
+    directory count follows buckets, not windows, and one read_committed
+    reader sees the same partition columns in both modes."""
+    import math
+
+    from trace_aware_reservoir_otel_spark import fsutil
+    from trace_aware_reservoir_otel_spark.config import PipelineConfig
+    from trace_aware_reservoir_otel_spark.plans.pipeline import (
+        run_pipeline,
+        write_sinks,
+    )
+    from trace_aware_reservoir_otel_spark.plans.state import run_with_checkpoint
+    from trace_aware_reservoir_otel_spark.synth import generate_transcripts
+
+    df = generate_transcripts(spark, n_convs=120, seed=5).cache()
+    cfg = PipelineConfig(
+        size_k=5, window_duration_s=60, export_bucket_windows=8, seed=42
+    )
+    w = int(cfg.window_duration_s)
+    bounds = df.agg(
+        F.min(F.unix_timestamp("ts")).alias("lo"),
+        F.max(F.unix_timestamp("ts")).alias("hi"),
+    ).first()
+    n_windows = bounds["hi"] // w - bounds["lo"] // w + 1
+    assert n_windows > 3 * cfg.export_bucket_windows  # spans several buckets
+    max_buckets = math.ceil(n_windows / cfg.export_bucket_windows) + 1
+
+    batch_out = str(tmp_path / "batch")
+    write_sinks(run_pipeline(df, cfg), batch_out)
+    ckpt_out = str(tmp_path / "ckpt")
+    run_with_checkpoint(spark, df, cfg, str(tmp_path / "st"), ckpt_out, n_units=3)
+
+    readers = {}
+    for out in (batch_out, ckpt_out):
+        table = f"{out}/routed"
+        snap = fsutil.read_jsonl(f"{table}/_CURRENT")[-1]["dir"]
+        leaves = _leaf_dirs(snap)
+        assert leaves
+        by_sink = {}
+        for leaf in leaves:
+            parts = leaf.split(os.sep)
+            assert len(parts) == 2, leaf
+            assert parts[0].startswith("sink="), leaf
+            assert parts[1].startswith("window_bucket="), leaf
+            by_sink.setdefault(parts[0], set()).add(int(parts[1].split("=")[1]))
+        for sink, buckets in by_sink.items():
+            assert len(buckets - {-1}) <= max_buckets, (sink, sorted(buckets))
+        readers[out] = read_committed(spark, table)
+        assert "window_part" not in readers[out].columns
+        assert readers[out].count() == df.count()
+
+    batch, ckpt = readers[batch_out], readers[ckpt_out]
+    assert {"sink", "window_bucket"} <= set(batch.columns)
+    assert set(batch.columns) == set(ckpt.columns)
+    # the bucket column is the floor of the window over the bucket span
+    span = w * cfg.export_bucket_windows
+    for r in batch.select("window_start_s", "window_bucket").distinct().collect():
+        want = -1 if r["window_start_s"] is None else r["window_start_s"] // span
+        assert r["window_bucket"] == want
+    df.unpersist()
+
+
 import pytest as _pytest
 
 

@@ -34,3 +34,10 @@ def test_config_validation():
 def test_config_from_dict_durations():
     cfg = PipelineConfig.from_dict({"size_k": 5, "window_duration": "2m"})
     assert cfg.window_duration_s == 120.0
+
+
+def test_config_from_dict_rejects_unknown_keys():
+    # checkpoint slicing is run_with_checkpoint's n_units argument; a
+    # config that still names the old field must fail, not be ignored
+    with pytest.raises(TypeError):
+        PipelineConfig.from_dict({"checkpoint_units": 3})

@@ -1,20 +1,19 @@
-"""Streaming semantics: watermark window counts, stateful sessionization
-(trace-buffer analog), and rollover-export equivalence with the batch
+"""Streaming semantics: rollover-export equivalence with the batch
 pipeline."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
-from trace_aware_reservoir_otel_spark.operators.windows import with_tumbling_window
+from trace_aware_reservoir_otel_spark.plans.pipeline import run_pipeline
 from trace_aware_reservoir_otel_spark.streaming.pipeline import (
-    stream_transcripts,
-    streaming_sessionize,
-    streaming_window_counts,
+    flush_incremental,
+    incremental_conservation,
+    run_incremental_routed,
 )
 from trace_aware_reservoir_otel_spark.synth import generate_transcripts
+
 
 def _write_stream_file(df, in_dir, name):
     """Materialize df as a single plain parquet FILE (the file-stream
@@ -28,85 +27,6 @@ def _write_stream_file(df, in_dir, name):
     os.makedirs(in_dir, exist_ok=True)
     shutil.move(part, os.path.join(in_dir, f"{name}.parquet"))
     shutil.rmtree(tmp)
-
-
-def _write_batches(spark, base, n_convs=120):
-    df = generate_transcripts(spark, n_convs=n_convs, seed=42).filter(
-        F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
-    )
-    a = df.filter(F.xxhash64("conv_id") % 2 == 0)
-    b = df.filter(F.xxhash64("conv_id") % 2 != 0)
-    in_dir = os.path.join(base, "in")
-    _write_stream_file(a, in_dir, "000")
-    _write_stream_file(b, in_dir, "001")
-    return df, in_dir
-
-
-def test_streaming_window_counts(spark, tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("stream_wc"))
-    df, in_dir = _write_batches(spark, base)
-    stream = stream_transcripts(spark, in_dir, max_files_per_trigger=1)
-    q = (
-        streaming_window_counts(stream, 60.0, watermark="0 seconds")
-        .writeStream.format("memory")
-        .queryName("wc")
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r["window_start_s"]: r["rows"]
-        for r in spark.sql("select * from wc").collect()
-    }
-    exp = {
-        r["window_start_s"]: r["count"]
-        for r in with_tumbling_window(df, "ts", 60)
-        .groupBy("window_start_s")
-        .count()
-        .collect()
-    }
-    assert got == exp
-
-
-def test_streaming_sessionize_emits_on_watermark(spark, tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("stream_sess"))
-    rows_a = [("conv-a", i, "user", "t", None, f"2024-01-01 00:00:{10 + i:02d}") for i in range(3)]
-    rows_b = [("conv-b", 0, "user", "t", None, "2024-01-01 03:00:00")]
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, s string"
-    fa = spark.createDataFrame(rows_a, schema).withColumn("ts", F.col("s").cast("timestamp")).drop("s")
-    fb = spark.createDataFrame(rows_b, schema).withColumn("ts", F.col("s").cast("timestamp")).drop("s")
-    in_dir = os.path.join(base, "in")
-    _write_stream_file(fa, in_dir, "000")
-    _write_stream_file(fb, in_dir, "001")
-
-    stream = stream_transcripts(spark, in_dir, max_files_per_trigger=1)
-    q = (
-        streaming_sessionize(stream, gap_s=30.0)
-        .writeStream.format("memory")
-        .queryName("sess")
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r["conv_id"]: r["n_turns"] for r in spark.sql("select * from sess").collect()}
-    # conv-a completed (file2's 03:00 watermark passed its 30s gap);
-    # conv-b still open at stream end
-    assert got.get("conv-a") == 3
-    assert "conv-b" not in got
-
-
-# --- streaming routed fan-out (rollover export) ------------------------------
-
-from trace_aware_reservoir_otel_spark.plans.pipeline import run_pipeline  # noqa: E402
-from trace_aware_reservoir_otel_spark.streaming.pipeline import (  # noqa: E402
-    flush_incremental,
-    incremental_conservation,
-    run_incremental_routed,
-)
 
 
 def _routed_histogram(df):

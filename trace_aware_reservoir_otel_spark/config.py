@@ -72,13 +72,15 @@ class PipelineConfig:
                         to dlq(reason='span_violation') explicitly. None
                         (default) = no bound: with lateness on, export
                         defers to flush.
-    export_bucket_windows : streaming export granularity — consecutive
-                        windows are grouped into buckets of this many for
-                        state partitioning, rollover export, and output
-                        layout. Bounds file counts when windows are
-                        numerous and tiny (a mega-conversation's long tail
-                        of sparse windows would otherwise mean one
-                        directory per window per micro-batch); the cost is
+    export_bucket_windows : routed-table bucket — consecutive windows are
+                        grouped into buckets of this many. In every mode
+                        (batch, checkpoint, streaming) the routed table is
+                        partitioned by bucket (window_bucket; -1 holds
+                        null-window rows); streaming also uses it for
+                        state partitioning and rollover export. Bounds
+                        file counts when windows are numerous and tiny
+                        (one directory per window, and in streaming per
+                        micro-batch, otherwise); the streaming cost is
                         export latency of up to bucket_span (windows
                         export when their whole bucket's horizon passes).
     seed              : sampling seed; priorities are pure functions of
@@ -89,8 +91,6 @@ class PipelineConfig:
                         sampling weight (A-Res); None = uniform.
     method            : 'sql' (pure Column/window-function top-k, JVM-side)
                         or 'pandas' (applyInPandas partial reservoirs).
-    checkpoint_units  : number of resumable work units for batch
-                        checkpointing (SURVEY §7.6); 0 disables.
     """
 
     size_k: int = 64
@@ -106,7 +106,6 @@ class PipelineConfig:
     method: str = "sql"
     priority: str = "ares"  # 'ares' (weighted) | 'int' (exact, oracle-portable)
     hash_impl: str = "xxh"  # 'xxh' (fast JVM path) | 'md5' (DuckDB-portable)
-    checkpoint_units: int = 0
     run_id: str = "run-0"
     extra: dict = field(default_factory=dict)
 

@@ -28,10 +28,11 @@ holds with a conditional PUT of the pointer object. Version data dirs are
 written once and never mutated, so they need no atomicity of their own.
 
 Used by the batch sink writers (plans/pipeline.write_sinks,
-plans/state.finalize). The streaming rollover keeps per-window dynamic
-partition overwrite instead: its commit unit is one window partition
-(written exactly once per export mark), where a whole-table snapshot swap
-would re-copy every previously exported window each roll.
+plans/state.finalize), which both write the routed table partitioned by
+(sink, window_bucket). The streaming rollover keeps per-bucket dynamic
+partition overwrite instead: its commit unit is one export-bucket
+partition (written exactly once per export mark), where a whole-table
+snapshot swap would re-copy every previously exported bucket each roll.
 """
 
 from __future__ import annotations

@@ -32,7 +32,9 @@ Scale architecture — THE FACT TABLE IS NEVER SHUFFLED:
    expressions: shuffle-free, whole-stage-codegen, skew-immune.
 
 Routing produces a SINGLE frame so all three sinks materialize in ONE
-write partitioned by (sink, window) instead of three scans.
+write partitioned by (sink, window_bucket) instead of three scans; a
+bucket is `export_bucket_windows` consecutive windows (`_bucket_expr`),
+the layout the checkpoint finalize writes too.
 
 Assumption to re-check at extreme scale: the late/boundary unit set is
 small enough to broadcast. NOTE it scales with the late-CONVERSATION
@@ -73,6 +75,7 @@ class PipelineResult:
     dlq: DataFrame
     metrics: DataFrame
     winners: DataFrame  # conv-level (window, conv_id, priorities) for state
+    cfg: PipelineConfig  # the run's config: write_sinks derives the bucket from it
     persisted: "list[DataFrame] | None" = None  # unit frames cached by the plan
 
     def unpersist(self) -> None:
@@ -82,6 +85,28 @@ class PipelineResult:
         for df in self.persisted or []:
             df.unpersist()
         self.persisted = []
+
+
+def _bucket_span_s(cfg: PipelineConfig) -> int:
+    return int(cfg.window_duration_s * cfg.export_bucket_windows)
+
+
+def _bucket_expr(cfg: PipelineConfig):
+    """window_start_s -> export-bucket id column (-1 holds null-ts rows).
+
+    Buckets group `export_bucket_windows` consecutive windows: the routed
+    table's partition in every mode (batch, checkpoint, streaming), and
+    the streaming unit of state partitioning, rollover export and vacuum.
+    This bounds file counts when windows are numerous and tiny: one
+    directory per window and sink means 129 routed files for the 13.3k
+    rows of perfbench's batch input (10 with buckets), and a
+    mega-conversation's sparse multi-day tail would create one directory
+    per window per micro-batch."""
+    span = _bucket_span_s(cfg)
+    ws = F.col("window_start_s")
+    return F.when(ws.isNull(), F.lit(-1)).otherwise(
+        F.floor(ws / F.lit(span)).cast("long")
+    )
 
 
 def _with_unit_priorities(units: DataFrame, cfg: PipelineConfig, weighted: bool) -> DataFrame:
@@ -535,13 +560,29 @@ def run_pipeline(
         dlq=dlq,
         metrics=metrics,
         winners=winners,
+        cfg=cfg,
         persisted=persisted,
     )
 
 
+def commit_routed(routed: DataFrame, cfg: PipelineConfig, out_dir: str) -> int:
+    """Commit a routed frame as `{out_dir}/routed` (plans/commit.py),
+    partitioned by (sink, window_bucket): the one routed-table layout of
+    the batch and checkpoint paths. Returns the committed version."""
+    from trace_aware_reservoir_otel_spark.plans import commit
+
+    return commit.commit_write(
+        routed.withColumn("window_bucket", _bucket_expr(cfg)),
+        f"{out_dir}/routed",
+        partition_by=["sink", "window_bucket"],
+    )
+
+
 def write_sinks(result: PipelineResult, out_dir: str) -> "dict[str, int]":
-    """Single-pass fan-out: the routed frame is written ONCE partitioned by
-    (sink, window bucket) — Iceberg-shaped layout, one scan of the fact.
+    """Single-pass fan-out: the routed frame is written ONCE through
+    `commit_routed`, partitioned by (sink, window_bucket) with the bucket
+    of the run's config (`result.cfg`) — Iceberg-shaped layout, one scan
+    of the fact, the same layout plans/state.finalize writes.
 
     Per-sink counts come from the Observation API attached to the write
     itself (operators/metrics.py) — zero extra passes; the written output
@@ -557,13 +598,7 @@ def write_sinks(result: PipelineResult, out_dir: str) -> "dict[str, int]":
     from trace_aware_reservoir_otel_spark.plans import commit
 
     observed, obs = observed_routed(result.routed)
-    commit.commit_write(
-        observed.withColumn(
-            "window_part", F.coalesce(F.col("window_start_s"), F.lit(-1))
-        ),
-        f"{out_dir}/routed",
-        partition_by=["sink", "window_part"],
-    )
+    commit_routed(observed, result.cfg, out_dir)
     vals = obs.get
     mobs = Observation("taro_metrics_rows")
     commit.commit_write(

@@ -63,6 +63,7 @@ from trace_aware_reservoir_otel_spark.plans.pipeline import (
     _units_from_pre,
     apply_routing,
     capacity_and_winners,
+    commit_routed,
 )
 
 
@@ -240,13 +241,7 @@ def finalize(
     # snapshot-commit (plans/commit.py): the routed table becomes readable
     # only at the atomic pointer swap — a kill mid-write leaves readers on
     # the previous complete snapshot, never a half-overwritten partition
-    commit.commit_write(
-        observed.withColumn(
-            "window_part", F.coalesce(F.col("window_start_s"), F.lit(-1))
-        ),
-        f"{out_dir}/routed",
-        partition_by=["sink"],
-    )
+    commit_routed(observed, cfg, out_dir)
     vals = obs.get
     counts = {
         s: int(vals[s])

@@ -2,28 +2,22 @@
 
 The reference is a push-based streaming processor with processing-time
 windows and a session-buffered trace map (window.go, trace_buffer.go).
-Spark-first, the same semantics split into four composable pieces:
+Spark-first, the same semantics in two pieces:
 
  - `stream_transcripts`      : file-stream source (stand-in for Kafka /
    Iceberg streaming read; maxFilesPerTrigger bounds batch size the way
    maxOffsetsPerTrigger would).
- - `streaming_window_counts` : event-time tumbling-window aggregation with
-   a watermark (the A2/A6 counters as a live stream; late rows beyond the
-   watermark are dropped by Spark — the dlq routing for them lives in the
-   batch path).
- - `streaming_sessionize`    : applyInPandasWithState keyed by conv_id
-   with an event-time inactivity timeout — the exact analog of the
-   reference's trace buffer (accumulate spans per trace, emit on
-   inactivity gap, trace_buffer.go:144-185), Arrow-batched, bounded state.
  - `run_incremental_routed`  : the full streaming fan-out — the analog of
    the reference's hot path, rollover export (processor.go:317-347). Rows
-   buffer per window (spill, batch_id-keyed AND window-sub-partitioned);
-   when the event-time high watermark passes a window's rollover horizon,
-   that window's rows are routed with state read from ONLY its own
-   partitions (winners/capacity/invalid via the SAME apply_routing as the
-   batch plan), written with per-window dynamic partition overwrite —
+   buffer per export bucket (spill, batch_id-keyed AND sub-partitioned by
+   `window_bucket`, `export_bucket_windows` consecutive windows — the
+   bucket `plans.pipeline._bucket_expr` defines for every mode); when the
+   event-time high watermark passes a bucket's rollover horizon, that
+   bucket's rows are routed with state read from ONLY its own partitions
+   (winners/capacity/invalid via the SAME apply_routing as the batch
+   plan), written with per-bucket dynamic partition overwrite —
    idempotent under micro-batch replay — and its state is vacuumed.
-   `flush_incremental` routes whatever windows remain open at stream end.
+   `flush_incremental` routes whatever buckets remain open at stream end.
    Union of all rollover exports == the batch pipeline's routed output on
    the same input, for inputs that respect the declared `max_conv_span_s`
    (when lateness + a span bound are on). A conversation that violates the
@@ -31,15 +25,18 @@ Spark-first, the same semantics split into four composable pieces:
    classification — violators get best-effort dlq routing only when the
    violation is observable at export time.
 
+The reference's inactivity-timeout trace buffer has deterministic
+replacements here: `buffer_max_convs` and `max_conv_span_s` (config.py).
+
 Continuous-run posture (the properties a months-long deployment needs,
 asserted in tests/test_streaming_scale.py):
  - roll decisions come from a tiny driver-side epoch manifest (per-batch
    row counts, per-window membership, high watermark) — zero state-table
    reads per roll;
- - per-roll IO is O(closing windows) via explicit leaf-directory reads;
+ - per-roll IO is O(closing buckets) via explicit leaf-directory reads;
    summed over the stream's life, spill is read exactly ONCE;
- - exported windows' spill partitions are vacuumed, so state volume
-   is O(open windows) + the compact conv-start index;
+ - exported buckets' spill partitions are vacuumed, so state volume
+   is O(open buckets) + the compact conv-start index;
  - lateness: with `late_tolerance_s` plus a declared `max_conv_span_s`,
    rollover fires mid-stream (horizon = window end + tolerance + span;
    global conversation starts come from the conv-start index; observed
@@ -52,14 +49,12 @@ asserted in tests/test_streaming_scale.py):
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from trace_aware_reservoir_otel_spark import fsutil
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
+from trace_aware_reservoir_otel_spark.plans.pipeline import _bucket_expr, _bucket_span_s
 from trace_aware_reservoir_otel_spark.schema import TRANSCRIPTS_SCHEMA
 from trace_aware_reservoir_otel_spark.session import local_frame
 
@@ -74,112 +69,7 @@ def stream_transcripts(
     )
 
 
-def streaming_window_counts(
-    stream: DataFrame, window_s: float = 60.0, watermark: str = "10 minutes"
-) -> DataFrame:
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", f"{int(window_s)} seconds").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.approx_count_distinct("conv_id").alias("approx_convs"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start_s"),
-            "rows",
-            "approx_convs",
-        )
-    )
-
-
-_SESSION_OUT = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("n_turns", T.LongType(), False),
-        T.StructField("first_ts", T.TimestampType(), True),
-        T.StructField("last_ts", T.TimestampType(), True),
-    ]
-)
-_SESSION_STATE = T.StructType(
-    [
-        T.StructField("n_turns", T.LongType(), False),
-        T.StructField("first_ts_us", T.LongType(), True),
-        T.StructField("last_ts_us", T.LongType(), True),
-    ]
-)
-
-
-def streaming_sessionize(
-    stream: DataFrame, gap_s: float = 30.0, watermark: str = "0 seconds"
-) -> DataFrame:
-    """Trace-buffer analog: accumulate per-conversation state, emit the
-    completed conversation once no turn arrives for `gap_s` of event time
-    (timeout driven by the watermark, so emission is deterministic given
-    the batch sequence — unlike the reference's wall-clock ticker,
-    processor.go:350-385)."""
-    gap_us = int(gap_s * 1_000_000)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            n, first_us, last_us = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "conv_id": [key[0]],
-                    "n_turns": [n],
-                    "first_ts": [pd.Timestamp(first_us, unit="us")],
-                    "last_ts": [pd.Timestamp(last_us, unit="us")],
-                }
-            )
-            return
-        n, first_us, last_us = (state.get if state.exists else (0, None, None))
-        for pdf in pdfs:
-            ts_us = pdf["ts"].astype("int64") // 1000
-            n += len(pdf)
-            mn, mx = int(ts_us.min()), int(ts_us.max())
-            first_us = mn if first_us is None else min(first_us, mn)
-            last_us = mx if last_us is None else max(last_us, mx)
-        state.update((n, first_us, last_us))
-        state.setTimeoutTimestamp(last_us // 1000 + int(gap_us // 1000))
-        return
-        yield  # pragma: no cover — make fn a generator
-
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_SESSION_OUT,
-            stateStructType=_SESSION_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 # --- streaming routed fan-out (rollover export) ------------------------------
-
-
-def _bucket_span_s(cfg: PipelineConfig) -> int:
-    return int(cfg.window_duration_s * cfg.export_bucket_windows)
-
-
-def _bucket_expr(cfg: PipelineConfig):
-    """window_start_s -> export-bucket id column (-1 holds null-ts rows).
-
-    Buckets group `export_bucket_windows` consecutive windows: the unit of
-    state partitioning, rollover export, vacuum, and output layout. This
-    bounds file counts when windows are numerous and tiny — a mega-
-    conversation's sparse multi-day tail would otherwise create one
-    directory per window per micro-batch (measured: 10^4 windows at bench
-    scale turned per-window layout into a small-files collapse)."""
-    span = _bucket_span_s(cfg)
-    ws = F.col("window_start_s")
-    return F.when(ws.isNull(), F.lit(-1)).otherwise(
-        F.floor(ws / F.lit(span)).cast("long")
-    )
 
 
 def _bucket_of(w, cfg: PipelineConfig):
