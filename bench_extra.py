@@ -13,6 +13,12 @@ optimization work needs lives here (guide §1.1/§1.4/§1.5):
                            internals), print one JSON line
   --noop a                 time a query with the noop sink (computes every
                            column, guide §1.4) instead of count()
+  --codegen-probe [runs] [seed]
+                           run perfbench's batch_skewed job (run_pipeline +
+                           write_sinks, its config and input shape) `runs`
+                           times (default 4) in one session; print per run
+                           the Spark jobs, the generated classes compiled
+                           and the compile milliseconds, one JSON line each
 """
 
 from __future__ import annotations
@@ -184,6 +190,63 @@ def profile_streaming() -> None:
         spark.stop()
 
 
+def codegen_probe(runs: int = 4, seed: int = 1) -> None:
+    """Codegen working set of the batch job, run after run in one session.
+
+    `compiled` counts CodegenMetrics' compilation-time histogram updates
+    (one per generated class Janino compiled, i.e. per codegen-cache miss),
+    `compile_ms` is the delta of CodeGenerator.compileTime, and `jobs` the
+    jobs the status store holds for the run's job group. Warm runs that
+    still compile classes mean the cache
+    (spark.sql.codegen.cache.maxEntries) is smaller than the job's
+    working set."""
+    import shutil
+    import tempfile
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+    import workloads as W  # perfbench's batch_skewed config and input shape
+
+    from trace_aware_reservoir_otel_spark.plans.pipeline import run_pipeline, write_sinks
+    from trace_aware_reservoir_otel_spark.session import get_spark
+    from trace_aware_reservoir_otel_spark.synth import generate_transcripts
+
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+    spark = get_spark(
+        app_name="taro-codegen-probe", cores=cores,
+        extra_conf={"spark.driver.memory": "2g", "spark.ui.showConsoleProgress": "false"},
+    )
+    jvm, sc = spark._jvm, spark.sparkContext
+    histogram = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    work = tempfile.mkdtemp(prefix="taro_codegen_probe_")
+    try:
+        transcripts = f"{work}/transcripts"
+        generate_transcripts(
+            spark, n_convs=W.CONVS, seed=seed, span_s=W.SPAN_S
+        ).write.parquet(transcripts)
+        cfg = W.BatchSkewed().config()
+        out: list = []
+        for i in range(runs):
+            group = f"codegen-probe-{i}"
+            sc.setJobGroup(group, group)
+            n0, ns0, t0 = histogram.getCount(), codegen.compileTime(), time.time()
+            res = run_pipeline(spark.read.parquet(transcripts), cfg)
+            write_sinks(res, f"{work}/out{i}")
+            rec = {
+                "run": i,
+                "wall_s": round(time.time() - t0, 3),
+                "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+                "compiled": histogram.getCount() - n0,
+                "compile_ms": round((codegen.compileTime() - ns0) / 1e6, 1),
+            }
+            out.append(rec)
+            print(json.dumps(rec), flush=True)
+        print("RESULT " + json.dumps(out))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+        spark.stop()
+
+
 if __name__ == "__main__":
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     mode = sys.argv[1] if len(sys.argv) > 1 else ""
@@ -202,5 +265,7 @@ if __name__ == "__main__":
         )
     elif mode == "--streaming-profile":
         profile_streaming()
+    elif mode == "--codegen-probe":
+        codegen_probe(*(int(a) for a in sys.argv[2:4]))
     else:
         sys.exit(__doc__)

@@ -38,6 +38,9 @@ def test_config_from_dict_durations():
 
 def test_config_from_dict_rejects_unknown_keys():
     # checkpoint slicing is run_with_checkpoint's n_units argument; a
-    # config that still names the old field must fail, not be ignored
-    with pytest.raises(TypeError):
+    # config that still names the old field must fail, not be ignored,
+    # with the ValueError every other invalid config raises
+    with pytest.raises(ValueError, match="checkpoint_units"):
         PipelineConfig.from_dict({"checkpoint_units": 3})
+    with pytest.raises(ValueError, match="size, window_duration_x"):
+        PipelineConfig.from_dict({"size": 3, "window_duration_x": 1, "size_k": 2})

@@ -188,3 +188,47 @@ def test_late_shuffle_strategy_equals_broadcast(spark):
             if r["conv_id"] is not None
         )
     assert hist(base) == hist(shuf)
+
+
+def test_write_sinks_metrics_equal_in_plan_metrics(spark, tmp_path):
+    """write_sinks aggregates the metrics table from the routed snapshot it
+    just committed: it must equal the in-plan `res.metrics` over a run with
+    invalid, late and evicted rows spread over several export buckets."""
+    from trace_aware_reservoir_otel_spark.plans.commit import read_committed
+    from trace_aware_reservoir_otel_spark.plans.pipeline import _bucket_expr, write_sinks
+
+    df = generate_transcripts(spark, n_convs=150, seed=7)
+    cfg = PipelineConfig(
+        size_k=3, window_duration_s=WIN, seed=7, buffer_max_convs=4,
+        export_bucket_windows=2,
+    )
+    res = run_pipeline(df, cfg)
+    reasons = {r["reason"] for r in res.routed.select("reason").distinct().collect()}
+    assert {"invalid_key", "late", "capacity"} <= reasons
+    buckets = res.routed.select(_bucket_expr(cfg).alias("b")).distinct().collect()
+    assert len([r for r in buckets if r["b"] >= 0]) > 1
+
+    def rows(metrics):
+        return sorted(
+            (tuple(r) for r in metrics.collect()),
+            key=lambda t: (t[0] is None, t[0] or 0, t[1]),
+        )
+
+    expected = rows(res.metrics)
+    counts = write_sinks(res, str(tmp_path / "out"))
+    committed = read_committed(spark, str(tmp_path / "out" / "metrics"))
+    assert committed.dtypes == res.metrics.dtypes
+    assert rows(committed) == expected
+    assert counts["metrics"] == len(expected)
+
+
+def test_write_sinks_empty_input(spark, tmp_path):
+    """An empty input commits empty routed and metrics tables: the per-sink
+    observations over zero rows are NULL, not counts."""
+    from trace_aware_reservoir_otel_spark.plans.commit import read_committed
+    from trace_aware_reservoir_otel_spark.plans.pipeline import write_sinks
+
+    df = generate_transcripts(spark, n_convs=10, seed=1).limit(0)
+    counts = write_sinks(run_pipeline(df, PipelineConfig(size_k=2)), str(tmp_path / "out"))
+    assert counts == {"metrics": 0}
+    assert read_committed(spark, str(tmp_path / "out" / "metrics")).count() == 0

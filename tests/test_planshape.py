@@ -4,6 +4,7 @@ silently reintroduces a fact-side shuffle or a cartesian product fails CI,
 not a 100-TB run."""
 
 import io
+import os
 import re
 from contextlib import redirect_stdout
 
@@ -89,37 +90,36 @@ def test_unit_branch_prunes_text_column(spark, tmp_path):
     assert wide, "the routed output scan must still carry text"
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-located join: two tables bucketed on the join key must join with
-    ZERO shuffle exchanges — the write-once/join-many layout for repeated
-    fact-fact joins at scale."""
-    from pyspark.sql import functions as F
+def test_metrics_commit_does_not_rerun_routed_plan(spark, tmp_path, monkeypatch):
+    """write_sinks commits the metrics table from the routed snapshot it
+    has just written: the metrics plan must not scan the transcripts input
+    again or rebuild the routed plan's broadcast joins."""
+    from trace_aware_reservoir_otel_spark.plans import commit
+    from trace_aware_reservoir_otel_spark.plans.pipeline import run_pipeline, write_sinks
 
-    from trace_aware_reservoir_otel_spark.sources.bucketed import (
-        read_bucketed,
-        write_bucketed,
-    )
+    path = str(tmp_path / "transcripts")
+    generate_transcripts(spark, n_convs=300, seed=5).write.parquet(path)
+    cfg = PipelineConfig(size_k=8, window_duration_s=60, seed=42, buffer_max_convs=20)
+    written = {}
+    commit_write = commit.commit_write
 
-    df = generate_transcripts(spark, n_convs=300, seed=5).filter(
-        F.col("conv_id").isNotNull()
-    )
-    units = df.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n_turns"))
-    write_bucketed(df.select("conv_id", "turn_idx", "ts"), "b_turns", ["conv_id"], 8)
-    write_bucketed(units, "b_units", ["conv_id"], 8)
-    try:
-        joined = read_bucketed(spark, "b_turns").join(
-            read_bucketed(spark, "b_units").hint("merge"), on="conv_id"
-        )
-        plan = _plan_of(joined)
-        shuffle_exchanges = [
-            l for l in plan.splitlines()
-            if "Exchange hashpartitioning" in l
-        ]
-        assert not shuffle_exchanges, shuffle_exchanges
-        assert joined.count() == df.count()
-    finally:
-        spark.sql("drop table if exists b_turns")
-        spark.sql("drop table if exists b_units")
+    def recording_commit_write(df, table_dir, *a, **k):
+        written[table_dir] = df
+        return commit_write(df, table_dir, *a, **k)
+
+    monkeypatch.setattr(commit, "commit_write", recording_commit_write)
+    out = str(tmp_path / "out")
+    write_sinks(run_pipeline(spark.read.parquet(path), cfg), out)
+
+    def reads_input(df):
+        return any(os.path.basename(os.path.dirname(f)) == "transcripts"
+                   for f in df.inputFiles())
+
+    routed, metrics = written[f"{out}/routed"], written[f"{out}/metrics"]
+    assert reads_input(routed) and "BroadcastHashJoin" in _plan_of(routed)
+    assert not reads_input(metrics), metrics.inputFiles()
+    plan = _plan_of(metrics)
+    assert "BroadcastHashJoin" not in plan, plan
 
 
 def test_ivf_assign_plan_has_no_join_or_exchange(spark):

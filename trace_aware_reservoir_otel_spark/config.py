@@ -9,7 +9,7 @@ accepted as Go-style strings ("60s", "1m30s", "500ms") or seconds.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 _DUR_RE = re.compile(r"(\d+(?:\.\d+)?)(ms|s|m|h|d)")
 _DUR_UNITS = {"ms": 0.001, "s": 1.0, "m": 60.0, "h": 3600.0, "d": 86400.0}
@@ -137,4 +137,7 @@ class PipelineConfig:
         for key in ("window_duration", "late_tolerance", "max_conv_span"):
             if key in d:
                 d[key + "_s"] = parse_duration(d.pop(key))
+        unknown = sorted(set(d) - {f.name for f in fields(cls)})
+        if unknown:
+            raise ValueError(f"unknown config keys: {', '.join(unknown)}")
         return cls(**d)

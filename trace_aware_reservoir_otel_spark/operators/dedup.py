@@ -788,8 +788,8 @@ def minhash_index(
     preserved exactly; pair witnesses are bounded.
 
     Scale note: probes join on (band, bucket) — a shuffle join at bucket
-    grain (never doc-text grain). On a real cluster, commit the bucket
-    table bucketBy(band, bucket) (sources/bucketed.py) to make every
+    grain (never doc-text grain). On a real cluster, save the bucket
+    table as a catalog table with bucketBy(band, bucket) to make every
     probe join one-sided."""
     import os
 

@@ -155,6 +155,23 @@ def _current_dirs(table_dir: str) -> "list[str]":
     return list(rec["dirs"]) if "dirs" in rec else [rec["dir"]]
 
 
+def _read_parquet(spark: SparkSession, path: str, schema=None) -> DataFrame:
+    r = spark.read
+    if schema is not None:
+        r = r.schema(schema)
+    return r.parquet(path)
+
+
+def read_version(
+    spark: SparkSession, table_dir: str, version: int, schema=None
+) -> DataFrame:
+    """Read one `commit_write` snapshot by its version number, whatever
+    the pointer names now: a writer that reads back what it just committed
+    is not exposed to a concurrent commit. `schema` as in read_committed;
+    a known schema also spares the footer-inference job."""
+    return _read_parquet(spark, _version_dir(table_dir, version), schema)
+
+
 def read_committed(spark: SparkSession, table_dir: str, schema=None) -> DataFrame:
     """Read the table's current committed snapshot (single dir or an
     append chain of delta dirs). Falls back to a plain directory read when
@@ -169,18 +186,11 @@ def read_committed(spark: SparkSession, table_dir: str, schema=None) -> DataFram
     must read back as an empty frame, not an inference error."""
     from functools import reduce
 
-    def _read(path: str) -> DataFrame:
-        r = spark.read
-        if schema is not None:
-            r = r.schema(schema)
-        return r.parquet(path)
-
-    dirs = _current_dirs(table_dir)
-    if not dirs:
-        return _read(table_dir)
-    if len(dirs) == 1:
-        return _read(dirs[0])
-    return reduce(lambda a, b: a.unionByName(b), (_read(d) for d in dirs))
+    dirs = _current_dirs(table_dir) or [table_dir]
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        (_read_parquet(spark, d, schema) for d in dirs),
+    )
 
 
 def snapshots(table_dir: str) -> "list[dict]":

@@ -34,7 +34,9 @@ Scale architecture — THE FACT TABLE IS NEVER SHUFFLED:
 Routing produces a SINGLE frame so all three sinks materialize in ONE
 write partitioned by (sink, window_bucket) instead of three scans; a
 bucket is `export_bucket_windows` consecutive windows (`_bucket_expr`),
-the layout the checkpoint finalize writes too.
+the layout the checkpoint finalize writes too. The routed plan runs once
+per `write_sinks`: the metrics table is aggregated from the committed
+routed snapshot (three columns), not from a second run of the plan.
 
 Assumption to re-check at extreme scale: the late/boundary unit set is
 small enough to broadcast. NOTE it scales with the late-CONVERSATION
@@ -54,7 +56,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, Window as W, functions as F
+from pyspark.sql import DataFrame, Observation, Window as W, functions as F, types as T
 
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
 from trace_aware_reservoir_otel_spark.functions.hashing import pbig
@@ -73,7 +75,7 @@ class PipelineResult:
     sampled_traces: DataFrame
     overflow: DataFrame
     dlq: DataFrame
-    metrics: DataFrame
+    metrics: DataFrame  # in-plan; write_sinks aggregates the committed snapshot
     winners: DataFrame  # conv-level (window, conv_id, priorities) for state
     cfg: PipelineConfig  # the run's config: write_sinks derives the bucket from it
     persisted: "list[DataFrame] | None" = None  # unit frames cached by the plan
@@ -517,6 +519,27 @@ def _filter_late_rows(rows: DataFrame, late_units: DataFrame) -> DataFrame:
     return joined.filter(keep).drop("status", "cutoff_s")
 
 
+def _metrics_frame(routed: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """The metrics table of a routed frame: rows and distinct conversations
+    per (window, sink), dlq rows under a NULL window. Reads only
+    window_start_s, sink and conv_id."""
+    return (
+        routed.groupBy(
+            F.when(F.col("sink") == "dlq", F.lit(None).cast("long"))
+            .otherwise(F.col("window_start_s"))
+            .alias("window_start_s"),
+            "sink",
+        )
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("rows"),
+            F.countDistinct("conv_id").cast("long").alias("convs"),
+        )
+        .select(
+            "window_start_s", "sink", "rows", "convs", F.lit(cfg.run_id).alias("run_id")
+        )
+    )
+
+
 def run_pipeline(
     transcripts: DataFrame,
     cfg: PipelineConfig,
@@ -534,22 +557,6 @@ def run_pipeline(
     overflow = routed.filter(F.col("sink") == "overflow").drop("sink")
     dlq = routed.filter(F.col("sink") == "dlq").select(*raw_cols, "reason")
 
-    metrics = (
-        routed.groupBy(
-            F.when(F.col("sink") == "dlq", F.lit(None).cast("long"))
-            .otherwise(F.col("window_start_s"))
-            .alias("window_start_s"),
-            "sink",
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("rows"),
-            F.countDistinct("conv_id").cast("long").alias("convs"),
-        )
-        .select(
-            "window_start_s", "sink", "rows", "convs", F.lit(cfg.run_id).alias("run_id")
-        )
-    )
-
     # Stable (conv_id, turn_idx) ordering for the equality gate is applied
     # at comparison/write time — a global orderBy here would be a full sort
     # of the sampled fact table at 100 TB.
@@ -558,7 +565,7 @@ def run_pipeline(
         sampled_traces=sampled.sortWithinPartitions("conv_id", "turn_idx"),
         overflow=overflow,
         dlq=dlq,
-        metrics=metrics,
+        metrics=_metrics_frame(routed, cfg),
         winners=winners,
         cfg=cfg,
         persisted=persisted,
@@ -585,9 +592,12 @@ def write_sinks(result: PipelineResult, out_dir: str) -> "dict[str, int]":
     of the fact, the same layout plans/state.finalize writes.
 
     Per-sink counts come from the Observation API attached to the write
-    itself (operators/metrics.py) — zero extra passes; the written output
-    is never re-read (analog of the reference's counter gate,
-    metrics.go:47-142).
+    itself (operators/metrics.py) — zero extra passes (analog of the
+    reference's counter gate, metrics.go:47-142). The metrics table is
+    aggregated from the routed snapshot just committed, read by its
+    version with a known schema: three of its columns, not a second run
+    of the routed plan (transcript scan, enrich joins, winner and
+    eviction shuffles).
 
     Both tables land through the snapshot-commit protocol
     (plans/commit.py): the write goes to a fresh immutable version
@@ -598,18 +608,27 @@ def write_sinks(result: PipelineResult, out_dir: str) -> "dict[str, int]":
     from trace_aware_reservoir_otel_spark.plans import commit
 
     observed, obs = observed_routed(result.routed)
-    commit_routed(observed, result.cfg, out_dir)
+    version = commit_routed(observed, result.cfg, out_dir)
     vals = obs.get
+    result.unpersist()
+    # commit_routed's layout: the routed columns plus the bucket partition
+    schema = T.StructType(
+        result.routed.schema.fields + [T.StructField("window_bucket", T.LongType())]
+    )
+    snapshot = commit.read_version(
+        result.routed.sparkSession, f"{out_dir}/routed", version, schema
+    )
     mobs = Observation("taro_metrics_rows")
     commit.commit_write(
-        result.metrics.observe(mobs, F.count(F.lit(1)).alias("n")),
+        _metrics_frame(snapshot, result.cfg).observe(
+            mobs, F.count(F.lit(1)).alias("n")
+        ),
         f"{out_dir}/metrics",
     )
-    counts = {
-        "sampled_traces": int(vals["rows_sampled"]),
-        "overflow": int(vals["rows_overflow"]),
-        "dlq": int(vals["rows_dlq"]),
+    counts = {  # a sum over zero rows observes NULL
+        "sampled_traces": int(vals["rows_sampled"] or 0),
+        "overflow": int(vals["rows_overflow"] or 0),
+        "dlq": int(vals["rows_dlq"] or 0),
         "metrics": int(mobs.get["n"]),
     }
-    result.unpersist()
     return {k: v for k, v in counts.items() if k == "metrics" or v > 0}

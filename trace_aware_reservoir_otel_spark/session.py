@@ -53,6 +53,14 @@ def get_spark(
         # its py4j traffic (measured: 10k of 41k calls over a 104-batch
         # stream's rolls). Errors still carry the JVM-side plan context.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # generated-class cache (an LRU keyed by source, Spark default 100
+        # entries) sized to hold a whole job's working set: one batch
+        # run_pipeline + write_sinks compiles ~105 distinct classes, so at
+        # 100 entries every warm run evicted and recompiled 83-95 of them
+        # (0.7-0.8 s of Janino time plus the JIT work on the new classes).
+        # At 512 a warm run compiles none; a streaming run (53 classes)
+        # already fit. Measured with `bench_extra.py --codegen-probe`.
+        .config("spark.sql.codegen.cache.maxEntries", "512")
         # broadcast decisions: the STATIC planner sees only size estimates
         # (file size x column-pruning ratio), which at sf1.0 made it
         # broadcast-build multi-million-row fact sides (lineitem in the Q3
