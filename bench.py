@@ -97,13 +97,7 @@ def _flagship(spark, transcripts_path: str) -> "tuple[float, int]":
         [transcripts_path] if isinstance(transcripts_path, str) else transcripts_path
     )
     tr = spark.read.parquet(*paths)
-    extra = {}
-    if os.environ.get("TARO_LATE_STRATEGY"):
-        # e.g. "shuffle": drop the late-set broadcast hint (the 40M-conv
-        # scaling runs showed an 800k-late-unit broadcast build is a
-        # driver-side serial constant; see plans/pipeline.py)
-        extra["late_strategy"] = os.environ["TARO_LATE_STRATEGY"]
-    cfg = PipelineConfig(size_k=64, window_duration_s=60, seed=42, extra=extra)
+    cfg = PipelineConfig(size_k=64, window_duration_s=60, seed=42)
     t0 = time.time()
     routed, _ = build_routed(tr, cfg)
     counts = {

@@ -147,7 +147,7 @@ def profile_streaming() -> None:
     saved = {
         n: wrap(sp, n)
         for n in (
-            "_prepared_batch",
+            "prepare",
             "_route_buckets",
             "_roll",
             "_read_state_buckets",

@@ -42,5 +42,8 @@ def test_config_from_dict_rejects_unknown_keys():
     # with the ValueError every other invalid config raises
     with pytest.raises(ValueError, match="checkpoint_units"):
         PipelineConfig.from_dict({"checkpoint_units": 3})
+    # the untyped `extra` dict is gone with the late-join strategy it carried
+    with pytest.raises(ValueError, match="extra"):
+        PipelineConfig.from_dict({"extra": {"late_strategy": "shuffle"}})
     with pytest.raises(ValueError, match="size, window_duration_x"):
         PipelineConfig.from_dict({"size": 3, "window_duration_x": 1, "size_k": 2})

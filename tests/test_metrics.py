@@ -1,6 +1,7 @@
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
 from trace_aware_reservoir_otel_spark.operators.metrics import (
     conservation_ok,
+    observed_counts,
     observed_routed,
 )
 from trace_aware_reservoir_otel_spark.plans.pipeline import build_routed
@@ -13,8 +14,8 @@ def test_observation_counters_conserve(spark):
     routed, _ = build_routed(df, cfg)
     observed, obs = observed_routed(routed)
     n = observed.count()  # the "sink write" action
-    vals = obs.get
+    vals = observed_counts(obs)
     assert vals["rows_total"] == n == df.count()
     assert conservation_ok(vals)
-    assert vals["rows_dlq"] >= 2  # invalid fixtures present
-    assert vals["rows_sampled"] > 0
+    assert vals["dlq"] >= 2  # invalid fixtures present
+    assert vals["sampled_traces"] > 0

@@ -166,30 +166,6 @@ def test_metrics_match_recomputation(data):
         assert m[(r["window_start_s"], "sampled_traces")] == (r["rows"], r["convs"])
 
 
-def test_late_shuffle_strategy_equals_broadcast(spark):
-    """cfg.extra['late_strategy']='shuffle' (for pathological late
-    fractions whose late-unit set exceeds broadcast limits) must produce
-    identical routing to the default broadcast path."""
-    from trace_aware_reservoir_otel_spark.config import PipelineConfig
-    from trace_aware_reservoir_otel_spark.plans.pipeline import run_pipeline
-    from trace_aware_reservoir_otel_spark.synth import generate_transcripts
-
-    df = generate_transcripts(spark, n_convs=150, seed=11).cache()
-    base = PipelineConfig(size_k=5, window_duration_s=60, seed=42)
-    shuf = PipelineConfig(
-        size_k=5, window_duration_s=60, seed=42,
-        extra={"late_strategy": "shuffle"},
-    )
-    def hist(cfg):
-        routed = run_pipeline(df, cfg).routed
-        return sorted(
-            (r["conv_id"], r["turn_idx"], r["sink"], r["reason"])
-            for r in routed.select("conv_id", "turn_idx", "sink", "reason").collect()
-            if r["conv_id"] is not None
-        )
-    assert hist(base) == hist(shuf)
-
-
 def test_write_sinks_metrics_equal_in_plan_metrics(spark, tmp_path):
     """write_sinks aggregates the metrics table from the routed snapshot it
     just committed: it must equal the in-plan `res.metrics` over a run with
@@ -232,3 +208,64 @@ def test_write_sinks_empty_input(spark, tmp_path):
     counts = write_sinks(run_pipeline(df, PipelineConfig(size_k=2)), str(tmp_path / "out"))
     assert counts == {"metrics": 0}
     assert read_committed(spark, str(tmp_path / "out" / "metrics")).count() == 0
+
+
+def test_apply_routing_rule_precedence(spark):
+    """apply_routing's rule table on hand-made rows, no pipeline: each row
+    matches every rule from its own down, so it must take its own."""
+    from datetime import datetime, timezone
+
+    from trace_aware_reservoir_otel_spark.plans.pipeline import apply_routing
+    from trace_aware_reservoir_otel_spark.session import local_frame
+
+    def ts(s):
+        return datetime.fromtimestamp(s, tz=timezone.utc)
+
+    rows = local_frame(
+        spark,
+        [
+            (0, "a", None, ts(10), True),  # invalid, violated, expired, late, evicted, won
+            (0, "b", 1, ts(10), True),  # violated, expired, late, evicted, won
+            (0, "c", 1, ts(10), True),  # expired, late, evicted, won
+            (60, "d", 1, ts(70), True),  # late (all_late), evicted, won
+            (60, "e", 1, ts(100), True),  # late (boundary, before cutoff), won
+            (60, "e", 2, ts(115), True),  # boundary but on time, won
+            (60, "f", 1, ts(70), True),  # evicted, won
+            (60, "g", 1, ts(70), True),  # won
+            (60, "h", 1, ts(70), None),  # nothing
+        ],
+        "window_start_s long, conv_id string, turn_idx int, ts timestamp, _won boolean",
+    )
+    late_units = local_frame(
+        spark,
+        [(0, c, "all_late", 1e9) for c in "abc"]
+        + [(60, "d", "all_late", 1e9), (60, "e", "boundary", 110.0)],
+        "window_start_s long, conv_id string, status string, cutoff_s double",
+    )
+    evicted = local_frame(
+        spark, [(0, c) for c in "abc"] + [(60, "d"), (60, "f")],
+        "window_start_s long, conv_id string",
+    )
+    routed = apply_routing(
+        rows,
+        late_units,
+        evicted,
+        expired=F.col("window_start_s") < 60,
+        violated=F.col("conv_id").isin("a", "b"),
+    )
+    assert "_won" not in routed.columns and "cutoff_s" not in routed.columns
+    got = {
+        (r["conv_id"], r["turn_idx"]): (r["sink"], r["reason"])
+        for r in routed.collect()
+    }
+    assert got == {
+        ("a", None): ("dlq", "invalid_key"),
+        ("b", 1): ("dlq", "span_violation"),
+        ("c", 1): ("overflow", "window_expired"),
+        ("d", 1): ("dlq", "late"),
+        ("e", 1): ("dlq", "late"),
+        ("e", 2): ("sampled_traces", None),
+        ("f", 1): ("overflow", "capacity"),
+        ("g", 1): ("sampled_traces", None),
+        ("h", 1): ("overflow", "unsampled"),
+    }

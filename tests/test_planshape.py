@@ -11,7 +11,7 @@ from contextlib import redirect_stdout
 import pytest
 
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
-from trace_aware_reservoir_otel_spark.plans.pipeline import build_routed
+from trace_aware_reservoir_otel_spark.plans.pipeline import build_routed, prepare
 from trace_aware_reservoir_otel_spark.synth import generate_transcripts
 
 
@@ -294,12 +294,10 @@ def test_default_batch_and_stream_plans_start_no_python_worker(spark):
     """The default-config routed plan and the streaming micro-batch's
     parse/enrich/window plan are JVM-only: the built-in dims are local
     relations, not a PythonRDD scan."""
-    from trace_aware_reservoir_otel_spark.streaming.pipeline import _prepared_batch
-
     tr = generate_transcripts(spark, n_convs=50, seed=42)
     cfg = PipelineConfig()
     routed, _ = build_routed(tr, cfg)
-    for plan in (_plan_of(routed), _plan_of(_prepared_batch(tr, cfg))):
+    for plan in (_plan_of(routed), _plan_of(prepare(tr, cfg))):
         assert "LocalTableScan" in plan
         found = [node for node in _PYTHON_NODES if node in plan]
         assert not found, f"{found} in plan:\n{plan}"

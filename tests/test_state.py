@@ -5,6 +5,7 @@ Round 2 adds: scan-prunability (total rows read independent of n_units),
 the W3 window-expiry guard, and state-health gauges."""
 
 import io
+import os
 from contextlib import redirect_stdout
 
 import pytest
@@ -234,3 +235,16 @@ def test_resume_rejects_grown_input(spark, data, tmp_path_factory):
     )
     with pytest.raises(ValueError, match="bounds"):
         run_with_checkpoint(spark, grown, CFG, s, str(base / "o"), n_units=4)
+
+
+def test_checkpoint_rejects_turn_sampling(spark, data, tmp_path_factory):
+    """Checkpoint state samples whole conversations: trace_aware=False
+    must raise before any state is written, not run conversation sampling
+    while build_routed would sample turns."""
+    import dataclasses
+
+    base = tmp_path_factory.mktemp("state_simple_mode")
+    simple = dataclasses.replace(CFG, trace_aware=False)
+    with pytest.raises(ValueError, match="trace_aware"):
+        run_with_checkpoint(spark, data, simple, str(base / "st"), str(base / "o"))
+    assert not os.path.exists(base / "st")

@@ -3,6 +3,7 @@ pipeline."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
@@ -191,3 +192,19 @@ def test_streaming_restart_with_new_data_equals_batch(spark, tmp_path_factory):
     assert got == exp
     rows_in, rows_out = incremental_conservation(spark, state, out)
     assert rows_in == rows_out == df.count()
+
+
+def test_streaming_rejects_turn_sampling(spark, tmp_path_factory):
+    """Streaming rollover samples whole conversations: trace_aware=False
+    must raise at both entry points before any state is written."""
+    base = str(tmp_path_factory.mktemp("stream_simple_mode"))
+    cfg = PipelineConfig(size_k=5, window_duration_s=60, seed=42, trace_aware=False)
+    os.makedirs(f"{base}/in")
+    with pytest.raises(ValueError, match="trace_aware"):
+        run_incremental_routed(
+            spark, f"{base}/in", cfg, f"{base}/state", f"{base}/ck", f"{base}/out"
+        )
+    with pytest.raises(ValueError, match="trace_aware"):
+        flush_incremental(spark, cfg, f"{base}/state", f"{base}/out")
+    assert not os.path.exists(f"{base}/state")
+    assert not os.path.exists(f"{base}/ck")

@@ -9,7 +9,7 @@ accepted as Go-style strings ("60s", "1m30s", "500ms") or seconds.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field, fields
+from dataclasses import dataclass, fields
 
 _DUR_RE = re.compile(r"(\d+(?:\.\d+)?)(ms|s|m|h|d)")
 _DUR_UNITS = {"ms": 0.001, "s": 1.0, "m": 60.0, "h": 3600.0, "d": 86400.0}
@@ -107,7 +107,6 @@ class PipelineConfig:
     priority: str = "ares"  # 'ares' (weighted) | 'int' (exact, oracle-portable)
     hash_impl: str = "xxh"  # 'xxh' (fast JVM path) | 'md5' (DuckDB-portable)
     run_id: str = "run-0"
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         if self.size_k <= 0:

@@ -14,25 +14,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 
+SINKS = ("sampled_traces", "overflow", "dlq")
+
+
 def observed_routed(routed: DataFrame) -> "tuple[DataFrame, Observation]":
-    """Attach the reference's counter set to the routed frame; read the
-    Observation after the frame's first action (e.g. the sink write)."""
+    """Attach the per-sink counters to a routed frame: `rows_total` and one
+    count per sink, named after the sink. The one sink Observation of every
+    mode (batch `write_sinks`, checkpoint finalize, streaming rollover);
+    read it with `observed_counts` after the frame's first action (the sink
+    write)."""
     obs = Observation("taro_metrics")
     observed = routed.observe(
         obs,
         F.count(F.lit(1)).alias("rows_total"),
-        F.sum((F.col("sink") == "sampled_traces").cast("long")).alias("rows_sampled"),
-        F.sum((F.col("sink") == "overflow").cast("long")).alias("rows_overflow"),
-        F.sum((F.col("sink") == "dlq").cast("long")).alias("rows_dlq"),
-        F.sum((F.col("reason") == "capacity").cast("long")).alias("rows_evicted"),
-        F.sum((F.col("reason") == "late").cast("long")).alias("rows_late"),
-        F.approx_count_distinct("conv_id").alias("approx_convs"),
+        *[F.sum((F.col("sink") == s).cast("long")).alias(s) for s in SINKS],
     )
     return observed, obs
 
 
-def conservation_ok(obs_values: dict) -> bool:
-    return (
-        obs_values["rows_sampled"] + obs_values["rows_overflow"] + obs_values["rows_dlq"]
-        == obs_values["rows_total"]
-    )
+def observed_counts(obs: Observation) -> "dict[str, int]":
+    """The observed counters as ints (a sum over zero rows observes NULL,
+    read as 0)."""
+    return {k: int(v or 0) for k, v in obs.get.items()}
+
+
+def conservation_ok(counts: dict) -> bool:
+    return sum(counts[s] for s in SINKS) == counts["rows_total"]

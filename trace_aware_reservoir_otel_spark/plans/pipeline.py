@@ -38,18 +38,12 @@ the layout the checkpoint finalize writes too. The routed plan runs once
 per `write_sinks`: the metrics table is aggregated from the committed
 routed snapshot (three columns), not from a second run of the plan.
 
-Assumption to re-check at extreme scale: the late/boundary unit set is
-small enough to broadcast. NOTE it scales with the late-CONVERSATION
-COUNT (late rate x #conversations), not just the rate: measured at 234M
-turns / 40M conversations / 2% late convs, the 800k-unit late set makes
-the driver-side broadcast build a ~17s serial constant that caps
-thread-scaling (8->32 raw efficiency 0.25 vs 0.36 with the knob below),
-while at bounded late counts the broadcast is strictly better (zero fact
-shuffle). For workloads whose late-conv count is data-proportional, set
-cfg.extra["late_strategy"]="shuffle": the late join loses its broadcast
-hint, and AQE picks broadcast at runtime when the set is actually small
-— at genuinely large sets the one extra fact exchange beats a
-hundreds-of-MB broadcast build.
+Every mode shares this module's steps: `prepare` (window -> parse ->
+enrich) is the one prepare chain, `invalid_key` the one key predicate,
+and `route_units` the one trace-aware routing step (capacity, winners,
+the broadcast winner join and `apply_routing`'s rule table). The batch
+plan, the checkpoint finalize (plans/state.py) and the streaming
+rollover (streaming/pipeline.py) each call it once.
 """
 
 from __future__ import annotations
@@ -109,6 +103,27 @@ def _bucket_expr(cfg: PipelineConfig):
     return F.when(ws.isNull(), F.lit(-1)).otherwise(
         F.floor(ws / F.lit(span)).cast("long")
     )
+
+
+def invalid_key():
+    """Rows that key no (conv, turn) unit: they route to dlq(invalid_key),
+    and `~invalid_key()` is the valid-row filter of every mode."""
+    return F.col("conv_id").isNull() | F.col("turn_idx").isNull()
+
+
+def prepare(
+    transcripts: DataFrame,
+    cfg: PipelineConfig,
+    dim_role: "DataFrame | None" = None,
+    dim_tool: "DataFrame | None" = None,
+    use_pandas_parse: bool = False,
+) -> DataFrame:
+    """The one prepare chain of every mode (batch, checkpoint units and
+    finalize, streaming micro-batches and the spill schema): tumbling
+    window -> parsed tool-call fields -> broadcast role/tool enrichment."""
+    parse = with_parsed_fields_pandas if use_pandas_parse else with_parsed_fields
+    windowed = with_tumbling_window(transcripts, "ts", cfg.window_duration_s)
+    return enrich(parse(windowed), dim_role, dim_tool)
 
 
 def _with_unit_priorities(units: DataFrame, cfg: PipelineConfig, weighted: bool) -> DataFrame:
@@ -176,16 +191,6 @@ def _merge_pre(pre: DataFrame, cfg: PipelineConfig) -> DataFrame:
     if weighted:
         aggs.append(F.max("_w").alias("_w"))
     return pre.groupBy("window_start_s", "conv_id").agg(*aggs)
-
-
-def _build_units_and_late(
-    valid: DataFrame,
-    cfg: PipelineConfig,
-    persisted_out: "list[DataFrame] | None" = None,
-) -> "tuple[DataFrame, DataFrame | None]":
-    """Aggregate the fact to (window, conv) units and classify lateness."""
-    pre = _unit_pre_aggregate(valid, cfg)
-    return _units_from_pre(pre, valid, cfg, persisted_out)
 
 
 def _units_from_pre(
@@ -326,19 +331,46 @@ def capacity_split_units(
     return kept_units, evicted_keys
 
 
-def capacity_and_winners(
-    units: DataFrame, cfg: PipelineConfig
-) -> "tuple[DataFrame, DataFrame | None, DataFrame]":
-    """Capacity split + conv-level reservoir winners — the shared
-    winner-derivation used by the batch plan, checkpoint finalize, and
-    streaming rollover (pure functions of (seed, window, conv): any path
-    over any input cover derives the same winner set)."""
+def route_units(
+    rows: DataFrame,
+    units: DataFrame,
+    late_units: "DataFrame | None",
+    cfg: PipelineConfig,
+    expired=None,
+    violated=None,
+) -> "tuple[DataFrame, DataFrame]":
+    """The trace-aware routing step of every mode — the batch plan, the
+    checkpoint finalize and the streaming rollover each call it once.
+    Capacity split and conv-level reservoir winners over `units`, a
+    broadcast `_won` join onto the fact `rows`, then `apply_routing`.
+    Returns (routed, winners).
+
+    One step serves all three because A-Res priorities are pure functions
+    of (seed, window, conv): any path over any cover of the input derives
+    the same winner set. `expired` and `violated` are passed through to
+    `apply_routing`."""
     kept_units, evicted_keys = capacity_split_units(units, cfg)
     winners = topk_units(
         kept_units, cfg.size_k, "window_start_s", "conv_id",
         cfg.salt_buckets, cfg.method, cfg.priority,
     )
-    return kept_units, evicted_keys, winners
+    win_keys = winners.select("window_start_s", "conv_id").withColumn(
+        "_won", F.lit(True)
+    )
+    routed = rows.join(
+        F.broadcast(win_keys), on=["window_start_s", "conv_id"], how="left"
+    )
+    return apply_routing(routed, late_units, evicted_keys, expired, violated), winners
+
+
+def require_trace_aware(cfg: PipelineConfig, entry: str) -> None:
+    """The checkpoint and streaming modes sample whole conversations only;
+    refuse turn sampling up front instead of silently ignoring it."""
+    if not cfg.trace_aware:
+        raise ValueError(
+            f"{entry} samples whole conversations; cfg.trace_aware=False "
+            "(turn sampling) runs only in build_routed / run_pipeline"
+        )
 
 
 def build_routed(
@@ -353,24 +385,21 @@ def build_routed(
     conv-level winner set (for state checkpointing). If `persisted_out` is
     given, frames this plan persists are appended so the caller can
     unpersist them after its final action."""
-    parse = with_parsed_fields_pandas if use_pandas_parse else with_parsed_fields
-    windowed_raw = with_tumbling_window(transcripts, "ts", cfg.window_duration_s)
-    windowed = enrich(
-        parse(windowed_raw), dim_role, dim_tool
-    )
-
-    invalid = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
+    windowed = prepare(transcripts, cfg, dim_role, dim_tool, use_pandas_parse)
 
     # unit aggregation reads only (conv, turn, ts[, weight]) — feed it the
-    # raw frame so the scan prunes to those columns and the parse/enrich
-    # work never runs in the aggregation branch (unless the sampling
-    # weight itself is a parsed/enriched column)
+    # raw windowed frame so the scan prunes to those columns and the
+    # parse/enrich work never runs in the aggregation branch (unless the
+    # sampling weight itself is a parsed/enriched column)
+    windowed_raw = with_tumbling_window(transcripts, "ts", cfg.window_duration_s)
     unit_src = windowed if (
         cfg.weight_col is not None and cfg.weight_col not in windowed_raw.columns
     ) else windowed_raw
-    valid = unit_src.filter(~invalid)
+    valid = unit_src.filter(~invalid_key())
 
-    units, late_units = _build_units_and_late(valid, cfg, persisted_out)
+    units, late_units = _units_from_pre(
+        _unit_pre_aggregate(valid, cfg), valid, cfg, persisted_out
+    )
     # units/late_units are conv-level (orders of magnitude smaller than the
     # fact) and are consumed by several broadcast subplans — persist so the
     # unit pre-aggregation scans the fact exactly once. Bounded memory:
@@ -383,125 +412,111 @@ def build_routed(
         if persisted_out is not None:
             persisted_out.append(late_units)
 
-    kept_units, evicted_keys = capacity_split_units(units, cfg)
-
     if cfg.trace_aware:
-        winners = topk_units(
-            kept_units, cfg.size_k, "window_start_s", "conv_id",
-            cfg.salt_buckets, cfg.method, cfg.priority,
-        )
-        win_keys = winners.select("window_start_s", "conv_id").withColumn(
-            "_won", F.lit(True)
-        )
-        routed = windowed.join(
-            F.broadcast(win_keys), on=["window_start_s", "conv_id"], how="left"
-        )
-    else:
-        # simple mode: unit IS the row; late detection must precede sampling
-        on_time_rows = windowed.filter(~invalid)
-        if late_units is not None:
-            on_time_rows = _filter_late_rows(on_time_rows, late_units)
-        winners = sample_rows(
-            on_time_rows, cfg.size_k, ["conv_id", "turn_idx"], "window_start_s",
-            cfg.weight_col, cfg.seed, cfg.salt_buckets, cfg.method, cfg.priority,
-        )
-        win_keys = winners.select(
-            "window_start_s", "conv_id", "turn_idx"
-        ).withColumn("_won", F.lit(True))
-        routed = windowed.join(
-            F.broadcast(win_keys),
-            on=["window_start_s", "conv_id", "turn_idx"],
-            how="left",
-        )
-        winners = winners.select(
-            "window_start_s", "conv_id", "ares_key", "prio_int",
-            F.lit(1).cast("long").alias("n_turns"),
-        )
+        return route_units(windowed, units, late_units, cfg)
 
-    routed = apply_routing(
-        routed,
-        invalid,
-        late_units,
-        evicted_keys,
-        broadcast_late=cfg.extra.get("late_strategy") != "shuffle",
+    # simple mode: unit IS the row; late detection must precede sampling
+    _, evicted_keys = capacity_split_units(units, cfg)
+    on_time_rows = windowed.filter(~invalid_key())
+    if late_units is not None:
+        on_time_rows = _filter_late_rows(on_time_rows, late_units)
+    winners = sample_rows(
+        on_time_rows, cfg.size_k, ["conv_id", "turn_idx"], "window_start_s",
+        cfg.weight_col, cfg.seed, cfg.salt_buckets, cfg.method, cfg.priority,
     )
-    return routed, winners
+    win_keys = winners.select(
+        "window_start_s", "conv_id", "turn_idx"
+    ).withColumn("_won", F.lit(True))
+    routed = windowed.join(
+        F.broadcast(win_keys),
+        on=["window_start_s", "conv_id", "turn_idx"],
+        how="left",
+    )
+    winners = winners.select(
+        "window_start_s", "conv_id", "ares_key", "prio_int",
+        F.lit(1).cast("long").alias("n_turns"),
+    )
+    return apply_routing(routed, late_units, evicted_keys), winners
 
 
 def apply_routing(
     routed: DataFrame,
-    invalid,
     late_units: "DataFrame | None" = None,
     evicted_keys: "DataFrame | None" = None,
     expired=None,
-    broadcast_late: bool = True,
+    violated=None,
 ) -> DataFrame:
-    """Shared routing tail: turn a fact frame carrying a `_won` flag into
-    the single sink/reason-labelled frame. Used by the batch plan, the
-    checkpoint finalize, and the streaming rollover export so the three
-    paths cannot drift.
+    """The routing rule table: turn a fact frame carrying a `_won` flag
+    into the single sink/reason-labelled frame. Every mode reaches it
+    through one call (`route_units`, or the simple-mode branch of
+    `build_routed`), so the modes cannot drift.
 
+    Rules, first match wins:
+      invalid_key()      -> dlq(invalid_key)
+      violated           -> dlq(span_violation)
+      expired            -> overflow(window_expired)
+      late (late_units)  -> dlq(late)
+      evicted_keys       -> overflow(capacity)
+      _won               -> sampled_traces
+      otherwise          -> overflow(unsampled)
+
+    `violated` (optional Column) marks conversations observed to break the
+    declared `max_conv_span_s` bound: their late classification is
+    unreliable, so the streaming rollover routes them out explicitly.
     `expired` (optional Column) marks rows of windows already closed at
-    restore time (W3, processor.go:155-174): they route to
-    overflow(reason='window_expired') instead of being re-exported as
-    sampled — the explicit replacement for the reference's silent
-    stale-state discard, without its restore double-count (§2.11.3).
+    restore time (W3, processor.go:155-174): they route to overflow instead
+    of being re-exported as sampled — the explicit replacement for the
+    reference's silent stale-state discard, without its restore
+    double-count (§2.11.3). A rule whose input is None never matches.
 
-    All decision inputs are conv-level broadcast sets or pure column
-    predicates — the fact is never shuffled here. `broadcast_late=False`
-    (cfg.extra["late_strategy"]="shuffle") switches the late-unit join to a
-    shuffle join for workloads with pathological late fractions whose late
-    set exceeds broadcast limits; AQE's skew-join handles hot conversations
-    there."""
+    All decision inputs are conv-level sets or pure column predicates.
+    The winner and eviction sets are broadcast by hint. The late-unit set
+    is not: its size follows the late-conversation count, so the planner
+    broadcasts it by size (and AQE by its runtime size). At bounded late
+    counts, perfbench's batch_skewed included, that plans the same
+    BroadcastHashJoin as a hint, and a set too large to broadcast gets a
+    shuffle join instead of a driver-side broadcast build."""
+    late = None
     if late_units is not None:
-        late_frame = late_units.withColumnRenamed("status", "_late_status")
-        if broadcast_late:
-            late_frame = F.broadcast(late_frame)
         routed = routed.join(
-            late_frame,
+            late_units.withColumnRenamed("status", "_late_status"),
             on=["window_start_s", "conv_id"],
             how="left",
         )
-        late = (F.col("_late_status") == "all_late") | (
-            (F.col("_late_status") == "boundary")
-            & (F.unix_timestamp("ts") < F.col("cutoff_s"))
+        late = F.coalesce(
+            (F.col("_late_status") == "all_late")
+            | (
+                (F.col("_late_status") == "boundary")
+                & (F.unix_timestamp("ts") < F.col("cutoff_s"))
+            ),
+            F.lit(False),
         )
-        late = F.coalesce(late, F.lit(False))
-    else:
-        routed = routed.withColumn("_late_status", F.lit(None).cast("string"))
-        late = F.lit(False)
 
+    evicted = None
     if evicted_keys is not None:
         routed = routed.join(
             F.broadcast(evicted_keys.withColumn("_evicted", F.lit(True))),
             on=["window_start_s", "conv_id"],
             how="left",
         )
-    else:
-        routed = routed.withColumn("_evicted", F.lit(None).cast("boolean"))
+        evicted = F.col("_evicted")
 
-    if expired is None:
-        expired = F.lit(False)
-
-    sink = (
-        F.when(invalid, F.lit("dlq"))
-        .when(expired, F.lit("overflow"))
-        .when(late, F.lit("dlq"))
-        .when(F.col("_evicted"), F.lit("overflow"))
-        .when(F.col("_won"), F.lit("sampled_traces"))
-        .otherwise(F.lit("overflow"))
-    )
-    reason = (
-        F.when(invalid, F.lit("invalid_key"))
-        .when(expired, F.lit("window_expired"))
-        .when(late, F.lit("late"))
-        .when(F.col("_evicted"), F.lit("capacity"))
-        .when(F.col("_won"), F.lit(None).cast("string"))
-        .otherwise(F.lit("unsampled"))
-    )
+    invalid = invalid_key()
+    sink = F.when(invalid, F.lit("dlq"))
+    reason = F.when(invalid, F.lit("invalid_key"))
+    for cond, s, r in (
+        (violated, "dlq", "span_violation"),
+        (expired, "overflow", "window_expired"),
+        (late, "dlq", "late"),
+        (evicted, "overflow", "capacity"),
+        (F.col("_won"), "sampled_traces", None),
+    ):
+        if cond is not None:
+            sink = sink.when(cond, F.lit(s))
+            reason = reason.when(cond, F.lit(r).cast("string"))
     return (
-        routed.withColumn("sink", sink)
-        .withColumn("reason", reason)
+        routed.withColumn("sink", sink.otherwise(F.lit("overflow")))
+        .withColumn("reason", reason.otherwise(F.lit("unsampled")))
         .drop("_won", "_evicted", "_late_status", "cutoff_s")
     )
 
@@ -604,12 +619,16 @@ def write_sinks(result: PipelineResult, out_dir: str) -> "dict[str, int]":
     directory and becomes visible only at the atomic pointer swap, so a
     killed write never leaves a half-overwritten table readable. Read the
     results with plans.commit.read_committed."""
-    from trace_aware_reservoir_otel_spark.operators.metrics import observed_routed
+    from trace_aware_reservoir_otel_spark.operators.metrics import (
+        SINKS,
+        observed_counts,
+        observed_routed,
+    )
     from trace_aware_reservoir_otel_spark.plans import commit
 
     observed, obs = observed_routed(result.routed)
     version = commit_routed(observed, result.cfg, out_dir)
-    vals = obs.get
+    vals = observed_counts(obs)
     result.unpersist()
     # commit_routed's layout: the routed columns plus the bucket partition
     schema = T.StructType(
@@ -625,10 +644,6 @@ def write_sinks(result: PipelineResult, out_dir: str) -> "dict[str, int]":
         ),
         f"{out_dir}/metrics",
     )
-    counts = {  # a sum over zero rows observes NULL
-        "sampled_traces": int(vals["rows_sampled"] or 0),
-        "overflow": int(vals["rows_overflow"] or 0),
-        "dlq": int(vals["rows_dlq"] or 0),
-        "metrics": int(mobs.get["n"]),
-    }
-    return {k: v for k, v in counts.items() if k == "metrics" or v > 0}
+    counts = {s: vals[s] for s in SINKS if vals[s] > 0}
+    counts["metrics"] = int(mobs.get["n"])
+    return counts

@@ -25,11 +25,13 @@ The Spark-native analog:
    replay-order-free (this is what fixes the reference's restore
    double-count, §2.11.3, by construction);
  - resume = read manifest, skip done units, compute the rest, finalize:
-   merge partials -> late classification (global conv starts) -> capacity
-   -> winners -> one routed pass with broadcast winner/kept/late sets ->
-   sinks + metrics. Lateness cannot be decided inside a slice (a
-   conversation's first turn may live in another slice), so it moves to
-   finalize, where the merged unit frame has the global picture;
+   merge partials -> late classification (global conv starts) -> one
+   routed pass -> sinks + metrics. The routed pass is the batch plan's own
+   routing step, `plans.pipeline.route_units` (capacity, winners, the
+   broadcast winner join and `apply_routing`), over rows from the shared
+   `plans.pipeline.prepare` chain. Lateness cannot be decided inside a
+   slice (a conversation's first turn may live in another slice), so it
+   moves to finalize, where the merged unit frame has the global picture;
  - W3 window-expiry guard (processor.go:155-174, checkpoint.go:294-299):
    `finalize(expire_before_s=...)` drops state whose window already closed
    before the restore horizon — those windows' rows route to
@@ -52,25 +54,23 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from trace_aware_reservoir_otel_spark import fsutil
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
+from trace_aware_reservoir_otel_spark.operators.metrics import (
+    SINKS,
+    observed_counts,
+    observed_routed,
+)
 from trace_aware_reservoir_otel_spark.plans import commit
-from trace_aware_reservoir_otel_spark.functions.parse import with_parsed_fields
-from trace_aware_reservoir_otel_spark.operators.enrich import enrich
-from trace_aware_reservoir_otel_spark.operators.windows import with_tumbling_window
 from trace_aware_reservoir_otel_spark.session import local_frame
 from trace_aware_reservoir_otel_spark.plans.pipeline import (
     _merge_pre,
     _unit_pre_aggregate,
     _units_from_pre,
-    apply_routing,
-    capacity_and_winners,
     commit_routed,
+    invalid_key,
+    prepare,
+    require_trace_aware,
+    route_units,
 )
-
-
-def _prepared(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    return with_tumbling_window(
-        enrich(with_parsed_fields(transcripts)), "ts", cfg.window_duration_s
-    )
 
 
 def _manifest_path(state_dir: str) -> str:
@@ -154,12 +154,10 @@ def process_unit(
     routed pass classifies them as invalid/windowless downstream)."""
     lo, hi = bounds
     pred = slice_predicate(lo, hi, include_null_ts=(unit == 0))
-    sliced = transcripts.filter(
-        pred & F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
-    )
+    sliced = transcripts.filter(pred & ~invalid_key())
     obs = Observation(f"unit_{unit}_rows")
     observed = sliced.observe(obs, F.count(F.lit(1)).alias("n"))
-    pre = _unit_pre_aggregate(_prepared(observed, cfg), cfg)
+    pre = _unit_pre_aggregate(prepare(observed, cfg), cfg)
     out = pre.withColumn("unit_id", F.lit(unit).cast("int")).withColumn(
         "run_id", F.lit(cfg.run_id)
     )
@@ -194,21 +192,22 @@ def finalize(
     expire_before_s: "int | None" = None,
 ) -> "dict[str, int]":
     """Merge all units' partials into global winners and run the single
-    routed pass. Pure function of the state table — replay order of units
-    never matters. Sink counts come from the Observation attached to the
-    write (no re-read of written output)."""
+    routed pass through the shared routing step (`route_units`). Pure
+    function of the state table — replay order of units never matters.
+    Sink counts come from the Observation attached to the write (no
+    re-read of written output)."""
+    require_trace_aware(cfg, "finalize")
     pre = _merge_pre(
         spark.read.parquet(f"{state_dir}/units").drop("unit_id", "run_id"), cfg
     )
 
-    prepared = _prepared(transcripts, cfg)
-    invalid = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
-    valid = prepared.filter(~invalid)
-
+    prepared = prepare(transcripts, cfg)
     persisted: "list[DataFrame]" = []
-    units, late_units = _units_from_pre(pre, valid, cfg, persisted)
+    units, late_units = _units_from_pre(
+        pre, prepared.filter(~invalid_key()), cfg, persisted
+    )
 
-    expired = F.lit(False)
+    expired = None
     if expire_before_s is not None:
         w = int(cfg.window_duration_s)
         expired = F.col("window_start_s") + F.lit(w) <= F.lit(int(expire_before_s))
@@ -216,38 +215,14 @@ def finalize(
         if late_units is not None:
             late_units = late_units.filter(~expired)
 
-    kept_units, evicted_keys, winners = capacity_and_winners(units, cfg)
-
-    routed = prepared.join(
-        F.broadcast(
-            winners.select("window_start_s", "conv_id").withColumn(
-                "_won", F.lit(True)
-            )
-        ),
-        on=["window_start_s", "conv_id"],
-        how="left",
-    )
-    routed = apply_routing(routed, invalid, late_units, evicted_keys, expired)
-
-    obs = Observation("finalize_sinks")
-    observed = routed.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_total"),
-        *[
-            F.sum((F.col("sink") == s).cast("long")).alias(s)
-            for s in ("sampled_traces", "overflow", "dlq")
-        ],
-    )
+    routed, _ = route_units(prepared, units, late_units, cfg, expired=expired)
+    observed, obs = observed_routed(routed)
     # snapshot-commit (plans/commit.py): the routed table becomes readable
     # only at the atomic pointer swap — a kill mid-write leaves readers on
     # the previous complete snapshot, never a half-overwritten partition
     commit_routed(observed, cfg, out_dir)
-    vals = obs.get
-    counts = {
-        s: int(vals[s])
-        for s in ("sampled_traces", "overflow", "dlq")
-        if int(vals[s]) > 0
-    }
+    vals = observed_counts(obs)
+    counts = {s: vals[s] for s in SINKS if vals[s] > 0}
     commit.commit_write(
         local_frame(
             spark,
@@ -273,6 +248,7 @@ def run_with_checkpoint(
 ) -> "dict[str, int] | None":
     """Process all pending units (skipping manifest-complete ones), then
     finalize. `fail_after_unit` simulates a mid-run crash for tests."""
+    require_trace_aware(cfg, "run_with_checkpoint")
     os.makedirs(state_dir, exist_ok=True)
     saved = read_bounds(state_dir)
     if saved is not None and saved["n_units"] != n_units:

@@ -14,8 +14,9 @@ Spark-first, the same semantics in two pieces:
    bucket `plans.pipeline._bucket_expr` defines for every mode); when the
    event-time high watermark passes a bucket's rollover horizon, that
    bucket's rows are routed with state read from ONLY its own partitions
-   (winners/capacity/invalid via the SAME apply_routing as the batch
-   plan), written with per-bucket dynamic partition overwrite —
+   (through the batch plan's own routing step, `plans.pipeline.route_units`,
+   over rows from the shared `plans.pipeline.prepare` chain), written with
+   per-bucket dynamic partition overwrite —
    idempotent under micro-batch replay — and its state is vacuumed.
    `flush_incremental` routes whatever buckets remain open at stream end.
    Union of all rollover exports == the batch pipeline's routed output on
@@ -54,7 +55,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from trace_aware_reservoir_otel_spark import fsutil
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
-from trace_aware_reservoir_otel_spark.plans.pipeline import _bucket_expr, _bucket_span_s
+from trace_aware_reservoir_otel_spark.plans.pipeline import (
+    _bucket_expr,
+    _bucket_span_s,
+    invalid_key,
+    prepare,
+    require_trace_aware,
+)
 from trace_aware_reservoir_otel_spark.schema import TRANSCRIPTS_SCHEMA
 from trace_aware_reservoir_otel_spark.session import local_frame
 
@@ -300,7 +307,7 @@ def _spill_schema(spark: SparkSession, cfg: PipelineConfig) -> T.StructType:
     """The spill table's schema, partition columns included, from
     analysing the per-batch plan over an empty local frame. Reading spill
     with it skips parquet schema inference, a Spark job per read."""
-    batch = _prepared_batch(local_frame(spark, [], TRANSCRIPTS_SCHEMA), cfg)
+    batch = prepare(local_frame(spark, [], TRANSCRIPTS_SCHEMA), cfg)
     return T.StructType(
         batch.schema.fields
         + [
@@ -332,15 +339,12 @@ def _read_state_buckets(
 
 
 def _write_convstart(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
-    """Per-batch conversation-start partials — the compact conv-level
-    index (O(conversations), ~10^3x smaller than the fact) that lets a
-    bucket-restricted rollover classify lateness against GLOBAL root-turn
-    timestamps. min/max merges are idempotent, so batch replay and
-    compaction cannot double-count."""
-    valid = batch_df.filter(
-        F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
-    )
-    cs = valid.groupBy("conv_id").agg(
+    """Per-batch conversation-start partials of the batch's valid rows —
+    the compact conv-level index (O(conversations), ~10^3x smaller than
+    the fact) that lets a bucket-restricted rollover classify lateness
+    against GLOBAL root-turn timestamps. min/max merges are idempotent, so
+    batch replay and compaction cannot double-count."""
+    cs = batch_df.filter(~invalid_key()).groupBy("conv_id").agg(
         F.min("turn_idx").alias("min_turn"),
         F.min(F.struct(F.col("turn_idx"), F.unix_timestamp("ts").alias("_t")))[
             "_t"
@@ -450,16 +454,6 @@ def _scale_batch(batch_df: DataFrame) -> DataFrame:
     return batch_df
 
 
-def _prepared_batch(batch_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    from trace_aware_reservoir_otel_spark.functions.parse import with_parsed_fields
-    from trace_aware_reservoir_otel_spark.operators.enrich import enrich
-    from trace_aware_reservoir_otel_spark.operators.windows import with_tumbling_window
-
-    return with_tumbling_window(
-        enrich(with_parsed_fields(batch_df)), "ts", cfg.window_duration_s
-    )
-
-
 def _vacuum_exported(state_dir: str, buckets: "list") -> None:
     """Delete exported buckets' spill leaf directories. Runs AFTER the
     mark, so a crash in between leaves inert extra state (filtered out by
@@ -549,10 +543,13 @@ def _route_buckets(
 ) -> None:
     """Route the given (closed) export buckets' spilled rows using state
     read from ONLY those buckets' partitions, and write them with
-    per-bucket dynamic partition overwrite — replay-idempotent. Shares
-    apply_routing / winner derivation (still per WINDOW — buckets are a
-    layout unit, not a semantic one) with the batch plan, so the paths
-    cannot drift.
+    per-bucket dynamic partition overwrite — replay-idempotent. Routing is
+    the batch plan's own step, `plans.pipeline.route_units` (winners still
+    per WINDOW — buckets are a layout unit, not a semantic one), so the
+    paths cannot drift. With lateness and a `max_conv_span_s` bound on,
+    conversations the conv-start index shows violating the bound are
+    passed in as `route_units(violated=...)`: they route to
+    dlq(span_violation), since their late classification is unreliable.
 
     Scale shape: per roll this reads the closing buckets' spill
     (explicit leaf paths, `spill_schema` so no inference job) plus, when
@@ -561,13 +558,14 @@ def _route_buckets(
     Commit order: routed write -> metrics record (Observation counts) ->
     exported marks -> vacuum; a crash between any two steps re-routes the
     same buckets idempotently on restart."""
-    from pyspark.sql import Observation
-
+    from trace_aware_reservoir_otel_spark.operators.metrics import (
+        observed_counts,
+        observed_routed,
+    )
     from trace_aware_reservoir_otel_spark.plans.pipeline import (
         _unit_pre_aggregate,
         _units_from_pre,
-        apply_routing,
-        capacity_and_winners,
+        route_units,
     )
 
     if not buckets:
@@ -577,8 +575,7 @@ def _route_buckets(
         _mark_exported(state_dir, buckets, batch_id)
         return
     rows = spill.drop("batch_id", "window_bucket")
-    invalid = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
-    valid = rows.filter(~invalid)
+    valid = rows.filter(~invalid_key())
     persisted: "list[DataFrame]" = []
     starts = None
     if cfg.late_tolerance_s is not None:
@@ -589,48 +586,15 @@ def _route_buckets(
     units, late_units = _units_from_pre(
         _unit_pre_aggregate(valid, cfg), valid, cfg, persisted, conv_starts=starts
     )
-    kept_units, evicted_keys, winners = capacity_and_winners(units, cfg)
-    routed = rows.join(
-        F.broadcast(
-            winners.select("window_start_s", "conv_id").withColumn(
-                "_won", F.lit(True)
-            )
-        ),
-        on=["window_start_s", "conv_id"],
-        how="left",
-    )
-    routed = apply_routing(routed, invalid, late_units, evicted_keys)
-
-    if (
-        cfg.late_tolerance_s is not None
-        and cfg.max_conv_span_s is not None
-        and starts is not None
-    ):
-        # conversations already violating the declared span bound have
-        # unreliable late classification — route them out explicitly
-        # (dlq/span_violation) instead of exporting a stale decision
+    violated = None
+    if starts is not None and cfg.max_conv_span_s is not None:
         violators = starts.filter(
             F.col("max_ts_s") - F.col("min_ts_s") > F.lit(float(cfg.max_conv_span_s))
         ).select("conv_id", F.lit(True).alias("_span_viol"))
-        routed = routed.join(F.broadcast(violators), on="conv_id", how="left")
-        viol = F.coalesce(F.col("_span_viol"), F.lit(False)) & ~invalid
-        routed = (
-            routed.withColumn(
-                "reason", F.when(viol, F.lit("span_violation")).otherwise(F.col("reason"))
-            )
-            .withColumn("sink", F.when(viol, F.lit("dlq")).otherwise(F.col("sink")))
-            .drop("_span_viol")
-        )
-
-    obs = Observation(f"roll_{batch_id}")
-    observed = routed.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_total"),
-        *[
-            F.sum((F.col("sink") == s).cast("long")).alias(s)
-            for s in ("sampled_traces", "overflow", "dlq")
-        ],
-    )
+        rows = rows.join(F.broadcast(violators), on="conv_id", how="left")
+        violated = F.col("_span_viol")
+    routed, _ = route_units(rows, units, late_units, cfg, violated=violated)
+    observed, obs = observed_routed(routed.drop("_span_viol"))
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
@@ -641,17 +605,15 @@ def _route_buckets(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     for df in persisted:
         df.unpersist()
-    vals = obs.get
+    # fields rows_total, sampled_traces, overflow, dlq: the names
+    # incremental_conservation and streaming_metrics read
     fsutil.upsert_jsonl_atomic(
         _metrics_path(state_dir),
         {
             "type": "export",
             "buckets": buckets,
             "batch_id": batch_id,
-            "rows_total": int(vals["rows_total"]),
-            "sampled_traces": int(vals["sampled_traces"] or 0),
-            "overflow": int(vals["overflow"] or 0),
-            "dlq": int(vals["dlq"] or 0),
+            **observed_counts(obs),
         },
         key_fields=("type", "buckets"),
     )
@@ -743,6 +705,7 @@ def run_incremental_routed(
     tolerance set but NO span bound, conversation starts can move
     arbitrarily late, so export defers to `flush_incremental` — same
     output, one pass later."""
+    require_trace_aware(cfg, "run_incremental_routed")
     stream = stream_transcripts(spark, input_dir, max_files_per_trigger)
     rolling = cfg.late_tolerance_s is None or cfg.max_conv_span_s is not None
     spill_schema = _spill_schema(spark, cfg)
@@ -770,7 +733,7 @@ def run_incremental_routed(
         # re-reads this batch's spill.
         from pyspark.sql import Observation
 
-        prepared = _prepared_batch(_scale_batch(batch_df), cfg)
+        prepared = prepare(_scale_batch(batch_df), cfg)
         spill_dir = f"{state_dir}/spill/batch_id={batch_id}"
         obs = Observation(f"spill_{batch_id}")
         spill = prepared.observe(
@@ -795,11 +758,9 @@ def run_incremental_routed(
         mx = vals["mx"] if n > 0 else None
         if counts and cfg.late_tolerance_s is not None:
             # the written schema is known: no inference job
-            spill_df = spark.read.schema(spill.schema).parquet(spill_dir)
-            valid = spill_df.filter(
-                F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
+            _write_convstart(
+                spark.read.schema(spill.schema).parquet(spill_dir), batch_id, state_dir
             )
-            _write_convstart(valid, batch_id, state_dir)
             root = f"{state_dir}/convstart"
             n_partials = sum(
                 1 for d in os.listdir(root) if d.startswith("batch_id=")
@@ -855,6 +816,8 @@ def flush_incremental(
 
     import glob as _glob
 
+    require_trace_aware(cfg, "flush_incremental")
+    spill_schema = _spill_schema(spark, cfg)
     epoch = _read_epoch(state_dir)
     done = _exported_buckets(state_dir)
     # epoch records plus an on-disk scan: a folded record's only
@@ -868,9 +831,7 @@ def flush_incremental(
         int(k) for rec in epoch for k in rec.get("bucket_counts", {})
     } | disk
     remaining = sorted(b for b in seen if b not in done)
-    _route_buckets(
-        spark, cfg, state_dir, out_dir, remaining, None, _spill_schema(spark, cfg)
-    )
+    _route_buckets(spark, cfg, state_dir, out_dir, remaining, None, spill_schema)
 
     # stragglers: exported buckets' spill leaf dirs written by batches
     # AFTER the export (vacuum at export time removed everything earlier)
@@ -886,8 +847,10 @@ def flush_incremental(
                     strag_paths.append(p)
     if not strag_paths:
         return
-    stragglers = spark.read.option("basePath", f"{state_dir}/spill").parquet(
-        *strag_paths
+    stragglers = (
+        spark.read.schema(spill_schema)
+        .option("basePath", f"{state_dir}/spill")
+        .parquet(*strag_paths)
     )
     obs = Observation("stragglers")
     (
