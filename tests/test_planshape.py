@@ -122,6 +122,54 @@ def test_metrics_commit_does_not_rerun_routed_plan(spark, tmp_path, monkeypatch)
     assert "BroadcastHashJoin" not in plan, plan
 
 
+def test_late_join_broadcast_without_size_estimate(spark):
+    """The late-unit join is broadcast by hint, not by the planner's size
+    estimate: that estimate grows with the fact row count, so an unhinted
+    late join turns into a fact-side SortMergeJoin on large inputs. With
+    size-based broadcasting switched off, every routed join must still
+    be a broadcast."""
+    tr = generate_transcripts(spark, n_convs=300, seed=7)
+    cfg = PipelineConfig(
+        size_k=8, window_duration_s=60, seed=42, buffer_max_convs=20,
+        late_tolerance_s=3600.0,
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        routed, _ = build_routed(tr, cfg)
+        plan = _plan_of(routed)
+    finally:
+        spark.conf.set(key, saved)
+    assert "SortMergeJoin" not in plan, plan
+
+
+def test_checkpoint_unit_aggregate_skips_enrich(spark, tmp_path, monkeypatch):
+    """A checkpoint unit aggregates the raw windowed slice, as the batch
+    plan's unit branch does: no dimension join and no text column in the
+    plan of its unit pre-aggregate."""
+    from trace_aware_reservoir_otel_spark.plans import state
+
+    path = str(tmp_path / "tr")
+    generate_transcripts(spark, n_convs=100, seed=3).write.parquet(path)
+    tr = spark.read.parquet(path)
+    cfg = PipelineConfig(size_k=8, window_duration_s=60, seed=42)
+    seen = []
+    pre_aggregate = state._unit_pre_aggregate
+
+    def recording(rows, c):
+        seen.append(pre_aggregate(rows, c))
+        return seen[-1]
+
+    monkeypatch.setattr(state, "_unit_pre_aggregate", recording)
+    bounds = state.unit_bounds(tr, cfg, 1)[0]
+    state.process_unit(tr, cfg, str(tmp_path / "st"), 0, bounds)
+    plan = _plan_of(seen[0])
+    assert "BroadcastHashJoin" not in plan, plan
+    schemas = [l for l in plan.splitlines() if "ReadSchema:" in l]
+    assert schemas and not any("text" in l for l in schemas), schemas
+
+
 def test_ivf_assign_plan_has_no_join_or_exchange(spark):
     """ivf_assign must be a single projection (literal-fold argmax): a
     join/explode/groupBy shape would materialize rows x n_centroids

@@ -38,5 +38,11 @@ def observed_counts(obs: Observation) -> "dict[str, int]":
     return {k: int(v or 0) for k, v in obs.get.items()}
 
 
+def sink_counts(obs: Observation) -> "dict[str, int]":
+    """Rows per non-empty sink, from the observed counters."""
+    vals = observed_counts(obs)
+    return {s: vals[s] for s in SINKS if vals[s] > 0}
+
+
 def conservation_ok(counts: dict) -> bool:
     return sum(counts[s] for s in SINKS) == counts["rows_total"]

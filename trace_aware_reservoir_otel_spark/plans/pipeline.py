@@ -126,6 +126,20 @@ def prepare(
     return enrich(parse(windowed), dim_role, dim_tool)
 
 
+def unit_source(
+    transcripts: DataFrame, prepared: DataFrame, cfg: PipelineConfig
+) -> DataFrame:
+    """The frame unit aggregation reads. It reads only (conv, turn, ts[,
+    weight]), so it gets the raw windowed frame: the scan prunes to those
+    columns and parse/enrich never run in the aggregation branch, unless
+    the sampling weight is itself a parsed or enriched column of
+    `prepared`."""
+    raw = with_tumbling_window(transcripts, "ts", cfg.window_duration_s)
+    if cfg.weight_col is not None and cfg.weight_col not in raw.columns:
+        return prepared
+    return raw
+
+
 def _with_unit_priorities(units: DataFrame, cfg: PipelineConfig, weighted: bool) -> DataFrame:
     from trace_aware_reservoir_otel_spark.functions.hashing import (
         TWO_POW_52,
@@ -386,16 +400,7 @@ def build_routed(
     given, frames this plan persists are appended so the caller can
     unpersist them after its final action."""
     windowed = prepare(transcripts, cfg, dim_role, dim_tool, use_pandas_parse)
-
-    # unit aggregation reads only (conv, turn, ts[, weight]) — feed it the
-    # raw windowed frame so the scan prunes to those columns and the
-    # parse/enrich work never runs in the aggregation branch (unless the
-    # sampling weight itself is a parsed/enriched column)
-    windowed_raw = with_tumbling_window(transcripts, "ts", cfg.window_duration_s)
-    unit_src = windowed if (
-        cfg.weight_col is not None and cfg.weight_col not in windowed_raw.columns
-    ) else windowed_raw
-    valid = unit_src.filter(~invalid_key())
+    valid = unit_source(transcripts, windowed, cfg).filter(~invalid_key())
 
     units, late_units = _units_from_pre(
         _unit_pre_aggregate(valid, cfg), valid, cfg, persisted_out
@@ -469,17 +474,18 @@ def apply_routing(
     reference's silent stale-state discard, without its restore
     double-count (§2.11.3). A rule whose input is None never matches.
 
-    All decision inputs are conv-level sets or pure column predicates.
-    The winner and eviction sets are broadcast by hint. The late-unit set
-    is not: its size follows the late-conversation count, so the planner
-    broadcasts it by size (and AQE by its runtime size). At bounded late
-    counts, perfbench's batch_skewed included, that plans the same
-    BroadcastHashJoin as a hint, and a set too large to broadcast gets a
-    shuffle join instead of a driver-side broadcast build."""
+    All decision inputs are conv-level sets broadcast by hint, or pure
+    column predicates, so the fact is never shuffled here. The hint on the
+    late-unit set is unconditional: the unit frame is persisted but not yet
+    materialized when this plan is planned, so without it the planner sizes
+    the set from its cached plan (an aggregate over the fact scan) and
+    plans a fact-side shuffle join once the input is large. The late set
+    scales with the late-CONVERSATION count; at 40M conversations with 2%
+    late, its driver-side broadcast build was measured at ~17s."""
     late = None
     if late_units is not None:
         routed = routed.join(
-            late_units.withColumnRenamed("status", "_late_status"),
+            F.broadcast(late_units.withColumnRenamed("status", "_late_status")),
             on=["window_start_s", "conv_id"],
             how="left",
         )
@@ -620,15 +626,14 @@ def write_sinks(result: PipelineResult, out_dir: str) -> "dict[str, int]":
     killed write never leaves a half-overwritten table readable. Read the
     results with plans.commit.read_committed."""
     from trace_aware_reservoir_otel_spark.operators.metrics import (
-        SINKS,
-        observed_counts,
         observed_routed,
+        sink_counts,
     )
     from trace_aware_reservoir_otel_spark.plans import commit
 
     observed, obs = observed_routed(result.routed)
     version = commit_routed(observed, result.cfg, out_dir)
-    vals = observed_counts(obs)
+    counts = sink_counts(obs)
     result.unpersist()
     # commit_routed's layout: the routed columns plus the bucket partition
     schema = T.StructType(
@@ -644,6 +649,5 @@ def write_sinks(result: PipelineResult, out_dir: str) -> "dict[str, int]":
         ),
         f"{out_dir}/metrics",
     )
-    counts = {s: vals[s] for s in SINKS if vals[s] > 0}
     counts["metrics"] = int(mobs.get["n"])
     return counts

@@ -15,8 +15,10 @@ The Spark-native analog:
    also consumes the stream once, in time order;
  - per unit, the engine writes the `_unit_pre_aggregate` partials for its
    slice — the per-(window, conv) associative reduction the batch plan
-   computes anyway (plans/pipeline.py). Because slices align to window
-   boundaries, every (window, conv) unit lands wholly in one slice. State
+   computes anyway, over the same raw windowed rows
+   (`plans.pipeline.unit_source`: no parse or enrich). Because slices
+   align to window boundaries, every (window, conv) unit lands wholly in
+   one slice. State
    volume is O(conversation-windows), ~10^3x smaller than the fact and
    identical to the unit frame the uninterrupted plan persists;
  - because A-Res priorities are pure functions of (seed, window, conv),
@@ -55,9 +57,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from trace_aware_reservoir_otel_spark import fsutil
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
 from trace_aware_reservoir_otel_spark.operators.metrics import (
-    SINKS,
-    observed_counts,
     observed_routed,
+    sink_counts,
 )
 from trace_aware_reservoir_otel_spark.plans import commit
 from trace_aware_reservoir_otel_spark.session import local_frame
@@ -70,6 +71,7 @@ from trace_aware_reservoir_otel_spark.plans.pipeline import (
     prepare,
     require_trace_aware,
     route_units,
+    unit_source,
 )
 
 
@@ -157,7 +159,8 @@ def process_unit(
     sliced = transcripts.filter(pred & ~invalid_key())
     obs = Observation(f"unit_{unit}_rows")
     observed = sliced.observe(obs, F.count(F.lit(1)).alias("n"))
-    pre = _unit_pre_aggregate(prepare(observed, cfg), cfg)
+    rows = unit_source(observed, prepare(observed, cfg), cfg)
+    pre = _unit_pre_aggregate(rows, cfg)
     out = pre.withColumn("unit_id", F.lit(unit).cast("int")).withColumn(
         "run_id", F.lit(cfg.run_id)
     )
@@ -196,7 +199,6 @@ def finalize(
     function of the state table — replay order of units never matters.
     Sink counts come from the Observation attached to the write (no
     re-read of written output)."""
-    require_trace_aware(cfg, "finalize")
     pre = _merge_pre(
         spark.read.parquet(f"{state_dir}/units").drop("unit_id", "run_id"), cfg
     )
@@ -221,8 +223,7 @@ def finalize(
     # only at the atomic pointer swap — a kill mid-write leaves readers on
     # the previous complete snapshot, never a half-overwritten partition
     commit_routed(observed, cfg, out_dir)
-    vals = observed_counts(obs)
-    counts = {s: vals[s] for s in SINKS if vals[s] > 0}
+    counts = sink_counts(obs)
     commit.commit_write(
         local_frame(
             spark,
