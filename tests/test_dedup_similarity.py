@@ -605,76 +605,6 @@ def test_ivf_assign_chunked_fold_matches_crossjoin_argmax(spark):
     assert got == want
 
 
-def test_ivf_index_append_equals_frozen_centroid_rebuild(spark, tmp_path_factory):
-    """Incremental refresh: appending a batch assigns ONLY the new rows
-    against the committed (frozen) centroids and lands as a delta
-    snapshot. Probing the appended index over the grown corpus must equal
-    assigning the grown corpus from scratch with the SAME centroids; the
-    composed fingerprint must validate clean (no spurious rebuild); and a
-    large append must raise the drift flag."""
-    from trace_aware_reservoir_otel_spark.operators import similarity as sim
-    from trace_aware_reservoir_otel_spark.plans import commit
-
-    idx = str(tmp_path_factory.mktemp("ivf_append")) + "/index"
-    base = spark.createDataFrame(
-        [(i, [float(i % 7), float(i % 3), 1.0]) for i in range(60)],
-        "vec_id long, embedding array<float>",
-    )
-    batch = spark.createDataFrame(
-        [(100 + i, [float(i % 5), 2.0, float(i % 2)]) for i in range(20)],
-        "vec_id long, embedding array<float>",
-    )
-    grown = base.unionByName(batch)
-    q = [1.0, 1.0, 0.5]
-
-    sim.ivf_index(base, idx, n_centroids=4, seed=42)
-    res = sim.ivf_index_append(batch, idx)
-    assert res["appended_rows"] == 20 and res["assign_version"] == 2
-    assert res["rebuild_recommended"] is False  # 20 < 0.5 * 60
-
-    # O(batch), not O(table): version 2 is a delta holding only the batch
-    v2 = spark.read.parquet(f"{idx}/assign/_versions/v00000002")
-    assert v2.count() == 20
-    assert sorted(r["vec_id"] for r in v2.select("vec_id").collect()) == sorted(
-        r["vec_id"] for r in batch.select("vec_id").collect()
-    )
-
-    # probe equivalence vs a frozen-centroid full assignment of the grown corpus
-    got = sim.ann_topk_ivf(
-        grown, q, k=8, n_centroids=4, nprobe=2, seed=42, index_dir=idx
-    ).collect()
-    assert commit.current_version(f"{idx}/assign") == 2, "probe must not rebuild"
-    cents = commit.read_committed(spark, f"{idx}/centroids")
-    probe_ids = sim.ivf_probe_ids(spark, idx, q, nprobe=2)
-    from pyspark.sql import functions as F
-
-    cand = (
-        sim.ivf_assign(grown, cents)
-        .filter(F.col("centroid_id").isin(probe_ids))
-        .select("vec_id")
-    )
-    want = sim.cosine_topk(
-        grown.join(cand, "vec_id", "left_semi"), q, k=8
-    ).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-    # validation after append composes: fingerprint of the grown corpus
-    # equals the incrementally-composed record (memo cleared = new process)
-    sim._IVF_VALIDATED.discard(idx)
-    sim.ann_topk_ivf(
-        grown, q, k=8, n_centroids=4, nprobe=2, seed=42, index_dir=idx
-    ).collect()
-    assert commit.current_version(f"{idx}/assign") == 2, "composed fp must validate"
-
-    # drift guard: appending past rebuild_fraction of the built-from rows
-    big = spark.createDataFrame(
-        [(500 + i, [3.0, float(i % 4), 1.0]) for i in range(50)],
-        "vec_id long, embedding array<float>",
-    )
-    res2 = sim.ivf_index_append(big, idx)
-    assert res2["rebuild_recommended"] is True  # (20+50) > 0.5 * 60
-
-
 def test_dup_span_stats_positional_and_cross_doc(spark):
     from trace_aware_reservoir_otel_spark.operators.dedup import dup_span_stats
 

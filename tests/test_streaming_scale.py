@@ -1,7 +1,8 @@
 """Continuous-run scale properties of the streaming fan-out: per-roll IO
 bounded by the closing windows (never the exported history), vacuum of
-exported state, crash-before-mark recovery, and mid-stream rollover under
-bounded lateness (late_tolerance_s + max_conv_span_s)."""
+exported state, crash recovery before the export record and inside
+manifest compaction, and mid-stream rollover under bounded lateness
+(late_tolerance_s + max_conv_span_s)."""
 
 import os
 
@@ -119,10 +120,11 @@ def test_vacuum_removes_exported_state(spark, tmp_path_factory):
 
 
 def test_crash_before_mark_recovers_idempotently(spark, tmp_path_factory):
-    """Commit order is write -> metrics -> mark -> vacuum: killing the job
-    between the routed write and its mark must, on restart, re-route the
-    same windows onto the same partitions (overwrite) with no duplicates
-    and conservation intact."""
+    """Commit order is routed write -> export record -> vacuum, and the
+    export record is the buckets' mark: killing the job between the
+    routed write and its record must, on restart, re-route the same
+    windows onto the same partitions (overwrite) with no duplicates and
+    conservation intact."""
     import trace_aware_reservoir_otel_spark.streaming.pipeline as sp
 
     cfg = PipelineConfig(
@@ -136,21 +138,22 @@ def test_crash_before_mark_recovers_idempotently(spark, tmp_path_factory):
     ck = os.path.join(base, "ck")
     out = os.path.join(base, "out")
 
-    real_mark = sp._mark_exported
+    real_record = sp._record_export
     calls = {"n": 0}
 
-    def crashing_mark(state_dir, windows, batch_id):
-        if windows and calls["n"] == 0:
+    def crashing_record(state_dir, buckets, batch_id, counts):
+        if buckets and calls["n"] == 0:
             calls["n"] += 1
             raise RuntimeError("simulated crash between sink write and mark")
-        real_mark(state_dir, windows, batch_id)
+        real_record(state_dir, buckets, batch_id, counts)
 
-    sp._mark_exported = crashing_mark
+    sp._record_export = crashing_record
     try:
         with pytest.raises(Exception, match="simulated crash"):
             run_incremental_routed(spark, in_dir, cfg, state, ck, out)
     finally:
-        sp._mark_exported = real_mark
+        sp._record_export = real_record
+    assert calls["n"] == 1
     assert _exported_buckets(state) == {}  # crash preceded every mark
 
     # restart on the same checkpoint: the uncommitted batch replays
@@ -160,6 +163,73 @@ def test_crash_before_mark_recovers_idempotently(spark, tmp_path_factory):
     exp = _routed_histogram(run_pipeline(df, cfg).routed)
     assert got == exp
     rows_in, rows_out = incremental_conservation(spark, state, out)
+    assert rows_in == rows_out == df.count()
+
+
+def test_crash_inside_manifest_compaction_recovers(
+    spark, tmp_path_factory, monkeypatch
+):
+    """compact_manifests appends the folded records' marks to
+    exported.jsonl, then rewrites metrics.jsonl. A crash between the two
+    leaves those records open and marked twice with the same batch id; a
+    restart must read exactly what an uninterrupted run reads."""
+    cfg = PipelineConfig(
+        size_k=5, window_duration_s=60, seed=42, late_tolerance_s=None,
+        export_bucket_windows=2,
+    )
+    base = str(tmp_path_factory.mktemp("stream_compact_crash"))
+    df = generate_transcripts(spark, n_convs=150, seed=7)
+    in_dir = _write_time_sliced(spark, base, cfg, df, n_files=12)
+
+    def run(name):
+        state = os.path.join(base, name, "state")
+        out = os.path.join(base, name, "out")
+        run_incremental_routed(
+            spark, in_dir, cfg, state, os.path.join(base, name, "ck"), out,
+            manifest_compact_threshold=3,
+        )
+        return state, out
+
+    def observed(state, out):
+        flush_incremental(spark, cfg, state, out)
+        return (
+            _exported_buckets(state),
+            incremental_conservation(spark, state, out),
+            {
+                r["metric"]: r["value"]
+                for r in streaming_metrics(spark, state).collect()
+            },
+            _routed_histogram(spark.read.parquet(f"{out}/routed")),
+        )
+
+    expected = observed(*run("clean"))
+
+    real_write = fsutil.write_jsonl_atomic
+
+    def crashing_write(path, records):
+        if os.path.basename(path) == "metrics.jsonl":
+            raise RuntimeError("simulated crash inside compaction")
+        real_write(path, records)
+
+    monkeypatch.setattr(fsutil, "write_jsonl_atomic", crashing_write)
+    with pytest.raises(Exception, match="simulated crash"):
+        run("crash")
+    monkeypatch.setattr(fsutil, "write_jsonl_atomic", real_write)
+    state = os.path.join(base, "crash", "state")
+    marks = fsutil.read_jsonl(os.path.join(state, "exported.jsonl"))
+    assert marks, "the crash must fall after the marks were appended"
+    still_open = {
+        (b, r["batch_id"])
+        for r in fsutil.read_jsonl(_metrics_path(state))
+        if r["type"] == "export"
+        for b in r["buckets"]
+    }
+    assert {(m["bucket"], m["batch_id"]) for m in marks} <= still_open
+
+    # restart on the same checkpoint: the uncommitted batch replays
+    state, out = run("crash")
+    assert observed(state, out) == expected
+    rows_in, rows_out = expected[1]
     assert rows_in == rows_out == df.count()
 
 
@@ -344,8 +414,8 @@ def test_convstart_compaction_preserves_lateness(spark, tmp_path_factory):
 
 
 def test_read_exported_gates_on_marks(spark, tmp_path_factory):
-    """The manifest-gated reader returns exactly the marked windows'
-    rows; an unmarked (in-flight / crashed) window's partition is
+    """The manifest-gated reader returns exactly the marked buckets'
+    rows; an unmarked (in-flight / crashed) export's partitions are
     invisible to consumers even if files exist on disk."""
     from trace_aware_reservoir_otel_spark.streaming.pipeline import read_exported
 
@@ -364,21 +434,21 @@ def test_read_exported_gates_on_marks(spark, tmp_path_factory):
     flush_incremental(spark, cfg, state, out)
     assert read_exported(spark, state, out).count() == df.count()
 
-    # simulate an in-flight window: drop its mark — the reader must
-    # exclude it even though the partition files remain on disk
-    marks = fsutil.read_jsonl(os.path.join(state, "exported.jsonl"))
-    dropped = marks[-1]["bucket"]
-    fsutil.write_jsonl_atomic(
-        os.path.join(state, "exported.jsonl"),
-        [m for m in marks if m["bucket"] != dropped],
-    )
+    # simulate an in-flight export: drop its record, which is its buckets'
+    # mark — the reader must exclude every one of its buckets even though
+    # the partition files remain on disk
+    recs = fsutil.read_jsonl(_metrics_path(state))
+    last = max(i for i, r in enumerate(recs) if r["type"] == "export")
+    dropped = [int(b) for b in recs[last]["buckets"]]
+    fsutil.write_jsonl_atomic(_metrics_path(state), recs[:last] + recs[last + 1 :])
     visible = read_exported(spark, state, out)
-    assert visible.filter(F.col("window_bucket") == int(dropped)).count() == 0
+    assert visible.filter(F.col("window_bucket").isin(dropped)).count() == 0
     n_dropped = (
         spark.read.parquet(f"{out}/routed")
-        .filter(F.col("window_bucket") == int(dropped))
+        .filter(F.col("window_bucket").isin(dropped))
         .count()
     )
+    assert n_dropped > 0
     assert visible.count() == df.count() - n_dropped
 
 

@@ -1032,6 +1032,7 @@ def _q_flagship_via_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trace_aware_reservoir_otel_spark.sources.tables import transcripts_from_events
     from trace_aware_reservoir_otel_spark.streaming.pipeline import (
         flush_incremental,
+        read_exported,
         run_incremental_routed,
     )
 
@@ -1072,7 +1073,8 @@ def _q_flagship_via_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_files_per_trigger=max(1, len(files) // 2),
         )
         flush_incremental(spark, cfg, f"{work}/state", f"{work}/out")
-        routed = spark.read.parquet(f"{work}/out/routed")
+        # through the marks gate, as a consumer reads it
+        routed = read_exported(spark, f"{work}/state", f"{work}/out")
         out = routed.filter(F.col("sink") == "sampled_traces").select(
             "conv_id",
             "turn_idx",

@@ -37,11 +37,6 @@ HEX_DIGITS = 13
 TWO_POW_52 = float(2**52)
 
 
-def _key_str(*cols: "Column | str") -> Column:
-    parts = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.concat_ws("", *[p.cast("string") for p in parts])
-
-
 def phex(key: "Column | str", seed: int) -> Column:
     """32-char md5 hex of (seed, key) — the portable entropy source."""
     key = F.col(key) if isinstance(key, str) else key
@@ -83,10 +78,6 @@ def fast_prio_int(seed: int, *cols: "Column | str") -> Column:
     return F.shiftrightunsigned(F.xxhash64(F.lit(seed), *parts), 12)
 
 
-def fast_u01(seed: int, *cols: "Column | str") -> Column:
-    return (fast_prio_int(seed, *cols).cast("double") + F.lit(0.5)) / F.lit(TWO_POW_52)
-
-
 def row_key_hash(*cols: "Column | str") -> Column:
     """64-bit row identity — analog of hashSpanKey (span_utils.go:25-44).
 
@@ -114,22 +105,3 @@ def duck_pbig(key_sql: str, seed: int) -> str:
 def duck_u(key_sql: str, seed: int) -> str:
     return f"((cast({duck_pbig(key_sql, seed)} as double) + 0.5) / {TWO_POW_52!r})"
 
-
-def duck_ares_key(key_sql: str, seed: int, weight_sql: "str | None" = None) -> str:
-    if weight_sql is None:
-        return f"(- ln({duck_u(key_sql, seed)}))"
-    return f"(- ln({duck_u(key_sql, seed)}) / cast({weight_sql} as double))"
-
-
-# Spark SQL (string) variants, for spark.sql()-composed contract queries.
-
-
-def spark_sql_pbig(key_sql: str, seed: int) -> str:
-    return (
-        f"cast(conv(substring(md5('{seed}:' || cast({key_sql} as string)), 1, "
-        f"{HEX_DIGITS}), 16, 10) as bigint)"
-    )
-
-
-def spark_sql_u(key_sql: str, seed: int) -> str:
-    return f"((cast({spark_sql_pbig(key_sql, seed)} as double) + 0.5d) / {TWO_POW_52!r}d)"

@@ -91,16 +91,6 @@ def _fake_feature(payload: bytes) -> "list[float]":
     return [c / total for c in buckets]
 
 
-def decode_image(payload: bytes) -> None:
-    """Compressed-image decoder entry point — JPEG/PNG/WebP require codec
-    libraries (PIL/opencv), absent in this container. Uncompressed formats
-    (BMP, PPM) decode for real via `decode_bmp` / `decode_ppm` below."""
-    raise NotImplementedError(
-        "compressed image decode requires PIL/opencv (not in this "
-        "container); BMP/PPM decode natively via decode_bmp/decode_ppm"
-    )
-
-
 # --- real pure-Python decoders for uncompressed formats ------------------------
 #
 # WAV (RIFF/PCM), BMP (BITMAPINFOHEADER), and PPM (P6) are fully specified

@@ -644,63 +644,6 @@ def ivf_index(
     return {"centroids": v_cent, "assign": v_assign}
 
 
-def ivf_index_append(
-    df_new: DataFrame,
-    index_dir: str,
-    rebuild_fraction: float = 0.5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_digits: int = 6,
-) -> "dict":
-    """Incrementally refresh a materialized IVF index with a batch of new
-    vectors: assign ONLY the new rows against the committed centroids and
-    append them as a delta snapshot (commit_append) — O(batch) work, never
-    a corpus rescan. The stored corpus fingerprint is composed
-    incrementally (count adds; bit_xor of xxhash64 is xor-composable), so
-    a subsequent `ann_topk_ivf(corpus_old ∪ batch, index_dir=...)` probe
-    validates clean without a rebuild.
-
-    Centroid drift guard: appends never move centroids, so cell balance
-    degrades as the corpus grows past what the centroids were sampled
-    from. When cumulative appended rows exceed `rebuild_fraction` of the
-    rows the centroids were BUILT from, the caller should rebuild — this
-    function signals it via {"rebuild_recommended": True} (it cannot
-    rebuild itself: it only sees the new batch, not the full corpus).
-
-    Equivalence contract (tested): probing the appended index equals
-    probing a from-scratch index of the grown corpus built with the SAME
-    (frozen) centroids — assignment is per-row and centroid-deterministic,
-    so delta-assign ∪ old-assign == full-assign."""
-    from trace_aware_reservoir_otel_spark import fsutil
-    from trace_aware_reservoir_otel_spark.plans import commit
-
-    spark = df_new.sparkSession
-    cents = commit.read_committed(spark, f"{index_dir}/centroids")
-    assigned = ivf_assign(df_new, cents, vec_col, id_col, round_digits)
-    version = commit.commit_append(
-        assigned, f"{index_dir}/assign", partition_by=["centroid_id"]
-    )
-
-    fp_path = os.path.join(index_dir, _FINGERPRINT_FILE)
-    stored = fsutil.read_jsonl(fp_path)
-    delta = corpus_fingerprint(df_new, vec_col, id_col)
-    rec = dict(stored[-1]) if stored else {"rows": 0, "xor": 0}
-    base_rows = rec.get("base_rows", rec["rows"])  # rows at last full build
-    rec["rows"] = rec["rows"] + delta["rows"]
-    rec["xor"] = rec["xor"] ^ delta["xor"]
-    rec["base_rows"] = base_rows
-    fsutil.write_jsonl_atomic(fp_path, [rec])
-    _IVF_VALIDATED.discard(index_dir)  # next probe re-validates the composition
-
-    appended_total = rec["rows"] - base_rows
-    return {
-        "assign_version": version,
-        "appended_rows": delta["rows"],
-        "rebuild_recommended": base_rows > 0
-        and appended_total > rebuild_fraction * base_rows,
-    }
-
-
 def ivf_probe_ids(
     spark,
     index_dir: str,

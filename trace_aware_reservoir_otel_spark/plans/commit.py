@@ -31,8 +31,10 @@ Used by the batch sink writers (plans/pipeline.write_sinks,
 plans/state.finalize), which both write the routed table partitioned by
 (sink, window_bucket). The streaming rollover keeps per-bucket dynamic
 partition overwrite instead: its commit unit is one export-bucket
-partition (written exactly once per export mark), where a whole-table
-snapshot swap would re-copy every previously exported bucket each roll.
+partition, and its one commit point is the export's record in the
+stream's `metrics.jsonl`, which is also the buckets' mark
+(streaming/pipeline._route_buckets). A snapshot commit per roll would be
+a second commit point beside that record.
 """
 
 from __future__ import annotations

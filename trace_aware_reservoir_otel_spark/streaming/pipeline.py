@@ -19,6 +19,10 @@ Spark-first, the same semantics in two pieces:
    per-bucket dynamic partition overwrite —
    idempotent under micro-batch replay — and its state is vacuumed.
    `flush_incremental` routes whatever buckets remain open at stream end.
+   Each export commits at ONE point: routed write -> export record in
+   `metrics.jsonl` (its Observation counts, which also mark its buckets
+   exported) -> vacuum. Readers (`read_exported`, conservation, the
+   straggler scan) resolve the marks through `_exported_buckets`.
    Union of all rollover exports == the batch pipeline's routed output on
    the same input, for inputs that respect the declared `max_conv_span_s`
    (when lateness + a span bound are on). A conversation that violates the
@@ -34,7 +38,8 @@ asserted in tests/test_streaming_scale.py):
  - roll decisions come from a tiny driver-side epoch manifest (per-batch
    row counts, per-window membership, high watermark) — zero state-table
    reads per roll;
- - per-roll IO is O(closing buckets) via explicit leaf-directory reads;
+ - per-roll IO is O(closing buckets) via explicit leaf-directory reads,
+   found by one listing of the open spill leafs (`_spill_leaves`);
    summed over the stream's life, spill is read exactly ONCE;
  - exported buckets' spill partitions are vacuumed, so state volume
    is O(open buckets) + the compact conv-start index;
@@ -44,7 +49,9 @@ asserted in tests/test_streaming_scale.py):
    bound violators route to dlq/span_violation). With tolerance but no
    span bound, export defers to flush — same output, one pass later;
  - conservation/metrics come from Observations attached to the routed
-   writes, persisted in a metrics manifest — never a re-read of output.
+   writes, persisted in a metrics manifest — never a re-read of output;
+   per-roll manifest IO is O(open records): `exported.jsonl` is
+   rewritten only when `compact_manifests` folds export records.
 """
 
 from __future__ import annotations
@@ -86,28 +93,32 @@ def _bucket_of(w, cfg: PipelineConfig):
 
 def _exported_buckets(state_dir: str) -> "dict":
     """bucket -> batch_id at whose roll it was exported (None = flush).
-    Keep-LAST per bucket: a re-export after a lost mark supersedes."""
+    An export's metrics record is its buckets' mark: the open export
+    records in `metrics.jsonl` overlay the marks that `compact_manifests`
+    moved to `exported.jsonl` when it folded their records."""
     out: "dict" = {}
     for rec in fsutil.read_jsonl(os.path.join(state_dir, "exported.jsonl")):
         out[rec["bucket"]] = rec.get("batch_id")
+    for rec in fsutil.read_jsonl(_metrics_path(state_dir)):
+        if rec.get("type") == "export":
+            for b in rec["buckets"]:
+                out[b] = rec["batch_id"]
     return out
 
 
-def _mark_exported(state_dir: str, buckets: "list", batch_id: "int | None") -> None:
-    # atomic replace (fsutil): a crash between the sink write and this mark
-    # leaves the previous manifest complete, so restart re-routes the same
-    # buckets onto the same partitions — idempotent overwrite, never a
-    # torn manifest line.
-    # Growth: one record per export BUCKET (= export_bucket_windows
-    # windows ≈ half an hour of event time at defaults), kept for the
-    # stream's life — readers (read_exported), conservation, and the
-    # straggler scan all need the full map. A year-long stream is ~2*10^4
-    # records (~1 MB rewrite per roll) — three orders of magnitude below
-    # the per-BATCH manifests that compact_manifests folds; revisit with
-    # the same summary pattern only if bucket cadence is cranked way up.
-    fsutil.append_jsonl_atomic(
-        os.path.join(state_dir, "exported.jsonl"),
-        [{"bucket": b, "batch_id": batch_id} for b in buckets],
+def _record_export(
+    state_dir: str, buckets: "list", batch_id: "int | None", counts: dict
+) -> None:
+    """The export's one commit point: an atomic upsert (fsutil) of its
+    metrics record, which also marks its buckets exported. A crash before
+    it leaves no mark, so restart re-routes the same buckets onto the same
+    partitions (idempotent overwrite). `counts` carries rows_total,
+    sampled_traces, overflow and dlq: the fields incremental_conservation
+    and streaming_metrics read."""
+    fsutil.upsert_jsonl_atomic(
+        _metrics_path(state_dir),
+        {"type": "export", "buckets": buckets, "batch_id": batch_id, **counts},
+        key_fields=("type", "buckets"),
     )
 
 
@@ -162,10 +173,13 @@ def compact_manifests(state_dir: str) -> "tuple[int, int]":
     vacuumed, it can contribute no stragglers, its buckets are in the
     done-set) — except the NEWEST record, kept as the replay fence (a
     replayed micro-batch is always the latest uncommitted one; folding it
-    would double-count its rows when the replay re-upserts). A metrics
-    export record folds when its buckets' marks still point at it (it
-    "counts") under the same fence; a superseded record (marks moved) is
-    dead and is dropped. Returns (epoch_folded, metrics_folded)."""
+    would double-count its rows when the replay re-upserts). Every
+    mid-stream export record older than the fence folds into the metrics
+    summary. Its buckets' marks are appended to `exported.jsonl` first,
+    then `metrics.jsonl` is rewritten: a crash between the two leaves the
+    record open and marked twice with the same batch id, which reads the
+    same, and the next compaction folds it again. Returns
+    (epoch_folded, metrics_folded)."""
     records = _read_epoch(state_dir)
     if not records:
         return (0, 0)
@@ -177,7 +191,7 @@ def compact_manifests(state_dir: str) -> "tuple[int, int]":
             return False
         counts = rec.get("bucket_counts", {})
         # the null-window bucket (-1) never exports mid-stream, but its
-        # state discovery is filesystem-keyed (_state_leaf_dirs), not
+        # state discovery is filesystem-keyed (_spill_leaves), not
         # epoch-keyed, so a record holding only -1 plus exported buckets
         # is safe to fold — flush finds the -1 leafs by listing
         return all(
@@ -191,7 +205,6 @@ def compact_manifests(state_dir: str) -> "tuple[int, int]":
         )
 
     fold = [r for r in records if closed(r)]
-    n_epoch = len(fold)
     if fold:
         s = _epoch_summary(state_dir)
         s["n_batches"] += len(fold)
@@ -205,52 +218,42 @@ def compact_manifests(state_dir: str) -> "tuple[int, int]":
         keep = [r for r in records if r["batch_id"] not in folded_ids]
         fsutil.write_jsonl_atomic(_epoch_path(state_dir), [s] + keep)
 
-    n_metrics = 0
-    mrecs = fsutil.read_jsonl(_metrics_path(state_dir))
-    if mrecs:
-        summary = None
-        keep_m: "list[dict]" = []
-        fold_m: "list[dict]" = []
-        dead = 0
-        for rec in mrecs:
-            t = rec.get("type")
-            if t == "summary":
-                summary = rec
-            elif t == "export":
-                counts_now = all(
-                    done.get(b) == rec["batch_id"] for b in rec["buckets"]
-                )
-                if not counts_now and rec["batch_id"] is not None and any(
-                    b in done and done[b] != rec["batch_id"] for b in rec["buckets"]
-                ):
-                    dead += 1  # superseded by a later re-export: drop
-                elif counts_now and (
-                    rec["batch_id"] is not None and rec["batch_id"] < fence
-                ):
-                    fold_m.append(rec)
-                else:
-                    keep_m.append(rec)
-            else:
-                keep_m.append(rec)
-        n_metrics = len(fold_m)
-        if fold_m or dead:
-            if summary is None:
-                summary = {
-                    "type": "summary",
-                    "n_exports": 0,
-                    "rows_total": 0,
-                    "sampled_traces": 0,
-                    "overflow": 0,
-                    "dlq": 0,
-                }
-            for rec in fold_m:
-                summary["n_exports"] += 1
-                for k in ("rows_total", "sampled_traces", "overflow", "dlq"):
-                    summary[k] += rec.get(k, 0)
-            fsutil.write_jsonl_atomic(
-                _metrics_path(state_dir), [summary] + keep_m
-            )
-    return (n_epoch, n_metrics)
+    summary = None
+    keep_m: "list[dict]" = []
+    fold_m: "list[dict]" = []
+    for rec in fsutil.read_jsonl(_metrics_path(state_dir)):
+        if rec.get("type") == "summary":
+            summary = rec
+        elif rec.get("type") == "export" and (
+            rec["batch_id"] is not None and rec["batch_id"] < fence
+        ):
+            fold_m.append(rec)
+        else:
+            keep_m.append(rec)
+    if fold_m:
+        if summary is None:
+            summary = {
+                "type": "summary",
+                "n_exports": 0,
+                "rows_total": 0,
+                "sampled_traces": 0,
+                "overflow": 0,
+                "dlq": 0,
+            }
+        for rec in fold_m:
+            summary["n_exports"] += 1
+            for k in ("rows_total", "sampled_traces", "overflow", "dlq"):
+                summary[k] += rec.get(k, 0)
+        fsutil.append_jsonl_atomic(
+            os.path.join(state_dir, "exported.jsonl"),
+            [
+                {"bucket": b, "batch_id": r["batch_id"]}
+                for r in fold_m
+                for b in r["buckets"]
+            ],
+        )
+        fsutil.write_jsonl_atomic(_metrics_path(state_dir), [summary] + keep_m)
+    return (len(fold), len(fold_m))
 
 
 def _metrics_summary(state_dir: str) -> "dict | None":
@@ -283,24 +286,19 @@ def _bucket_counts_from_footers(batch_dir: str) -> "dict[str, int]":
     return counts
 
 
-def _state_leaf_dirs(state_dir: str, buckets: "list") -> "list[str]":
-    """Spill leaf directories (batch_id=N/window_bucket=B) holding the
-    given buckets' rows — discovered by a bucket-keyed directory listing, so it
-    works regardless of whether the writing batches' epoch records were
-    already folded into the summary. O(open batch dirs): vacuum removes
-    emptied batch dirs, so the listing never grows with stream age."""
+def _spill_leaves(state_dir: str) -> "list[tuple[int, int, str]]":
+    """Every spill leaf directory as (batch_id, bucket, path), from ONE
+    directory listing — so leaf discovery works whether or not the writing
+    batches' epoch records were already folded into the summary.
+    O(open leafs): vacuum removes exported leafs and leafless batch dirs,
+    so the listing never grows with stream age."""
     import glob as _glob
 
-    paths: "list[str]" = []
-    for b in buckets:
-        paths.extend(
-            p
-            for p in _glob.glob(
-                f"{state_dir}/spill/batch_id=*/window_bucket={int(b)}"
-            )
-            if os.path.isdir(p)
-        )
-    return paths
+    out = []
+    for p in _glob.glob(f"{state_dir}/spill/batch_id=*/window_bucket=*"):
+        bdir, leaf = p.split(os.sep)[-2:]
+        out.append((int(bdir.split("=", 1)[1]), int(leaf.split("=", 1)[1]), p))
+    return out
 
 
 def _spill_schema(spark: SparkSession, cfg: PipelineConfig) -> T.StructType:
@@ -328,7 +326,8 @@ def _read_state_buckets(
     data is structurally impossible, not merely optimizer-pruned. basePath
     keeps the partition columns. Returns None when nothing exists (e.g.
     already vacuumed)."""
-    paths = _state_leaf_dirs(state_dir, buckets)
+    want = set(buckets)
+    paths = [p for _, b, p in _spill_leaves(state_dir) if b in want]
     if not paths:
         return None
     return (
@@ -454,43 +453,34 @@ def _scale_batch(batch_df: DataFrame) -> DataFrame:
     return batch_df
 
 
+def _vacuum(state_dir: str, drop) -> None:
+    """Delete the spill leafs for which `drop(batch_id, bucket)` holds,
+    then every leafless batch dir: an empty micro-batch writes none, and
+    without the sweep its dir would stay in every later listing."""
+    import shutil
+
+    live = set()
+    for bid, b, p in _spill_leaves(state_dir):
+        if drop(bid, b):
+            shutil.rmtree(p)
+        else:
+            live.add(bid)
+    root = os.path.join(state_dir, "spill")
+    if not os.path.isdir(root):
+        return
+    for bdir in os.listdir(root):
+        if bdir.startswith("batch_id=") and int(bdir.split("=", 1)[1]) not in live:
+            shutil.rmtree(os.path.join(root, bdir), ignore_errors=True)
+
+
 def _vacuum_exported(state_dir: str, buckets: "list") -> None:
     """Delete exported buckets' spill leaf directories. Runs AFTER the
-    mark, so a crash in between leaves inert extra state (filtered out by
-    the done-set on every later roll), never missing state. Spill written
-    by LATER batches (stragglers) lands in new leaf dirs and survives
-    until flush routes it to dlq."""
-    import shutil
-
-    root = os.path.join(state_dir, "spill")
-    if not os.path.isdir(root):
-        return
-    keys = {str(int(b)) for b in buckets}
-    for bdir in os.listdir(root):
-        if not bdir.startswith("batch_id="):
-            continue
-        for key in keys:
-            leaf = os.path.join(root, bdir, f"window_bucket={key}")
-            if os.path.isdir(leaf):
-                shutil.rmtree(leaf)
-    _prune_empty_batch_dirs(state_dir)
-
-
-def _prune_empty_batch_dirs(state_dir: str) -> None:
-    """Remove spill batch_id= dirs whose every leaf was vacuumed, so the
-    bucket-keyed directory listings (_state_leaf_dirs, flush's disk scan)
-    stay O(open batches) over the stream's life."""
-    import shutil
-
-    root = os.path.join(state_dir, "spill")
-    if not os.path.isdir(root):
-        return
-    for bdir in os.listdir(root):
-        if not bdir.startswith("batch_id="):
-            continue
-        p = os.path.join(root, bdir)
-        if not any(e.startswith("window_bucket=") for e in os.listdir(p)):
-            shutil.rmtree(p, ignore_errors=True)
+    export record, so a crash in between leaves inert extra state
+    (re-vacuumed by `_revacuum_done` on the next roll), never missing
+    state. Spill written by LATER batches (stragglers) lands in new leaf
+    dirs and survives until flush routes it to dlq."""
+    gone = set(buckets)
+    _vacuum(state_dir, lambda bid, b: b in gone)
 
 
 def _revacuum_done(state_dir: str, done: "dict") -> None:
@@ -500,36 +490,12 @@ def _revacuum_done(state_dir: str, done: "dict") -> None:
     that was already exported+vacuumed; the straggler scan only looks at
     batch_id > mark, so without this sweep those dirs leak forever —
     correct counts, but state volume would quietly stop being O(open
-    buckets)."""
-    import shutil
-
-    marked = {str(int(b)): bid for b, bid in done.items() if bid is not None}
-    root = os.path.join(state_dir, "spill")
-    if not marked or not os.path.isdir(root):
-        return
-    # Cost discipline: this runs on every roll, so it must be O(open
-    # on-disk state), never O(all marks ever). Iterate the leafs that
-    # actually exist in each (bounded, pruned) open batch dir and look
-    # each up in the mark map — not the mark map against every batch dir.
-    # Common case (no replay happened): every open batch dir is newer than
-    # every mark, and the max-mark guard skips the listdir walk entirely.
-    max_mark = max(marked.values())
-    pruned = False
-    for bdir in os.listdir(root):
-        if not bdir.startswith("batch_id="):
-            continue
-        k = int(bdir.split("=", 1)[1])
-        if k > max_mark:
-            continue  # written after every mark: cannot be a replay leak
-        for entry in os.listdir(os.path.join(root, bdir)):
-            if not entry.startswith("window_bucket="):
-                continue
-            bid = marked.get(entry.split("=", 1)[1])
-            if bid is not None and k <= bid:
-                shutil.rmtree(os.path.join(root, bdir, entry))
-                pruned = True
-    if pruned:
-        _prune_empty_batch_dirs(state_dir)
+    buckets). Runs on every roll, so it costs one listing of the open
+    leafs, never a walk over all marks ever."""
+    _vacuum(
+        state_dir,
+        lambda bid, b: done.get(b) is not None and bid <= done[b],
+    )
 
 
 def _route_buckets(
@@ -553,12 +519,15 @@ def _route_buckets(
 
     Scale shape: per roll this reads the closing buckets' spill
     (explicit leaf paths, `spill_schema` so no inference job) plus, when
-    lateness is on, the compact conv-start index — never the full state history. Summed over a
-    stream's life the spill reads are exactly ONE pass over the input.
-    Commit order: routed write -> metrics record (Observation counts) ->
-    exported marks -> vacuum; a crash between any two steps re-routes the
-    same buckets idempotently on restart."""
+    lateness is on, the compact conv-start index — never the full state
+    history. Summed over a stream's life the spill reads are exactly ONE
+    pass over the input.
+    Commit order: routed write -> export record (Observation counts; the
+    buckets' mark) -> vacuum. A crash before the record re-routes the same
+    buckets idempotently on restart; a crash after it leaves spill that
+    the next roll's `_revacuum_done` removes."""
     from trace_aware_reservoir_otel_spark.operators.metrics import (
+        SINKS,
         observed_counts,
         observed_routed,
     )
@@ -572,7 +541,10 @@ def _route_buckets(
         return
     spill = _read_state_buckets(spark, state_dir, buckets, spill_schema)
     if spill is None:
-        _mark_exported(state_dir, buckets, batch_id)
+        _record_export(
+            state_dir, buckets, batch_id,
+            dict.fromkeys(("rows_total", *SINKS), 0),
+        )
         return
     rows = spill.drop("batch_id", "window_bucket")
     valid = rows.filter(~invalid_key())
@@ -595,29 +567,14 @@ def _route_buckets(
         violated = F.col("_span_viol")
     routed, _ = route_units(rows, units, late_units, cfg, violated=violated)
     observed, obs = observed_routed(routed.drop("_span_viol"))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        observed.withColumn("window_bucket", _bucket_expr(cfg)).write.mode(
-            "overwrite"
-        ).partitionBy("window_bucket").parquet(f"{out_dir}/routed")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    observed.withColumn("window_bucket", _bucket_expr(cfg)).write.mode(
+        "overwrite"
+    ).option("partitionOverwriteMode", "dynamic").partitionBy(
+        "window_bucket"
+    ).parquet(f"{out_dir}/routed")
     for df in persisted:
         df.unpersist()
-    # fields rows_total, sampled_traces, overflow, dlq: the names
-    # incremental_conservation and streaming_metrics read
-    fsutil.upsert_jsonl_atomic(
-        _metrics_path(state_dir),
-        {
-            "type": "export",
-            "buckets": buckets,
-            "batch_id": batch_id,
-            **observed_counts(obs),
-        },
-        key_fields=("type", "buckets"),
-    )
-    _mark_exported(state_dir, buckets, batch_id)
+    _record_export(state_dir, buckets, batch_id, observed_counts(obs))
     _vacuum_exported(state_dir, buckets)
 
 
@@ -694,9 +651,9 @@ def run_incremental_routed(
     event-time high watermark go to the epoch manifest (one tiny record
     per batch). Buckets past the rollover horizon are routed reading only
     their own spill partitions (units aggregate from those rows) and their
-    spill is vacuumed after the export mark — state volume is O(open buckets), per-roll IO is O(closing
-    buckets), and the stream's total spill reads are ONE pass over the
-    input however long it runs.
+    spill is vacuumed after the export record — state volume is O(open
+    buckets), per-roll IO is O(closing buckets), and the stream's total
+    spill reads are ONE pass over the input however long it runs.
 
     Lateness: with late_tolerance_s set and max_conv_span_s declared,
     rollover still fires mid-stream (horizon extended by
@@ -814,37 +771,20 @@ def flush_incremental(
     Observation, and they balance `incremental_conservation`."""
     from pyspark.sql import Observation
 
-    import glob as _glob
-
     require_trace_aware(cfg, "flush_incremental")
     spill_schema = _spill_schema(spark, cfg)
-    epoch = _read_epoch(state_dir)
     done = _exported_buckets(state_dir)
-    # epoch records plus an on-disk scan: a folded record's only
-    # unexported state is the null-window bucket (-1), whose leafs the
-    # listing recovers (leaf discovery is filesystem-keyed)
-    disk = {
-        int(os.path.basename(p).split("=", 1)[1])
-        for p in _glob.glob(f"{state_dir}/spill/batch_id=*/window_bucket=*")
-    }
-    seen = {
-        int(k) for rec in epoch for k in rec.get("bucket_counts", {})
-    } | disk
-    remaining = sorted(b for b in seen if b not in done)
+    # the leaf listing, not the epoch: a folded record's unexported state
+    # (the null-window bucket -1) is found on disk all the same
+    leaves = _spill_leaves(state_dir)
+    remaining = sorted({b for _, b, _ in leaves if b not in done})
     _route_buckets(spark, cfg, state_dir, out_dir, remaining, None, spill_schema)
 
     # stragglers: exported buckets' spill leaf dirs written by batches
     # AFTER the export (vacuum at export time removed everything earlier)
-    strag_paths = []
-    for bv, bid in done.items():
-        if bid is None:
-            continue
-        key = str(int(bv))
-        for rec in epoch:
-            if rec["batch_id"] > bid and key in rec.get("bucket_counts", {}):
-                p = f"{state_dir}/spill/batch_id={rec['batch_id']}/window_bucket={key}"
-                if os.path.isdir(p):
-                    strag_paths.append(p)
+    strag_paths = [
+        p for bid, b, p in leaves if done.get(b) is not None and bid > done[b]
+    ]
     if not strag_paths:
         return
     stragglers = (
@@ -873,25 +813,14 @@ def incremental_conservation(
 ) -> "tuple[int, int]":
     """(rows_in, rows_routed) — equal iff every row was routed exactly
     once (the metrics gate, metrics.go:47-142). rows_in sums the epoch
-    manifest; rows_routed sums the per-export metrics records, whose
-    counts came from Observations attached to the routed writes — actual
-    output-side evidence with ZERO re-reads of written parquet. A metrics
-    record counts only while its buckets' current export marks still
-    point at it (a re-export after a lost mark supersedes the stale
-    record)."""
+    manifest; rows_routed sums `rows_total` over every metrics record
+    (summary, exports, stragglers), whose counts came from Observations
+    attached to the routed writes — actual output-side evidence with ZERO
+    re-reads of written parquet. Each bucket has exactly one export
+    record, since the record is the bucket's mark."""
     epoch = _read_epoch(state_dir)
     rows_in = _epoch_summary(state_dir)["rows_in"] + sum(r["rows_in"] for r in epoch)
-    done = _exported_buckets(state_dir)
-    rows_out = 0
-    for rec in fsutil.read_jsonl(_metrics_path(state_dir)):
-        if rec.get("type") == "summary":
-            rows_out += rec["rows_total"]  # folded records all counted
-            continue
-        if rec.get("type") == "stragglers":
-            rows_out += rec["rows_total"]
-            continue
-        if all(done.get(b) == rec["batch_id"] for b in rec["buckets"]):
-            rows_out += rec["rows_total"]
+    rows_out = sum(r["rows_total"] for r in fsutil.read_jsonl(_metrics_path(state_dir)))
     return rows_in, rows_out
 
 
@@ -901,21 +830,17 @@ def streaming_metrics(spark: SparkSession, state_dir: str) -> DataFrame:
     the manifests' Observation-backed records, no state re-reads."""
     epoch = _read_epoch(state_dir)
     summary = _epoch_summary(state_dir)
-    done = _exported_buckets(state_dir)
     sinks = {"sampled_traces": 0, "overflow": 0, "dlq": 0}
     for rec in fsutil.read_jsonl(_metrics_path(state_dir)):
-        if rec.get("type") == "summary":
-            for s in sinks:
-                sinks[s] += rec.get(s, 0)
-        elif rec.get("type") == "stragglers":
+        if rec.get("type") == "stragglers":
             sinks["dlq"] += rec["rows_total"]
-        elif all(done.get(b) == rec["batch_id"] for b in rec["buckets"]):
+        else:
             for s in sinks:
                 sinks[s] += rec.get(s, 0)
     rows = [
         ("epochs", float(summary["n_batches"] + len(epoch))),
         ("rows_in", float(summary["rows_in"] + sum(r["rows_in"] for r in epoch))),
-        ("buckets_exported", float(len(done))),
+        ("buckets_exported", float(len(_exported_buckets(state_dir)))),
         *[(f"rows_{s}", float(n)) for s, n in sinks.items()],
     ]
     return local_frame(spark, rows, "metric string, value double")
@@ -926,8 +851,8 @@ def read_exported(spark: SparkSession, state_dir: str, out_dir: str) -> DataFram
     consumer-side half of the commit story (the Iceberg pattern: readers
     resolve the manifest, never glob the directory). Only bucket
     partitions with an export mark are read, so a consumer can never
-    observe a bucket whose write is still in flight (the mark lands after
-    the write) or was abandoned by a crash. Explicit leaf paths with
+    observe a bucket whose write is still in flight (the export record
+    lands after the write) or was abandoned by a crash. Explicit leaf paths with
     basePath keep the window_bucket partition column."""
     done = _exported_buckets(state_dir)
     base = f"{out_dir}/routed"
