@@ -99,7 +99,7 @@ def _flagship(spark, transcripts_path: str) -> "tuple[float, int]":
     tr = spark.read.parquet(*paths)
     cfg = PipelineConfig(size_k=64, window_duration_s=60, seed=42)
     t0 = time.time()
-    routed, _ = build_routed(tr, cfg)
+    routed = build_routed(tr, cfg)
     counts = {
         r["sink"]: r["n"]
         for r in routed.groupBy("sink").agg(F.count(F.lit(1)).alias("n")).collect()

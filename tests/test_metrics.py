@@ -11,7 +11,7 @@ from trace_aware_reservoir_otel_spark.synth import generate_transcripts
 def test_observation_counters_conserve(spark):
     df = generate_transcripts(spark, n_convs=150, seed=42)
     cfg = PipelineConfig(size_k=5, window_duration_s=60, seed=42)
-    routed, _ = build_routed(df, cfg)
+    routed = build_routed(df, cfg)
     observed, obs = observed_routed(routed)
     n = observed.count()  # the "sink write" action
     vals = observed_counts(obs)

@@ -34,7 +34,6 @@ def data(spark):
         "overflow": res.overflow.cache(),
         "dlq": res.dlq.cache(),
         "metrics": res.metrics.cache(),
-        "winners": res.winners,
     }
     return out
 
@@ -140,15 +139,89 @@ def test_capacity_overflow(spark):
 
 
 def test_pandas_parse_path_equal(spark):
-    df = generate_transcripts(spark, n_convs=60, seed=5)
-    cfg = PipelineConfig(size_k=4, window_duration_s=60, seed=5)
-    a = run_pipeline(df, cfg, use_pandas_parse=False).sampled_traces
-    b = run_pipeline(df, cfg, use_pandas_parse=True).sampled_traces
-    key = ["conv_id", "turn_idx"]
-    cols = key + ["p_tool", "p_dur_ms", "p_trace_hex", "p_span_hex"]
-    assert sorted(map(tuple, a.select(*cols).collect())) == sorted(
-        map(tuple, b.select(*cols).collect())
+    # the pandas parser (parse_pandas contract query) and the JVM regex
+    # parser of `prepare` agree on every row and all four parsed columns
+    from trace_aware_reservoir_otel_spark.functions.parse import (
+        with_parsed_fields,
+        with_parsed_fields_pandas,
     )
+
+    df = generate_transcripts(spark, n_convs=60, seed=5)
+    cols = ["conv_id", "turn_idx", "text", "p_tool", "p_dur_ms", "p_trace_hex", "p_span_hex"]
+    a = sorted(map(tuple, with_parsed_fields(df).select(*cols).collect()), key=repr)
+    b = sorted(map(tuple, with_parsed_fields_pandas(df).select(*cols).collect()), key=repr)
+    assert len(a) == df.count()
+    assert a == b
+    assert any(r[3] is not None for r in a)
+
+
+def _turn_units_per_window(routed, cond):
+    return {
+        r["window_start_s"]: r["n"]
+        for r in routed.filter(cond)
+        .groupBy("window_start_s")
+        .agg(F.countDistinct("conv_id", "turn_idx").alias("n"))
+        .collect()
+    }
+
+
+def test_turn_sampling_fills_k_under_capacity(spark):
+    """Turn sampling draws only from turns the routing rules would sample:
+    a capacity-evicted conversation's turns never take a slot, so every
+    window samples min(k, eligible turns)."""
+    df = generate_transcripts(spark, n_convs=300, seed=7)
+    cfg = PipelineConfig(
+        size_k=7, window_duration_s=60, seed=7, trace_aware=False, buffer_max_convs=2
+    )
+    routed = run_pipeline(df, cfg).routed.cache()
+    assert routed.filter(F.col("reason") == "capacity").count() > 0
+    sampled = _turn_units_per_window(routed, F.col("sink") == "sampled_traces")
+    eligible = _turn_units_per_window(
+        routed,
+        (F.col("sink") == "sampled_traces") | (F.col("reason") == "unsampled"),
+    )
+    assert eligible
+    assert {w: min(7, n) for w, n in eligible.items()} == {
+        w: sampled.get(w, 0) for w in eligible
+    }
+    routed.unpersist()
+
+
+def test_turn_sampling_duplicates_conserve(spark):
+    """Replayed (conv, turn) rows form one turn unit: routing keeps one
+    output row per input row, and a replayed turn routes like its twin."""
+    df = generate_transcripts(spark, n_convs=300, seed=7).cache()
+    dup = df.unionByName(df.limit(200)).cache()
+    cfg = PipelineConfig(size_k=7, window_duration_s=60, seed=7, trace_aware=False)
+    routed = run_pipeline(dup, cfg).routed
+    assert routed.count() == dup.count()
+    sinks = (
+        routed.filter(F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull())
+        .groupBy("window_start_s", "conv_id", "turn_idx")
+        .agg(F.countDistinct("sink", "reason").alias("n"))
+    )
+    assert sinks.filter(F.col("n") > 1).count() == 0
+    per_win = _turn_units_per_window(routed, F.col("sink") == "sampled_traces")
+    assert per_win and all(n <= 7 for n in per_win.values())
+
+
+def test_int_priority_rejects_weights(spark):
+    """priority='int' orders by prio_int, which carries no weight: a
+    weight_col would be silently dropped, so every entry refuses it."""
+    from trace_aware_reservoir_otel_spark.operators.reservoir import (
+        sample_conversations,
+        sample_rows,
+    )
+
+    with pytest.raises(ValueError, match="priority"):
+        PipelineConfig(priority="int", weight_col="w")
+    df = spark.createDataFrame(
+        [("c", 0, 0, 2.0)], "conv_id string, turn_idx int, window_start_s long, w double"
+    )
+    with pytest.raises(ValueError, match="priority"):
+        sample_conversations(df, 3, weight_col="w", priority="int")
+    with pytest.raises(ValueError, match="priority"):
+        sample_rows(df, 3, ["conv_id", "turn_idx"], weight_col="w", priority="int")
 
 
 def test_metrics_match_recomputation(data):

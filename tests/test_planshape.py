@@ -28,7 +28,7 @@ def flagship_plan(spark):
     cfg = PipelineConfig(
         size_k=16, window_duration_s=60, seed=42, buffer_max_convs=50
     )
-    routed, _ = build_routed(tr, cfg)
+    routed = build_routed(tr, cfg)
     return _plan_of(routed)
 
 
@@ -76,7 +76,7 @@ def test_unit_branch_prunes_text_column(spark, tmp_path):
     df.write.mode("overwrite").parquet(path)
     tr = spark.read.parquet(path)
     cfg = PipelineConfig(size_k=8, window_duration_s=60, seed=42)
-    routed, _ = build_routed(tr, cfg)
+    routed = build_routed(tr, cfg)
     plan = _plan_of(routed)
     schemas = [
         line.split("ReadSchema:", 1)[1]
@@ -137,7 +137,7 @@ def test_late_join_broadcast_without_size_estimate(spark):
     saved = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        routed, _ = build_routed(tr, cfg)
+        routed = build_routed(tr, cfg)
         plan = _plan_of(routed)
     finally:
         spark.conf.set(key, saved)
@@ -212,7 +212,7 @@ def test_parquet_dims_join_stays_broadcast(spark, tmp_path):
 
     # end-to-end: file dims drive the full pipeline identically
     cfg = PipelineConfig(size_k=8, window_duration_s=60, seed=42)
-    routed, _ = build_routed(tr, cfg, dim_role=dim_role, dim_tool=dim_tool)
+    routed = build_routed(tr, cfg, dim_role=dim_role, dim_tool=dim_tool)
     assert "SortMergeJoin" not in _plan_of(routed)
 
 
@@ -344,7 +344,7 @@ def test_default_batch_and_stream_plans_start_no_python_worker(spark):
     relations, not a PythonRDD scan."""
     tr = generate_transcripts(spark, n_convs=50, seed=42)
     cfg = PipelineConfig()
-    routed, _ = build_routed(tr, cfg)
+    routed = build_routed(tr, cfg)
     for plan in (_plan_of(routed), _plan_of(prepare(tr, cfg))):
         assert "LocalTableScan" in plan
         found = [node for node in _PYTHON_NODES if node in plan]

@@ -12,6 +12,7 @@ from trace_aware_reservoir_otel_spark.operators.reservoir import (
     sample_conversations,
     sample_rows,
     topk_units,
+    with_priorities,
 )
 from trace_aware_reservoir_otel_spark.operators.windows import with_tumbling_window
 from trace_aware_reservoir_otel_spark.synth import generate_transcripts
@@ -87,15 +88,25 @@ def test_row_count_conservation(turns):
     assert flagged.count() == turns.count()
 
 
-def test_simple_mode_row_reservoir(turns):
-    win = sample_rows(turns, k=9, key_cols=["conv_id", "turn_idx"], seed=42)
-    per_win = win.groupBy("window_start_s").count().collect()
-    assert all(r["count"] <= 9 for r in per_win)
-    # deterministic
-    win2 = sample_rows(turns.repartition(13), k=9, key_cols=["conv_id", "turn_idx"], seed=42)
-    assert sorted(map(tuple, win.select("window_start_s", "conv_id", "turn_idx").collect())) == sorted(
-        map(tuple, win2.select("window_start_s", "conv_id", "turn_idx").collect())
+def _sample_rows_xxh(df, k, key_cols, seed):
+    # sample_rows' reservoir under the xxh priority (the turn-sampling
+    # route of plans.pipeline): the shared derivation, then top-k
+    keyed = with_priorities(df, seed, key_cols, hash_impl="xxh").withColumn(
+        "_unit", F.concat_ws("#", *[F.col(c).cast("string") for c in key_cols])
     )
+    return topk_units(keyed, k, conv_col="_unit").drop("_unit")
+
+
+def test_simple_mode_row_reservoir(turns):
+    for sampler in (sample_rows, _sample_rows_xxh):
+        win = sampler(turns, k=9, key_cols=["conv_id", "turn_idx"], seed=42)
+        per_win = win.groupBy("window_start_s").count().collect()
+        assert all(r["count"] <= 9 for r in per_win)
+        # deterministic
+        win2 = sampler(turns.repartition(13), k=9, key_cols=["conv_id", "turn_idx"], seed=42)
+        assert sorted(map(tuple, win.select("window_start_s", "conv_id", "turn_idx").collect())) == sorted(
+            map(tuple, win2.select("window_start_s", "conv_id", "turn_idx").collect())
+        )
 
 
 def test_weighted_sampling_prefers_heavy(spark):

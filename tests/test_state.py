@@ -237,14 +237,20 @@ def test_resume_rejects_grown_input(spark, data, tmp_path_factory):
         run_with_checkpoint(spark, grown, CFG, s, str(base / "o"), n_units=4)
 
 
-def test_checkpoint_rejects_turn_sampling(spark, data, tmp_path_factory):
-    """Checkpoint state samples whole conversations: trace_aware=False
-    must raise before any state is written, not run conversation sampling
-    while build_routed would sample turns."""
+def test_checkpoint_turn_sampling_equals_direct(spark, data, tmp_path_factory):
+    """Checkpoint runs sample turns through the batch plan's routing step:
+    with capacity on, the committed routed table equals run_pipeline's
+    routed frame row for row, and conserves the input."""
     import dataclasses
 
-    base = tmp_path_factory.mktemp("state_simple_mode")
-    simple = dataclasses.replace(CFG, trace_aware=False)
-    with pytest.raises(ValueError, match="trace_aware"):
-        run_with_checkpoint(spark, data, simple, str(base / "st"), str(base / "o"))
-    assert not os.path.exists(base / "st")
+    from tests.test_streaming import _routed_histogram
+    from trace_aware_reservoir_otel_spark.plans.commit import read_committed
+
+    base = tmp_path_factory.mktemp("state_turns")
+    cfg = dataclasses.replace(CFG, trace_aware=False, buffer_max_convs=3)
+    out = str(base / "o")
+    counts = run_with_checkpoint(spark, data, cfg, str(base / "st"), out, n_units=3)
+    got = _routed_histogram(read_committed(spark, f"{out}/routed"))
+    assert got == _routed_histogram(run_pipeline(data, cfg).routed)
+    assert any(k[3] == "capacity" for k in got)
+    assert sum(counts.values()) == sum(got.values()) == data.count()

@@ -194,17 +194,39 @@ def test_streaming_restart_with_new_data_equals_batch(spark, tmp_path_factory):
     assert rows_in == rows_out == df.count()
 
 
-def test_streaming_rejects_turn_sampling(spark, tmp_path_factory):
-    """Streaming rollover samples whole conversations: trace_aware=False
-    must raise at both entry points before any state is written."""
-    base = str(tmp_path_factory.mktemp("stream_simple_mode"))
-    cfg = PipelineConfig(size_k=5, window_duration_s=60, seed=42, trace_aware=False)
-    os.makedirs(f"{base}/in")
-    with pytest.raises(ValueError, match="trace_aware"):
-        run_incremental_routed(
-            spark, f"{base}/in", cfg, f"{base}/state", f"{base}/ck", f"{base}/out"
+@pytest.mark.parametrize("lateness", ["off", "span_bound"])
+def test_streaming_turn_sampling_equals_batch(spark, tmp_path_factory, lateness):
+    """Streaming rolls sample turns through the batch plan's routing step:
+    with lateness off (mid-stream rolls) and with lateness plus a declared
+    span bound, the union of exports equals run_pipeline's routed frame
+    and conserves the input."""
+    from tests.test_streaming_scale import _write_time_sliced
+    from trace_aware_reservoir_otel_spark.streaming.pipeline import _exported_buckets
+
+    df = generate_transcripts(spark, n_convs=150, seed=7, span_s=20000)
+    late = {"late_tolerance_s": None}
+    if lateness == "span_bound":
+        span = (
+            df.filter(F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull())
+            .groupBy("conv_id")
+            .agg((F.max(F.unix_timestamp("ts")) - F.min(F.unix_timestamp("ts"))).alias("s"))
+            .agg(F.max("s"))
+            .first()[0]
         )
-    with pytest.raises(ValueError, match="trace_aware"):
-        flush_incremental(spark, cfg, f"{base}/state", f"{base}/out")
-    assert not os.path.exists(f"{base}/state")
-    assert not os.path.exists(f"{base}/ck")
+        late = {"late_tolerance_s": 120.0, "max_conv_span_s": float(span + 60)}
+    cfg = PipelineConfig(
+        size_k=5, window_duration_s=60, seed=42, trace_aware=False,
+        buffer_max_convs=8, **late,
+    )
+    base = str(tmp_path_factory.mktemp(f"stream_turns_{lateness}"))
+    in_dir = _write_time_sliced(spark, base, cfg, df, n_files=4)
+    state = os.path.join(base, "state")
+    out = os.path.join(base, "out")
+    run_incremental_routed(spark, in_dir, cfg, state, os.path.join(base, "ck"), out)
+    if lateness == "off":
+        assert any(bid is not None for bid in _exported_buckets(state).values())
+    flush_incremental(spark, cfg, state, out)
+    got = _routed_histogram(spark.read.parquet(f"{out}/routed"))
+    assert got == _routed_histogram(run_pipeline(df, cfg).routed)
+    rows_in, rows_out = incremental_conservation(spark, state, out)
+    assert rows_in == rows_out == df.count()

@@ -49,8 +49,13 @@ class PipelineConfig:
                         kept whole — the trace-aware upgrade of the
                         reference's span-level ``size_k``).
     window_duration_s : tumbling-window width (window.go:108-122).
-    trace_aware       : sample whole conversations (True) or individual
-                        turns (False) — processor.go:265-314 simple vs aware.
+    trace_aware       : sampling unit of every mode (batch, checkpoint,
+                        streaming): whole conversations (True) or
+                        individual turns (False) — processor.go:265-314
+                        aware vs simple. Turn sampling draws from the
+                        turns the routing rules would sample (no late,
+                        evicted, expired or violating rows), one unit per
+                        (window, conv, turn).
     buffer_max_convs  : per-window capacity before overflow routing — the
                         deterministic replacement for LRU eviction
                         (trace_buffer.go:107-110,201-240). None = unbounded.
@@ -123,6 +128,9 @@ class PipelineConfig:
             raise ValueError(f"unknown priority {self.priority!r}")
         if self.hash_impl not in ("xxh", "md5"):
             raise ValueError(f"unknown hash_impl {self.hash_impl!r}")
+        if self.priority == "int" and self.weight_col is not None:
+            # the int order reads prio_int, which carries no weight
+            raise ValueError("priority='int' ignores weight_col; use priority='ares'")
         if self.late_tolerance_s is not None and self.late_tolerance_s < 0:
             raise ValueError("late_tolerance_s must be >= 0 or None (disabled)")
         if self.max_conv_span_s is not None and self.max_conv_span_s <= 0:

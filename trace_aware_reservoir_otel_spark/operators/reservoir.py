@@ -6,9 +6,12 @@ trace so traces are kept whole (trace_buffer.go:78-141). Upgraded here per
 the north star to *weighted, conversation-atomic, mergeable, deterministic*
 Efraimidis–Spirakis A-Res:
 
-    key(conv, window) -> u = portable_hash01(seed, window:conv) in (0,1)
+    key(unit, window) -> u = hash01(seed, window, unit) in (0,1)
     ares = -ln(u) / w          (uniform w=1)
-    winners(window) = k smallest ares (ties broken by conv_id)
+    winners(window) = k smallest ares (ties broken by the unit key)
+
+`with_priorities` is the one derivation of u and ares for every sampler,
+whether the unit is a conversation or a single turn (row).
 
 Because ares is a pure function of (seed, window, conv, w), partial top-k
 sets computed independently on any partitioning merge associatively to the
@@ -40,7 +43,49 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from trace_aware_reservoir_otel_spark.functions.hashing import ares_key, pbig
+from trace_aware_reservoir_otel_spark.functions.hashing import (
+    TWO_POW_52,
+    fast_prio_int,
+    pbig,
+)
+
+
+def with_priorities(
+    units: DataFrame,
+    seed: int,
+    key_cols: "list[str]",
+    window_col: str = "window_start_s",
+    weight_col: "str | None" = None,
+    hash_impl: str = "md5",
+) -> DataFrame:
+    """The one priority derivation of every sampler: `prio_int` from ONE
+    hash of (seed, window, unit key), then the A-Res `ares_key` from it.
+
+    hash_impl 'md5' hashes the portable string `window:key` (`pbig`, the
+    DuckDB-checked form; a multi-column key joins with '#'); 'xxh' hashes
+    the columns themselves (`fast_prio_int`, no string materialization).
+    The A-Res key reuses the integer: u = (prio_int + 0.5) / 2^52 as in
+    `hashing.u01`, key = -ln(u) / w (w = `weight_col`, uniform when None).
+    """
+    if hash_impl == "xxh":
+        prio = fast_prio_int(seed, window_col, *key_cols)
+    else:
+        if len(key_cols) == 1:
+            key = F.col(key_cols[0]).cast("string")
+        else:
+            key = F.concat_ws("#", *[F.col(c).cast("string") for c in key_cols])
+        prio = pbig(F.concat(F.col(window_col).cast("string"), F.lit(":"), key), seed)
+    u = (F.col("prio_int").cast("double") + F.lit(0.5)) / F.lit(TWO_POW_52)
+    ares = -F.log(u)
+    if weight_col is not None:
+        ares = ares / F.col(weight_col).cast("double")
+    return units.withColumn("prio_int", prio).withColumn("ares_key", ares)
+
+
+def _check_weighting(priority: str, weight_col: "str | None") -> None:
+    # the 'int' order reads prio_int, which carries no weight
+    if priority == "int" and weight_col is not None:
+        raise ValueError("priority='int' ignores weights; use priority='ares' with weight_col")
 
 
 def conversation_units(
@@ -59,14 +104,8 @@ def conversation_units(
     if weight_col is not None:
         aggs.append(F.max(F.col(weight_col).cast("double")).alias("_w"))
     units = df.groupBy(window_col, conv_col).agg(*aggs)
-    prio_key = F.concat(
-        F.col(window_col).cast("string"), F.lit(":"), F.col(conv_col).cast("string")
-    )
-    w = F.col("_w") if weight_col is not None else None
-    units = units.withColumn("ares_key", ares_key(prio_key, seed, w)).withColumn(
-        "prio_int", pbig(prio_key, seed)
-    )
-    return units.drop("_w") if weight_col is not None else units
+    w = "_w" if weight_col is not None else None
+    return with_priorities(units, seed, [conv_col], window_col, w).drop("_w")
 
 
 def _order_cols(priority: str, conv_col: str):
@@ -139,7 +178,6 @@ def sample_conversations(
     seed: int = 42,
     salt_buckets: int = 16,
     method: str = "sql",
-    broadcast_winners: bool = True,
     priority: str = "ares",
 ) -> "tuple[DataFrame, DataFrame]":
     """Conversation-atomic reservoir: returns (turns_with_flag, winners).
@@ -148,11 +186,10 @@ def sample_conversations(
     turn of a winning (window, conv) is kept, every turn of a losing one
     dropped (all-or-nothing, trace_buffer.go semantics / FIXTURES.md §4).
     """
+    _check_weighting(priority, weight_col)
     units = conversation_units(df, window_col, conv_col, weight_col, seed)
     winners = topk_units(units, k, window_col, conv_col, salt_buckets, method, priority)
-    win_small = winners.select(window_col, conv_col, "ares_key")
-    if broadcast_winners:
-        win_small = F.broadcast(win_small)
+    win_small = F.broadcast(winners.select(window_col, conv_col, "ares_key"))
     flagged = df.join(
         win_small.withColumn("sampled", F.lit(True)),
         on=[window_col, conv_col],
@@ -175,12 +212,9 @@ def sample_rows(
     """Simple (non-trace-aware) per-window row reservoir
     (processor.go:265-288 consumeTracesSimple analog): the unit IS the row.
     """
-    key = F.concat_ws("#", *[F.col(c).cast("string") for c in key_cols])
-    prio_key = F.concat(F.col(window_col).cast("string"), F.lit(":"), key)
-    w = F.col(weight_col) if weight_col else None
-    with_key = (
-        df.withColumn("_unit", key)
-        .withColumn("ares_key", ares_key(prio_key, seed, w))
-        .withColumn("prio_int", pbig(prio_key, seed))
+    _check_weighting(priority, weight_col)
+    keyed = df.withColumn(
+        "_unit", F.concat_ws("#", *[F.col(c).cast("string") for c in key_cols])
     )
+    with_key = with_priorities(keyed, seed, ["_unit"], window_col, weight_col)
     return topk_units(with_key, k, window_col, "_unit", salt_buckets, method, priority).drop("_unit")

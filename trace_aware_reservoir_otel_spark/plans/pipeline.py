@@ -10,7 +10,8 @@ re-expression of the reference's hot path ConsumeTraces
       -> tumbling window          (W1 — pure column arithmetic)
       -> unit-level session state (A3: conv starts, late units)
       -> conv units + capacity    (L2)
-      -> A-Res reservoir winners  (A1, two-phase salted merge)
+      -> A-Res reservoir winners  (A1, two-phase salted merge; whole
+                                   conversations or single turns)
       -> ONE routed frame with a `sink` column:
            dlq(invalid_key) | dlq(late) | overflow(capacity)
            | sampled_traces | overflow(unsampled)
@@ -40,10 +41,13 @@ routed snapshot (three columns), not from a second run of the plan.
 
 Every mode shares this module's steps: `prepare` (window -> parse ->
 enrich) is the one prepare chain, `invalid_key` the one key predicate,
-and `route_units` the one trace-aware routing step (capacity, winners,
-the broadcast winner join and `apply_routing`'s rule table). The batch
+and `route_units` the one routing step (capacity, winners, the broadcast
+winner join and `apply_routing`'s rule table) for both sampling units,
+whole conversations and single turns (`cfg.trace_aware`). The batch
 plan, the checkpoint finalize (plans/state.py) and the streaming
-rollover (streaming/pipeline.py) each call it once.
+rollover (streaming/pipeline.py) each call it once. Priorities of either
+unit come from the reservoir's one derivation,
+`operators.reservoir.with_priorities`.
 """
 
 from __future__ import annotations
@@ -53,13 +57,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, Window as W, functions as F, types as T
 
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
-from trace_aware_reservoir_otel_spark.functions.hashing import pbig
-from trace_aware_reservoir_otel_spark.functions.parse import (
-    with_parsed_fields,
-    with_parsed_fields_pandas,
-)
+from trace_aware_reservoir_otel_spark.functions.parse import with_parsed_fields
 from trace_aware_reservoir_otel_spark.operators.enrich import enrich
-from trace_aware_reservoir_otel_spark.operators.reservoir import sample_rows, topk_units
+from trace_aware_reservoir_otel_spark.operators.reservoir import topk_units, with_priorities
 from trace_aware_reservoir_otel_spark.operators.windows import with_tumbling_window
 
 
@@ -70,7 +70,6 @@ class PipelineResult:
     overflow: DataFrame
     dlq: DataFrame
     metrics: DataFrame  # in-plan; write_sinks aggregates the committed snapshot
-    winners: DataFrame  # conv-level (window, conv_id, priorities) for state
     cfg: PipelineConfig  # the run's config: write_sinks derives the bucket from it
     persisted: "list[DataFrame] | None" = None  # unit frames cached by the plan
 
@@ -116,14 +115,12 @@ def prepare(
     cfg: PipelineConfig,
     dim_role: "DataFrame | None" = None,
     dim_tool: "DataFrame | None" = None,
-    use_pandas_parse: bool = False,
 ) -> DataFrame:
     """The one prepare chain of every mode (batch, checkpoint units and
     finalize, streaming micro-batches and the spill schema): tumbling
     window -> parsed tool-call fields -> broadcast role/tool enrichment."""
-    parse = with_parsed_fields_pandas if use_pandas_parse else with_parsed_fields
     windowed = with_tumbling_window(transcripts, "ts", cfg.window_duration_s)
-    return enrich(parse(windowed), dim_role, dim_tool)
+    return enrich(with_parsed_fields(windowed), dim_role, dim_tool)
 
 
 def unit_source(
@@ -138,30 +135,6 @@ def unit_source(
     if cfg.weight_col is not None and cfg.weight_col not in raw.columns:
         return prepared
     return raw
-
-
-def _with_unit_priorities(units: DataFrame, cfg: PipelineConfig, weighted: bool) -> DataFrame:
-    from trace_aware_reservoir_otel_spark.functions.hashing import (
-        TWO_POW_52,
-        fast_prio_int,
-    )
-
-    if cfg.hash_impl == "xxh":
-        with_int = units.withColumn(
-            "prio_int", fast_prio_int(cfg.seed, "window_start_s", "conv_id")
-        )
-    else:
-        prio_key = F.concat(
-            F.col("window_start_s").cast("string"), F.lit(":"), F.col("conv_id")
-        )
-        with_int = units.withColumn("prio_int", pbig(prio_key, cfg.seed))
-    # derive the A-Res key from the already-computed integer priority
-    # (same u = (prio+0.5)/2^52 as hashing.u01 — one md5 per unit, not two)
-    u = (F.col("prio_int").cast("double") + F.lit(0.5)) / F.lit(TWO_POW_52)
-    ares = -F.log(u)
-    if weighted:
-        ares = ares / F.col("_w").cast("double")
-    return with_int.withColumn("ares_key", ares)
 
 
 def _unit_pre_aggregate(valid: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -233,95 +206,77 @@ def _units_from_pre(
                    units, or None when late detection is disabled.
     """
     weighted = cfg.weight_col is not None
-    if cfg.late_tolerance_s is None:
-        units = pre.select(
-            "window_start_s",
-            "conv_id",
-            F.col("n_all").cast("long").alias("n_turns"),
-            *(["_w"] if weighted else []),
-        )
-        return _with_unit_priorities(units, cfg, weighted), None
-
-    if conv_starts is not None:
-        # external conv-level index: a unit-level equi-join on conv_id
-        # (starts are O(conversations) — never fact rows); coalesce is a
-        # never-hit-by-construction fallback to the unit's own root ts
-        starts = conv_starts.select(
-            "conv_id", F.col("ts_of_min_turn").alias("_conv_start")
-        )
-        joined = pre.join(starts, on="conv_id", how="left")
-        conv_start = F.coalesce(F.col("_conv_start"), F.col("ts_of_min_turn"))
-        flagged = (
-            joined.withColumn(
-                "cutoff_s", conv_start - F.lit(float(cfg.late_tolerance_s))
-            )
-            .drop("_conv_start")
-            .persist()
-        )
-        if persisted_out is not None:
-            persisted_out.append(flagged)
-        return _classify_flagged(flagged, valid, cfg, weighted)
-
-    # conversation start = ts of the globally-minimal turn_idx (root turn),
-    # via a window function over the unit frame partitioned by conv — ONE
-    # unit-level shuffle instead of a self-aggregation + sort-merge join;
-    # never re-scans or shuffles fact rows
-    wconv = W.partitionBy("conv_id")
-    conv_start = F.min(F.struct("min_turn", "ts_of_min_turn")).over(wconv)[
-        "ts_of_min_turn"
-    ]
-    # unit-level frame, persisted: both the sampling population and the
-    # late-unit set derive from it — one fact scan total
-    flagged = (
-        pre.withColumn(
-            "cutoff_s", conv_start - F.lit(float(cfg.late_tolerance_s))
-        )
-        .persist()
-    )
-    if persisted_out is not None:
-        persisted_out.append(flagged)
-    return _classify_flagged(flagged, valid, cfg, weighted)
-
-
-def _classify_flagged(
-    flagged: DataFrame, valid: DataFrame, cfg: PipelineConfig, weighted: bool
-) -> "tuple[DataFrame, DataFrame | None]":
-    """Shared tail of _units_from_pre: per-unit late status from the
-    cutoff, with the row-level boundary fix-up."""
-    status = (
-        F.when(F.col("max_ts_s") < F.col("cutoff_s"), F.lit("all_late"))
-        .when(F.col("min_ts_s") >= F.col("cutoff_s"), F.lit("on_time"))
-        .otherwise(F.lit("boundary"))
-    )
-    flagged = flagged.withColumn("status", status)
-
-    late_units = flagged.filter(F.col("status") != "on_time").select(
-        "window_start_s", "conv_id", "status", "cutoff_s"
-    )
-
-    on_units = flagged.filter(F.col("status") == "on_time").select(
+    unit_cols = [
         "window_start_s",
         "conv_id",
         F.col("n_all").cast("long").alias("n_turns"),
         *(["_w"] if weighted else []),
-    )
-    # boundary units: exact on-time stats from the (tiny) affected row set
-    boundary = late_units.filter(F.col("status") == "boundary")
-    fix_aggs = [F.count(F.lit(1)).cast("long").alias("n_turns")]
-    if weighted:
-        fix_aggs.append(F.max(F.col(cfg.weight_col).cast("double")).alias("_w"))
-    boundary_fix = (
-        valid.join(
-            F.broadcast(boundary.select("window_start_s", "conv_id", "cutoff_s")),
-            on=["window_start_s", "conv_id"],
-            how="inner",
+    ]
+    late_units = None
+    if cfg.late_tolerance_s is None:
+        units = pre.select(*unit_cols)
+    else:
+        tolerance = F.lit(float(cfg.late_tolerance_s))
+        if conv_starts is not None:
+            # external conv-level index: a unit-level equi-join on conv_id
+            # (starts are O(conversations) — never fact rows); coalesce is
+            # a never-hit-by-construction fallback to the unit's own root ts
+            starts = conv_starts.select(
+                "conv_id", F.col("ts_of_min_turn").alias("_conv_start")
+            )
+            conv_start = F.coalesce(F.col("_conv_start"), F.col("ts_of_min_turn"))
+            flagged = (
+                pre.join(starts, on="conv_id", how="left")
+                .withColumn("cutoff_s", conv_start - tolerance)
+                .drop("_conv_start")
+            )
+        else:
+            # conversation start = ts of the globally-minimal turn_idx (root
+            # turn), via a window function over the unit frame partitioned
+            # by conv — ONE unit-level shuffle instead of a self-aggregation
+            # + sort-merge join; never re-scans or shuffles fact rows
+            conv_start = F.min(F.struct("min_turn", "ts_of_min_turn")).over(
+                W.partitionBy("conv_id")
+            )["ts_of_min_turn"]
+            flagged = pre.withColumn("cutoff_s", conv_start - tolerance)
+        # unit-level frame, persisted: both the sampling population and the
+        # late-unit set derive from it — one fact scan total
+        flagged = flagged.persist()
+        if persisted_out is not None:
+            persisted_out.append(flagged)
+        status = (
+            F.when(F.col("max_ts_s") < F.col("cutoff_s"), F.lit("all_late"))
+            .when(F.col("min_ts_s") >= F.col("cutoff_s"), F.lit("on_time"))
+            .otherwise(F.lit("boundary"))
         )
-        .filter(F.unix_timestamp("ts") >= F.col("cutoff_s"))
-        .groupBy("window_start_s", "conv_id")
-        .agg(*fix_aggs)
-    )
-    units = on_units.unionByName(boundary_fix)
-    return _with_unit_priorities(units, cfg, weighted), late_units
+        flagged = flagged.withColumn("status", status)
+        late_units = flagged.filter(F.col("status") != "on_time").select(
+            "window_start_s", "conv_id", "status", "cutoff_s"
+        )
+        # boundary units: exact on-time stats from the (tiny) affected row set
+        boundary = late_units.filter(F.col("status") == "boundary")
+        fix_aggs = [F.count(F.lit(1)).cast("long").alias("n_turns")]
+        if weighted:
+            fix_aggs.append(F.max(F.col(cfg.weight_col).cast("double")).alias("_w"))
+        boundary_fix = (
+            valid.join(
+                F.broadcast(boundary.select("window_start_s", "conv_id", "cutoff_s")),
+                on=["window_start_s", "conv_id"],
+                how="inner",
+            )
+            .filter(F.unix_timestamp("ts") >= F.col("cutoff_s"))
+            .groupBy("window_start_s", "conv_id")
+            .agg(*fix_aggs)
+        )
+        units = (
+            flagged.filter(F.col("status") == "on_time")
+            .select(*unit_cols)
+            .unionByName(boundary_fix)
+        )
+    return with_priorities(
+        units, cfg.seed, ["conv_id"], "window_start_s",
+        "_w" if weighted else None, cfg.hash_impl,
+    ), late_units
 
 
 def capacity_split_units(
@@ -352,39 +307,47 @@ def route_units(
     cfg: PipelineConfig,
     expired=None,
     violated=None,
-) -> "tuple[DataFrame, DataFrame]":
-    """The trace-aware routing step of every mode — the batch plan, the
-    checkpoint finalize and the streaming rollover each call it once.
-    Capacity split and conv-level reservoir winners over `units`, a
-    broadcast `_won` join onto the fact `rows`, then `apply_routing`.
-    Returns (routed, winners).
+) -> DataFrame:
+    """The routing step of every mode and both sampling units — the batch
+    plan, the checkpoint finalize and the streaming rollover each call it
+    once. Capacity split over the conversation `units`, per-window
+    reservoir winners, a broadcast `_won` join onto the fact `rows`, then
+    `apply_routing`. Returns the routed frame.
 
-    One step serves all three because A-Res priorities are pure functions
-    of (seed, window, conv): any path over any cover of the input derives
-    the same winner set. `expired` and `violated` are passed through to
-    `apply_routing`."""
+    Winners are whole conversations (`cfg.trace_aware`, the kept `units`)
+    or single turns. A turn's population is the rows the rule table would
+    sample — `apply_routing` with every `_won` set, kept where it says
+    sampled_traces — so late, evicted, expired, violating and invalid rows
+    never take a slot; duplicate (conv, turn) rows make one unit with the
+    max weight, as a conversation's turns make one conversation unit.
+
+    One step serves all three modes because A-Res priorities are pure
+    functions of (seed, window, unit): any path over any cover of the
+    input derives the same winner set. `expired` and `violated` are passed
+    through to `apply_routing`."""
     kept_units, evicted_keys = capacity_split_units(units, cfg)
+    keys, population, unit = ["window_start_s", "conv_id"], kept_units, "conv_id"
+    if not cfg.trace_aware:
+        keys, unit = keys + ["turn_idx"], "_unit"
+        weighted = cfg.weight_col is not None
+        eligible = apply_routing(
+            rows.withColumn("_won", F.lit(True)),
+            late_units, evicted_keys, expired, violated,
+        ).filter(F.col("sink") == "sampled_traces")
+        aggs = [F.count(F.lit(1)).alias("n_turns")]
+        if weighted:
+            aggs.append(F.max(F.col(cfg.weight_col).cast("double")).alias("_w"))
+        population = with_priorities(
+            eligible.groupBy(*keys).agg(*aggs), cfg.seed, keys[1:],
+            "window_start_s", "_w" if weighted else None, cfg.hash_impl,
+        ).withColumn("_unit", F.concat_ws("#", *keys[1:]))
     winners = topk_units(
-        kept_units, cfg.size_k, "window_start_s", "conv_id",
+        population, cfg.size_k, "window_start_s", unit,
         cfg.salt_buckets, cfg.method, cfg.priority,
     )
-    win_keys = winners.select("window_start_s", "conv_id").withColumn(
-        "_won", F.lit(True)
-    )
-    routed = rows.join(
-        F.broadcast(win_keys), on=["window_start_s", "conv_id"], how="left"
-    )
-    return apply_routing(routed, late_units, evicted_keys, expired, violated), winners
-
-
-def require_trace_aware(cfg: PipelineConfig, entry: str) -> None:
-    """The checkpoint and streaming modes sample whole conversations only;
-    refuse turn sampling up front instead of silently ignoring it."""
-    if not cfg.trace_aware:
-        raise ValueError(
-            f"{entry} samples whole conversations; cfg.trace_aware=False "
-            "(turn sampling) runs only in build_routed / run_pipeline"
-        )
+    win_keys = winners.select(*keys).withColumn("_won", F.lit(True))
+    routed = rows.join(F.broadcast(win_keys), on=keys, how="left")
+    return apply_routing(routed, late_units, evicted_keys, expired, violated)
 
 
 def build_routed(
@@ -392,14 +355,14 @@ def build_routed(
     cfg: PipelineConfig,
     dim_role: "DataFrame | None" = None,
     dim_tool: "DataFrame | None" = None,
-    use_pandas_parse: bool = False,
     persisted_out: "list[DataFrame] | None" = None,
-) -> "tuple[DataFrame, DataFrame]":
-    """Returns (routed, winners): the single routed frame plus the
-    conv-level winner set (for state checkpointing). If `persisted_out` is
-    given, frames this plan persists are appended so the caller can
-    unpersist them after its final action."""
-    windowed = prepare(transcripts, cfg, dim_role, dim_tool, use_pandas_parse)
+) -> DataFrame:
+    """The batch plan's single routed frame: `prepare`, the unit
+    pre-aggregate and late classification, then one `route_units` call,
+    for either sampling unit. If `persisted_out` is given, frames this
+    plan persists are appended so the caller can unpersist them after its
+    final action."""
+    windowed = prepare(transcripts, cfg, dim_role, dim_tool)
     valid = unit_source(transcripts, windowed, cfg).filter(~invalid_key())
 
     units, late_units = _units_from_pre(
@@ -416,32 +379,7 @@ def build_routed(
         late_units = late_units.persist()
         if persisted_out is not None:
             persisted_out.append(late_units)
-
-    if cfg.trace_aware:
-        return route_units(windowed, units, late_units, cfg)
-
-    # simple mode: unit IS the row; late detection must precede sampling
-    _, evicted_keys = capacity_split_units(units, cfg)
-    on_time_rows = windowed.filter(~invalid_key())
-    if late_units is not None:
-        on_time_rows = _filter_late_rows(on_time_rows, late_units)
-    winners = sample_rows(
-        on_time_rows, cfg.size_k, ["conv_id", "turn_idx"], "window_start_s",
-        cfg.weight_col, cfg.seed, cfg.salt_buckets, cfg.method, cfg.priority,
-    )
-    win_keys = winners.select(
-        "window_start_s", "conv_id", "turn_idx"
-    ).withColumn("_won", F.lit(True))
-    routed = windowed.join(
-        F.broadcast(win_keys),
-        on=["window_start_s", "conv_id", "turn_idx"],
-        how="left",
-    )
-    winners = winners.select(
-        "window_start_s", "conv_id", "ares_key", "prio_int",
-        F.lit(1).cast("long").alias("n_turns"),
-    )
-    return apply_routing(routed, late_units, evicted_keys), winners
+    return route_units(windowed, units, late_units, cfg)
 
 
 def apply_routing(
@@ -453,8 +391,7 @@ def apply_routing(
 ) -> DataFrame:
     """The routing rule table: turn a fact frame carrying a `_won` flag
     into the single sink/reason-labelled frame. Every mode reaches it
-    through one call (`route_units`, or the simple-mode branch of
-    `build_routed`), so the modes cannot drift.
+    through `route_units`, so the modes cannot drift.
 
     Rules, first match wins:
       invalid_key()      -> dlq(invalid_key)
@@ -527,19 +464,6 @@ def apply_routing(
     )
 
 
-def _filter_late_rows(rows: DataFrame, late_units: DataFrame) -> DataFrame:
-    joined = rows.join(
-        F.broadcast(late_units),
-        on=["window_start_s", "conv_id"],
-        how="left",
-    )
-    keep = (
-        F.col("status").isNull()
-        | ((F.col("status") == "boundary") & (F.unix_timestamp("ts") >= F.col("cutoff_s")))
-    )
-    return joined.filter(keep).drop("status", "cutoff_s")
-
-
 def _metrics_frame(routed: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """The metrics table of a routed frame: rows and distinct conversations
     per (window, sink), dlq rows under a NULL window. Reads only
@@ -566,13 +490,10 @@ def run_pipeline(
     cfg: PipelineConfig,
     dim_role: "DataFrame | None" = None,
     dim_tool: "DataFrame | None" = None,
-    use_pandas_parse: bool = False,
 ) -> PipelineResult:
     raw_cols = transcripts.columns
     persisted: "list[DataFrame]" = []
-    routed, winners = build_routed(
-        transcripts, cfg, dim_role, dim_tool, use_pandas_parse, persisted
-    )
+    routed = build_routed(transcripts, cfg, dim_role, dim_tool, persisted)
 
     sampled = routed.filter(F.col("sink") == "sampled_traces").drop("sink", "reason")
     overflow = routed.filter(F.col("sink") == "overflow").drop("sink")
@@ -587,7 +508,6 @@ def run_pipeline(
         overflow=overflow,
         dlq=dlq,
         metrics=_metrics_frame(routed, cfg),
-        winners=winners,
         cfg=cfg,
         persisted=persisted,
     )

@@ -31,9 +31,13 @@ The Spark-native analog:
    routed pass -> sinks + metrics. The routed pass is the batch plan's own
    routing step, `plans.pipeline.route_units` (capacity, winners, the
    broadcast winner join and `apply_routing`), over rows from the shared
-   `plans.pipeline.prepare` chain. Lateness cannot be decided inside a
-   slice (a conversation's first turn may live in another slice), so it
-   moves to finalize, where the merged unit frame has the global picture;
+   `plans.pipeline.prepare` chain, so checkpoint runs sample whole
+   conversations or single turns (`cfg.trace_aware`) exactly as batch
+   does: the state is the conversation-unit partials either way, and
+   turn winners derive from the finalize's rows. Lateness cannot be
+   decided inside a slice (a conversation's first turn may live in
+   another slice), so it moves to finalize, where the merged unit frame
+   has the global picture;
  - W3 window-expiry guard (processor.go:155-174, checkpoint.go:294-299):
    `finalize(expire_before_s=...)` drops state whose window already closed
    before the restore horizon — those windows' rows route to
@@ -69,7 +73,6 @@ from trace_aware_reservoir_otel_spark.plans.pipeline import (
     commit_routed,
     invalid_key,
     prepare,
-    require_trace_aware,
     route_units,
     unit_source,
 )
@@ -217,7 +220,7 @@ def finalize(
         if late_units is not None:
             late_units = late_units.filter(~expired)
 
-    routed, _ = route_units(prepared, units, late_units, cfg, expired=expired)
+    routed = route_units(prepared, units, late_units, cfg, expired=expired)
     observed, obs = observed_routed(routed)
     # snapshot-commit (plans/commit.py): the routed table becomes readable
     # only at the atomic pointer swap — a kill mid-write leaves readers on
@@ -249,7 +252,6 @@ def run_with_checkpoint(
 ) -> "dict[str, int] | None":
     """Process all pending units (skipping manifest-complete ones), then
     finalize. `fail_after_unit` simulates a mid-run crash for tests."""
-    require_trace_aware(cfg, "run_with_checkpoint")
     os.makedirs(state_dir, exist_ok=True)
     saved = read_bounds(state_dir)
     if saved is not None and saved["n_units"] != n_units:

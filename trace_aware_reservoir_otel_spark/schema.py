@@ -1,4 +1,4 @@
-"""Schemas: input transcripts, enrichment dims, sink tables, state, metrics.
+"""Schemas: input transcripts and enrichment dims.
 
 The transcripts relation is the conversation-turn analog of the reference's
 span stream (span <-> turn, trace <-> conversation): FIXTURES.md §1,
@@ -48,30 +48,3 @@ DIM_TOOL_SCHEMA = T.StructType(
         T.StructField("cost_class", T.StringType(), False),
     ]
 )
-
-# Parsed fields extracted from `text` (north-star F7: tool-call and
-# span-like fields; template in FIXTURES.md §1).
-PARSED_FIELDS = ["p_tool", "p_dur_ms", "p_trace_hex", "p_span_hex"]
-
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("window_start_s", T.LongType(), True),
-        T.StructField("sink", T.StringType(), False),
-        T.StructField("rows", T.LongType(), False),
-        T.StructField("convs", T.LongType(), False),
-        T.StructField("run_id", T.StringType(), False),
-    ]
-)
-
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("unit_id", T.IntegerType(), False),
-        T.StructField("window_start_s", T.LongType(), False),
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("ares_key", T.DoubleType(), False),
-        T.StructField("n_turns", T.LongType(), False),
-    ]
-)
-
-SINKS = ("sampled_traces", "overflow", "dlq")

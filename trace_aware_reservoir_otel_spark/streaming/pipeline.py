@@ -15,7 +15,9 @@ Spark-first, the same semantics in two pieces:
    event-time high watermark passes a bucket's rollover horizon, that
    bucket's rows are routed with state read from ONLY its own partitions
    (through the batch plan's own routing step, `plans.pipeline.route_units`,
-   over rows from the shared `plans.pipeline.prepare` chain), written with
+   over rows from the shared `plans.pipeline.prepare` chain, so either
+   sampling unit — whole conversations or single turns, `cfg.trace_aware`
+   — samples per window as batch does), written with
    per-bucket dynamic partition overwrite —
    idempotent under micro-batch replay — and its state is vacuumed.
    `flush_incremental` routes whatever buckets remain open at stream end.
@@ -67,7 +69,6 @@ from trace_aware_reservoir_otel_spark.plans.pipeline import (
     _bucket_span_s,
     invalid_key,
     prepare,
-    require_trace_aware,
 )
 from trace_aware_reservoir_otel_spark.schema import TRANSCRIPTS_SCHEMA
 from trace_aware_reservoir_otel_spark.session import local_frame
@@ -565,7 +566,7 @@ def _route_buckets(
         ).select("conv_id", F.lit(True).alias("_span_viol"))
         rows = rows.join(F.broadcast(violators), on="conv_id", how="left")
         violated = F.col("_span_viol")
-    routed, _ = route_units(rows, units, late_units, cfg, violated=violated)
+    routed = route_units(rows, units, late_units, cfg, violated=violated)
     observed, obs = observed_routed(routed.drop("_span_viol"))
     observed.withColumn("window_bucket", _bucket_expr(cfg)).write.mode(
         "overwrite"
@@ -662,7 +663,6 @@ def run_incremental_routed(
     tolerance set but NO span bound, conversation starts can move
     arbitrarily late, so export defers to `flush_incremental` — same
     output, one pass later."""
-    require_trace_aware(cfg, "run_incremental_routed")
     stream = stream_transcripts(spark, input_dir, max_files_per_trigger)
     rolling = cfg.late_tolerance_s is None or cfg.max_conv_span_s is not None
     spill_schema = _spill_schema(spark, cfg)
@@ -771,7 +771,6 @@ def flush_incremental(
     Observation, and they balance `incremental_conservation`."""
     from pyspark.sql import Observation
 
-    require_trace_aware(cfg, "flush_incremental")
     spill_schema = _spill_schema(spark, cfg)
     done = _exported_buckets(state_dir)
     # the leaf listing, not the epoch: a folded record's unexported state
