@@ -5,6 +5,7 @@ analog, SURVEY §1.4)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from trace_aware_reservoir_otel_spark.plans.commit import (
@@ -62,10 +63,22 @@ def test_partitioned_commit_and_expire(spark, tmp_path):
     assert _vals(read_committed(spark, table)) == list(range(10))
 
 
-def test_read_committed_falls_back_to_plain_dir(spark, tmp_path):
+def test_read_committed_raises_without_a_pointer(spark, tmp_path):
+    # a plain parquet directory is no committed table
     plain = str(tmp_path / "plain")
     spark.range(5).select(F.col("id").alias("v")).write.parquet(plain)
-    assert _vals(read_committed(spark, plain)) == list(range(5))
+    with pytest.raises(FileNotFoundError, match="plain"):
+        read_committed(spark, plain)
+    # nor is one whose first commit wrote its version but never swapped
+    # the pointer, with or without a schema to read it by
+    crashed = str(tmp_path / "crashed")
+    spark.range(5).select(F.col("id").alias("v")).write.parquet(
+        os.path.join(crashed, "_versions", "v00000001")
+    )
+    with pytest.raises(FileNotFoundError, match="crashed"):
+        read_committed(spark, crashed)
+    with pytest.raises(FileNotFoundError, match="crashed"):
+        read_committed(spark, crashed, schema="v long")
 
 
 def test_write_sinks_lands_through_snapshot_commit(spark, tmp_path):

@@ -27,8 +27,6 @@ def test_config_validation():
         PipelineConfig(window_duration_s=0)
     with pytest.raises(ValueError):
         PipelineConfig(buffer_max_convs=0)
-    with pytest.raises(ValueError):
-        PipelineConfig(method="nope")
 
 
 def test_config_from_dict_durations():
@@ -45,5 +43,8 @@ def test_config_from_dict_rejects_unknown_keys():
     # the untyped `extra` dict is gone with the late-join strategy it carried
     with pytest.raises(ValueError, match="extra"):
         PipelineConfig.from_dict({"extra": {"late_strategy": "shuffle"}})
+    # the phase-1 top-k formulation is not a pipeline option
+    with pytest.raises(ValueError, match="method"):
+        PipelineConfig.from_dict({"method": "pandas"})
     with pytest.raises(ValueError, match="size, window_duration_x"):
         PipelineConfig.from_dict({"size": 3, "window_duration_x": 1, "size_k": 2})

@@ -8,6 +8,7 @@ import duckdb
 from pyspark.sql import functions as F
 
 from trace_aware_reservoir_otel_spark.functions import hashing as H
+from trace_aware_reservoir_otel_spark.operators.reservoir import with_priorities
 from trace_aware_reservoir_otel_spark.operators.windows import (
     duck_window_start_s,
     window_start_s,
@@ -27,28 +28,30 @@ def _quote(s: str) -> str:
 
 
 def test_pbig_parity_spark_duckdb_python(spark):
-    keys = [f"conv-{i:08d}" for i in range(200)] + ["x", "1704067260:conv-7"]
-    df = spark.createDataFrame([(k,) for k in keys], "key string")
+    # the engine's one priority derivation (md5 form) against DuckDB and
+    # Python: the key it hashes is f"{window}:{unit}"
+    windows = [1704067260, 0]
+    units = [f"conv-{i:08d}" for i in range(100)] + ["x", "conv-7'q"]
+    df = spark.createDataFrame(
+        [(w, c) for w in windows for c in units],
+        "window_start_s long, conv_id string",
+    )
     got = {
-        r["key"]: (r["h"], r["u"], r["a"])
-        for r in df.select(
-            "key",
-            H.pbig("key", 42).alias("h"),
-            H.u01("key", 42).alias("u"),
-            H.ares_key("key", 42).alias("a"),
-        ).collect()
+        (r["window_start_s"], r["conv_id"]): (r["prio_int"], r["ares_key"])
+        for r in with_priorities(df, 42, ["conv_id"], hash_impl="md5").collect()
     }
     con = duckdb.connect()
-    for k in keys:
-        q = _quote(k)
+    for (w, c), (prio, ares) in got.items():
+        key = f"{w}:{c}"
         dh, du = con.execute(
-            f"select {H.duck_pbig(q, 42)}, {H.duck_u(q, 42)}"
+            f"select {H.duck_pbig(_quote(key), 42)}, {H.duck_u(_quote(key), 42)}"
         ).fetchone()
-        assert got[k][0] == dh == py_pbig(k, 42)
-        assert got[k][1] == du == py_u(k, 42)
+        assert prio == dh == py_pbig(key, 42)
+        assert du == py_u(key, 42)
         # JVM vs libm log may differ in the last ulp; integer/u parity is
         # exact (and contract queries order by the exact integer priority).
-        assert math.isclose(got[k][2], -math.log(py_u(k, 42)), rel_tol=1e-14)
+        assert math.isclose(ares, -math.log(py_u(key, 42)), rel_tol=1e-14)
+    assert len(got) == len(windows) * len(units)
 
 
 def test_window_bucket_parity(spark):

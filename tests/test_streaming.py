@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
-from trace_aware_reservoir_otel_spark.plans.pipeline import run_pipeline
+from trace_aware_reservoir_otel_spark.plans.pipeline import _bucket_span_s, run_pipeline
 from trace_aware_reservoir_otel_spark.streaming.pipeline import (
     flush_incremental,
     incremental_conservation,
@@ -129,7 +129,6 @@ def test_straggler_rows_route_to_late_arrival_dlq(spark, tmp_path_factory):
         spark, in_dir, cfg, state, os.path.join(base, "ck"), out
     )
     from trace_aware_reservoir_otel_spark.streaming.pipeline import (
-        _bucket_of,
         _exported_buckets,
         flush_incremental,
         incremental_conservation,
@@ -138,7 +137,8 @@ def test_straggler_rows_route_to_late_arrival_dlq(spark, tmp_path_factory):
     first_w = (
         int(first["ts"].timestamp()) // 60
     ) * 60
-    assert _exported_buckets(state).get(_bucket_of(first_w, cfg)) is not None  # bucket rolled
+    first_bucket = first_w // _bucket_span_s(cfg)
+    assert _exported_buckets(state).get(first_bucket) is not None  # bucket rolled
     flush_incremental(spark, cfg, state, out)
     strag = spark.read.parquet(f"{out}/routed_stragglers").collect()
     assert len(strag) == 1

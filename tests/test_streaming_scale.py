@@ -13,7 +13,6 @@ from trace_aware_reservoir_otel_spark import fsutil
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
 from trace_aware_reservoir_otel_spark.plans.pipeline import run_pipeline
 from trace_aware_reservoir_otel_spark.streaming.pipeline import (
-    _bucket_of,
     _exported_buckets,
     _metrics_path,
     _read_epoch,
@@ -499,10 +498,7 @@ def test_manifest_compaction_bounds_records_and_preserves_output(
     per-batch manifest rewrite stays O(open records), not O(all batches
     ever) — while the routed output, conservation, and gauges remain
     exactly the batch pipeline's."""
-    from trace_aware_reservoir_otel_spark.streaming.pipeline import (
-        _epoch_summary,
-        _metrics_summary,
-    )
+    from trace_aware_reservoir_otel_spark.streaming.pipeline import _epoch_summary
 
     cfg = PipelineConfig(
         size_k=5, window_duration_s=60, seed=42, late_tolerance_s=None,
@@ -523,7 +519,10 @@ def test_manifest_compaction_bounds_records_and_preserves_output(
     assert summary["n_batches"] > 0, "no epoch records folded"
     assert summary["n_batches"] + len(epoch_records) == 12
     assert len(epoch_records) < 12, "manifest grew with every batch"
-    msum = _metrics_summary(state)
+    msum = next(
+        (r for r in fsutil.read_jsonl(_metrics_path(state)) if r.get("type") == "summary"),
+        None,
+    )
     assert msum is not None and msum["n_exports"] > 0, "no metrics folded"
 
     flush_incremental(spark, cfg, state, out)

@@ -89,13 +89,11 @@ class PipelineConfig:
                         export latency of up to bucket_span (windows
                         export when their whole bucket's horizon passes).
     seed              : sampling seed; priorities are pure functions of
-                        (seed, conv_id) so runs are bit-reproducible
+                        (seed, window, unit) so runs are bit-reproducible
                         (unlike reservoir.go:52-54 time-seeded RNG).
     salt_buckets      : phase-1 salt fan-out for skewed windows (SURVEY §7.4).
     weight_col        : optional column name holding per-conversation
                         sampling weight (A-Res); None = uniform.
-    method            : 'sql' (pure Column/window-function top-k, JVM-side)
-                        or 'pandas' (applyInPandas partial reservoirs).
     """
 
     size_k: int = 64
@@ -108,7 +106,6 @@ class PipelineConfig:
     seed: int = 42
     salt_buckets: int = 16
     weight_col: "str | None" = None
-    method: str = "sql"
     priority: str = "ares"  # 'ares' (weighted) | 'int' (exact, oracle-portable)
     hash_impl: str = "xxh"  # 'xxh' (fast JVM path) | 'md5' (DuckDB-portable)
     run_id: str = "run-0"
@@ -122,8 +119,6 @@ class PipelineConfig:
             raise ValueError("buffer_max_convs must be positive or None")
         if self.salt_buckets <= 0:
             raise ValueError("salt_buckets must be positive")
-        if self.method not in ("sql", "pandas"):
-            raise ValueError(f"unknown method {self.method!r}")
         if self.priority not in ("ares", "int"):
             raise ValueError(f"unknown priority {self.priority!r}")
         if self.hash_impl not in ("xxh", "md5"):

@@ -5,5 +5,4 @@ from trace_aware_reservoir_otel_spark.functions.hashing import (  # noqa: F401
     duck_u,
     pbig,
     row_key_hash,
-    u01,
 )

@@ -20,7 +20,8 @@ Both verified bit-equal (tests/test_hashing.py). 13 nibbles = 52 bits so
 ``u`` is exactly representable and the (0,1) mapping is exact in IEEE754.
 
 For weighted A-Res (Efraimidis–Spirakis), the sort key is
-``-ln(u)/w`` kept **smallest**-first, equivalent to keeping the k largest
+``-ln(u)/w`` kept **smallest**-first (derived from ``pbig`` in one place,
+``operators/reservoir.with_priorities``), equivalent to keeping the k largest
 ``u^(1/w)``; with uniform weights this degenerates to ordering by ``pbig``
 descending, which is what the integer-only contract queries use.
 
@@ -46,26 +47,6 @@ def phex(key: "Column | str", seed: int) -> Column:
 def pbig(key: "Column | str", seed: int) -> Column:
     """52-bit positive bigint priority, portable to DuckDB."""
     return F.conv(F.substring(phex(key, seed), 1, HEX_DIGITS), 16, 10).cast("long")
-
-
-def u01(key: "Column | str", seed: int) -> Column:
-    """Deterministic uniform (0,1) double, portable to DuckDB."""
-    return (pbig(key, seed).cast("double") + F.lit(0.5)) / F.lit(TWO_POW_52)
-
-
-def ares_key(key: "Column | str", seed: int, weight: "Column | None" = None) -> Column:
-    """A-Res sort key: -ln(u)/w, keep k SMALLEST.
-
-    Pure function of (seed, key, w) — every executor computes the same
-    value with no RNG state, making partial reservoirs mergeable by simple
-    top-k (SURVEY.md §7.4; replaces reservoir.go:106-121 random
-    replacement with the same marginal inclusion law for uniform weights).
-    """
-    u = u01(key, seed)
-    if weight is None:
-        return -F.log(u)
-    w = F.col(weight) if isinstance(weight, str) else weight
-    return -F.log(u) / w.cast("double")
 
 
 def fast_prio_int(seed: int, *cols: "Column | str") -> Column:

@@ -833,10 +833,7 @@ def minhash_index_append(
     from trace_aware_reservoir_otel_spark.plans import commit
 
     k = _minhash_knobs(index_dir)
-    sig = minhash_signatures(
-        new_docs, k["num_hashes"], k["n"], text_col, id_col, k["portable"], k["seed"]
-    )
-    rows = lsh_band_rows(sig, k["bands"], id_col, k["max_bucket"]).select(
+    rows = _batch_band_rows(new_docs, k, text_col, id_col, k["max_bucket"]).select(
         F.col(id_col).alias(k["id_col"]), "band", "bucket"
     )
     return commit.commit_append(
@@ -855,29 +852,6 @@ def _batch_band_rows(
         batch, k["num_hashes"], k["n"], text_col, id_col, k["portable"], k["seed"]
     )
     return lsh_band_rows(sig, k["bands"], id_col, max_bucket)
-
-
-def index_matches(
-    batch: DataFrame,
-    index_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Distinct (id_col, hist_id) candidate matches: batch docs sharing
-    any LSH (band, bucket) with an indexed historical doc. Witnesses are
-    bounded by the stored max_bucket on both sides."""
-    from trace_aware_reservoir_otel_spark.plans import commit
-
-    k = _minhash_knobs(index_dir)
-    idx = commit.read_committed(
-        batch.sparkSession, f"{index_dir}/buckets", schema=_knob_schema(k)
-    ).select(F.col(k["id_col"]).alias("hist_id"), "band", "bucket")
-    rows = _batch_band_rows(batch, k, text_col, id_col, k["max_bucket"])
-    return (
-        rows.join(idx, on=["band", "bucket"])
-        .select(id_col, "hist_id")
-        .distinct()
-    )
 
 
 def incremental_dedup_survivors(

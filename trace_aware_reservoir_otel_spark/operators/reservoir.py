@@ -32,10 +32,13 @@ Scale design (100 TB posture):
    — no shuffle of the big side, no skew (a sampled mega-conversation
    never hashes to one reducer).
 
-Two phase-1 implementations with identical output:
+Two phase-1 implementations with identical output, chosen by
+`topk_units(method=)`; every sampler and pipeline runs the first:
  - method='sql'   : window-function row_number (JVM whole-stage codegen);
  - method='pandas': applyInPandas partial reservoirs (Arrow-vectorized
-   nsmallest per group) — the north-star-named formulation.
+   nsmallest per group) — the north-star-named formulation, reachable
+   only through `topk_units(method=)`: it forks Python workers, and on
+   the batch benchmark's input it ran slower than 'sql'.
 """
 
 from __future__ import annotations
@@ -64,8 +67,9 @@ def with_priorities(
     hash_impl 'md5' hashes the portable string `window:key` (`pbig`, the
     DuckDB-checked form; a multi-column key joins with '#'); 'xxh' hashes
     the columns themselves (`fast_prio_int`, no string materialization).
-    The A-Res key reuses the integer: u = (prio_int + 0.5) / 2^52 as in
-    `hashing.u01`, key = -ln(u) / w (w = `weight_col`, uniform when None).
+    The A-Res key reuses the integer: u = (prio_int + 0.5) / 2^52 (the
+    construction in functions/hashing.py), key = -ln(u) / w (w =
+    `weight_col`, uniform when None).
     """
     if hash_impl == "xxh":
         prio = fast_prio_int(seed, window_col, *key_cols)
@@ -177,7 +181,6 @@ def sample_conversations(
     weight_col: "str | None" = None,
     seed: int = 42,
     salt_buckets: int = 16,
-    method: str = "sql",
     priority: str = "ares",
 ) -> "tuple[DataFrame, DataFrame]":
     """Conversation-atomic reservoir: returns (turns_with_flag, winners).
@@ -188,7 +191,7 @@ def sample_conversations(
     """
     _check_weighting(priority, weight_col)
     units = conversation_units(df, window_col, conv_col, weight_col, seed)
-    winners = topk_units(units, k, window_col, conv_col, salt_buckets, method, priority)
+    winners = topk_units(units, k, window_col, conv_col, salt_buckets, priority=priority)
     win_small = F.broadcast(winners.select(window_col, conv_col, "ares_key"))
     flagged = df.join(
         win_small.withColumn("sampled", F.lit(True)),
@@ -206,7 +209,6 @@ def sample_rows(
     weight_col: "str | None" = None,
     seed: int = 42,
     salt_buckets: int = 16,
-    method: str = "sql",
     priority: str = "ares",
 ) -> DataFrame:
     """Simple (non-trace-aware) per-window row reservoir
@@ -217,4 +219,6 @@ def sample_rows(
         "_unit", F.concat_ws("#", *[F.col(c).cast("string") for c in key_cols])
     )
     with_key = with_priorities(keyed, seed, ["_unit"], window_col, weight_col)
-    return topk_units(with_key, k, window_col, "_unit", salt_buckets, method, priority).drop("_unit")
+    return topk_units(
+        with_key, k, window_col, "_unit", salt_buckets, priority=priority
+    ).drop("_unit")

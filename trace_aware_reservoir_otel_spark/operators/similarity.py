@@ -33,8 +33,9 @@ md5(seed:table:band:plane:dim) — the same portable construction as
 functions/hashing.pbig — computed driver-side and embedded as literals in
 both plans.
 
-Exact cosine uses F.zip_with / F.aggregate (sequential fold —
-deterministic summation order, reproducible across partitionings).
+Exact cosine sums products left to right from 0.0 (a sequential fold —
+deterministic summation order, reproducible across partitionings),
+unrolled per dimension (the fixed-dimension forms below).
 """
 
 from __future__ import annotations
@@ -55,27 +56,11 @@ def _quantized(col: Column) -> Column:
     return F.transform(col, lambda x: F.floor(x.cast("double") * QUANT).cast("long"))
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 # --- fixed-dimension unrolled forms ------------------------------------------
 #
-# The generic folds above are higher-order functions, which Spark evaluates
-# INTERPRETED per element (no whole-stage codegen) — measured as the
-# dominant cost of every pairwise-cosine operator. When the dimension is
+# A generic fold (F.zip_with + F.aggregate) is a higher-order function,
+# which Spark evaluates INTERPRETED per element (no whole-stage codegen) —
+# measured as the dominant cost of every pairwise-cosine operator. When the dimension is
 # known (it always is: embedding corpora are fixed-width), the same
 # arithmetic unrolls into a plain left-associated expression chain that
 # codegen compiles: ((0.0 + a0*b0) + a1*b1) + ... is BIT-IDENTICAL to the
@@ -114,8 +99,8 @@ def _dot_const_sql(a: str, vec: "list[float]") -> str:
 
 
 def dot_const(a: str, vec: "list[float]") -> Column:
-    """Unrolled dot against a Python constant vector — same summation
-    order as dot(a, F.array(*lits))."""
+    """Unrolled dot against a Python constant vector — the same left fold
+    from 0.0 as `dot_fixed`."""
     return F.expr(_dot_const_sql(a, vec))
 
 
@@ -149,7 +134,7 @@ def _pin(col: Column) -> Column:
 
 
 def _py_norm(vec: "list[float]") -> float:
-    """Driver-side norm with the SAME op order as the `norm` fold (0.0,
+    """Driver-side norm with the SAME op order as `norm_fixed` (0.0,
     then += x*x left to right, then sqrt) — IEEE754 doubles in Python and
     the JVM agree bit-for-bit, so embedding it as a literal is exact."""
     import math

@@ -17,8 +17,10 @@ implements exactly that shape on a filesystem:
    half-written version directory is invisible garbage, reclaimed by
    `expire_snapshots`.
  - `read_committed` resolves the pointer and reads that snapshot only.
-   For back-compat it falls back to a plain read when no pointer exists
-   (pre-shim layouts).
+   A table with no pointer (never committed, or its first commit
+   crashed before the swap) raises FileNotFoundError: it is not read as
+   a plain directory, where Spark's hidden `_versions/` would surface as
+   a schema-inference error or, given a schema, an empty frame.
  - `expire_snapshots` deletes non-current versions — the analog of the
    reference's checkpoint GC/compaction (checkpoint.go:377-417) and of
    Iceberg's expire_snapshots.
@@ -63,6 +65,17 @@ def _version_dir(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, _VERSIONS, f"v{version:08d}")
 
 
+def _next_version(table_dir: str) -> int:
+    """One past the highest version directory on disk, committed or not:
+    a crashed writer's dangling directory is never reused."""
+    vroot = os.path.join(table_dir, _VERSIONS)
+    existing = [
+        int(d[1:]) for d in (os.listdir(vroot) if os.path.isdir(vroot) else [])
+        if d.startswith("v")
+    ]
+    return max(existing, default=0) + 1
+
+
 def commit_write(
     df: DataFrame,
     table_dir: str,
@@ -70,16 +83,7 @@ def commit_write(
 ) -> int:
     """Write df as the table's next immutable snapshot, then atomically
     swap the current-pointer. Returns the committed version number."""
-    existing = [
-        int(d[1:])
-        for d in (
-            os.listdir(os.path.join(table_dir, _VERSIONS))
-            if os.path.isdir(os.path.join(table_dir, _VERSIONS))
-            else []
-        )
-        if d.startswith("v")
-    ]
-    version = max(existing, default=0) + 1
+    version = _next_version(table_dir)
     vdir = _version_dir(table_dir, version)
     writer = df.write.mode("overwrite")
     if partition_by:
@@ -115,16 +119,7 @@ def commit_append(
     be detected instead of re-executed (see streaming/dedup.py)."""
     prev_dirs = _current_dirs(table_dir)
     prev_keys = committed_keys(table_dir)
-    existing = [
-        int(d[1:])
-        for d in (
-            os.listdir(os.path.join(table_dir, _VERSIONS))
-            if os.path.isdir(os.path.join(table_dir, _VERSIONS))
-            else []
-        )
-        if d.startswith("v")
-    ]
-    version = max(existing, default=0) + 1
+    version = _next_version(table_dir)
     vdir = _version_dir(table_dir, version)
     writer = df.write.mode("overwrite")
     if partition_by:
@@ -176,8 +171,8 @@ def read_version(
 
 def read_committed(spark: SparkSession, table_dir: str, schema=None) -> DataFrame:
     """Read the table's current committed snapshot (single dir or an
-    append chain of delta dirs). Falls back to a plain directory read when
-    no pointer exists (pre-shim layout). Chain dirs are read separately
+    append chain of delta dirs); FileNotFoundError when the table has no
+    commit pointer. Chain dirs are read separately
     and unioned — each keeps its own hive-partition discovery, and filter
     pushdown (incl. partition pruning) passes through a union, so a
     probe's PartitionFilters reach every delta.
@@ -188,7 +183,9 @@ def read_committed(spark: SparkSession, table_dir: str, schema=None) -> DataFram
     must read back as an empty frame, not an inference error."""
     from functools import reduce
 
-    dirs = _current_dirs(table_dir) or [table_dir]
+    dirs = _current_dirs(table_dir)
+    if not dirs:
+        raise FileNotFoundError(f"no committed snapshot in table {table_dir}")
     return reduce(
         lambda a, b: a.unionByName(b),
         (_read_parquet(spark, d, schema) for d in dirs),

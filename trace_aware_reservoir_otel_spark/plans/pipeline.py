@@ -343,7 +343,7 @@ def route_units(
         ).withColumn("_unit", F.concat_ws("#", *keys[1:]))
     winners = topk_units(
         population, cfg.size_k, "window_start_s", unit,
-        cfg.salt_buckets, cfg.method, cfg.priority,
+        cfg.salt_buckets, priority=cfg.priority,
     )
     win_keys = winners.select(*keys).withColumn("_won", F.lit(True))
     routed = rows.join(F.broadcast(win_keys), on=keys, how="left")
@@ -401,6 +401,22 @@ def apply_routing(
       evicted_keys       -> overflow(capacity)
       _won               -> sampled_traces
       otherwise          -> overflow(unsampled)
+
+    Where the reference drops rows silently, a rule routes them to a sink
+    instead, so |sampled_traces| + |overflow| + |dlq| == |input| per run
+    (the per-sink counter gate of metrics.go:47-142, checked on the sink
+    Observation by `operators.metrics.conservation_ok`):
+     - invalid ids, filtered silently by the reference
+       (trace_buffer.go:80-85), route to dlq(invalid_key);
+     - LRU eviction, which dropped whole traces (trace_buffer.go:201-240),
+       becomes a deterministic capacity rank (the most active
+       conversations stay, the analog of "recently updated stays"), and
+       evicted conversations route whole to overflow(capacity);
+     - late spans, rolled silently into the next window
+       (window.go:75-105), are turns more than `late_tolerance_s` before
+       their conversation's first turn and route to dlq(late);
+     - unsampled rows, discarded by the reference at rollover, route to
+       overflow(unsampled).
 
     `violated` (optional Column) marks conversations observed to break the
     declared `max_conv_span_s` bound: their late classification is

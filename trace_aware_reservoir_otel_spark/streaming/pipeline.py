@@ -87,11 +87,6 @@ def stream_transcripts(
 # --- streaming routed fan-out (rollover export) ------------------------------
 
 
-def _bucket_of(w, cfg: PipelineConfig):
-    """Python-side bucket id of a window value (None -> -1)."""
-    return -1 if w is None else int(w) // _bucket_span_s(cfg)
-
-
 def _exported_buckets(state_dir: str) -> "dict":
     """bucket -> batch_id at whose roll it was exported (None = flush).
     An export's metrics record is its buckets' mark: the open export
@@ -255,13 +250,6 @@ def compact_manifests(state_dir: str) -> "tuple[int, int]":
         )
         fsutil.write_jsonl_atomic(_metrics_path(state_dir), [summary] + keep_m)
     return (len(fold), len(fold_m))
-
-
-def _metrics_summary(state_dir: str) -> "dict | None":
-    for rec in fsutil.read_jsonl(_metrics_path(state_dir)):
-        if rec.get("type") == "summary":
-            return rec
-    return None
 
 
 def _metrics_path(state_dir: str) -> str:

@@ -24,9 +24,9 @@ Properties (all driven by the seed):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from trace_aware_reservoir_otel_spark.functions.hashing import pbig, u01
+from trace_aware_reservoir_otel_spark.functions.hashing import TWO_POW_52, pbig
 from trace_aware_reservoir_otel_spark.schema import TRANSCRIPTS_SCHEMA
 
 BASE_EPOCH_S = 1704067200  # 2024-01-01T00:00:00Z
@@ -71,7 +71,12 @@ def generate_transcripts(
         numPartitions=partitions or max(4, n_convs // 250000),
     )
     cid = F.col("id")
-    size_u = u01(F.concat(F.lit("size:"), cid), seed)
+
+    def uniform(tag: str) -> Column:
+        # uniform (0, 1) from the 52-bit priority of (seed, tag, conv index)
+        return (pbig(F.concat(F.lit(tag), cid), seed).cast("double") + 0.5) / TWO_POW_52
+
+    size_u = uniform("size:")
     base_size = (F.lit(1) + F.floor(size_u * 8).cast("int")).cast("int")
     tail_size = (F.lit(20) + F.floor(size_u * 80).cast("int")).cast("int")
     n_turns = (
@@ -80,7 +85,7 @@ def generate_transcripts(
         .otherwise(base_size)
     )
     start_s = F.lit(BASE_EPOCH_S) + (pbig(F.concat(F.lit("start:"), cid), seed) % F.lit(span_s))
-    is_late_conv = u01(F.concat(F.lit("late:"), cid), seed) < F.lit(LATE_FRAC)
+    is_late_conv = uniform("late:") < F.lit(LATE_FRAC)
 
     convs = convs.select(
         F.format_string("conv-%08d", cid).alias("conv_id"),
