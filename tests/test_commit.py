@@ -118,7 +118,8 @@ def test_routed_table_is_bucketed_by_sink_and_export_bucket(spark, tmp_path):
     """Batch and checkpoint write the routed table partitioned by (sink,
     window_bucket): a bucket spans export_bucket_windows windows, so the
     directory count follows buckets, not windows, and one read_committed
-    reader sees the same partition columns in both modes."""
+    reader sees the same partition columns in both modes. Both modes also
+    commit the same metrics table."""
     import math
 
     from trace_aware_reservoir_otel_spark import fsutil
@@ -175,6 +176,12 @@ def test_routed_table_is_bucketed_by_sink_and_export_bucket(spark, tmp_path):
     for r in batch.select("window_start_s", "window_bucket").distinct().collect():
         want = -1 if r["window_start_s"] is None else r["window_start_s"] // span
         assert r["window_bucket"] == want
+    # one metrics table format: both modes commit write_sinks' table
+    bm, cm = (read_committed(spark, f"{out}/metrics") for out in (batch_out, ckpt_out))
+    assert bm.schema == cm.schema
+    assert sorted(map(tuple, bm.collect()), key=repr) == sorted(
+        map(tuple, cm.collect()), key=repr
+    )
     df.unpersist()
 
 

@@ -162,7 +162,7 @@ def test_checkpoint_unit_aggregate_skips_enrich(spark, tmp_path, monkeypatch):
         return seen[-1]
 
     monkeypatch.setattr(state, "_unit_pre_aggregate", recording)
-    bounds = state.unit_bounds(tr, cfg, 1)[0]
+    bounds = state.unit_bounds(tr, cfg, 1)
     state.process_unit(tr, cfg, str(tmp_path / "st"), 0, bounds)
     plan = _plan_of(seen[0])
     assert "BroadcastHashJoin" not in plan, plan

@@ -11,11 +11,12 @@ from contextlib import redirect_stdout
 import pytest
 from pyspark.sql import functions as F
 
+from trace_aware_reservoir_otel_spark import fsutil
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
+from trace_aware_reservoir_otel_spark.plans import commit
 from trace_aware_reservoir_otel_spark.plans.pipeline import run_pipeline
 from trace_aware_reservoir_otel_spark.plans.state import (
     process_unit,
-    read_manifest,
     run_with_checkpoint,
     slice_predicate,
     state_metrics,
@@ -31,10 +32,18 @@ def data(spark):
     return generate_transcripts(spark, n_convs=200, seed=42).cache()
 
 
-def _sampled_set(spark, out_dir):
-    from trace_aware_reservoir_otel_spark.plans.commit import read_committed
+def _sink_total(counts):
+    """Rows over the sinks of a `write_sinks` counts dict (its `metrics`
+    entry is the metrics table's row count, not a sink)."""
+    return sum(v for k, v in counts.items() if k != "metrics")
 
-    routed = read_committed(spark, f"{out_dir}/routed")
+
+def _done_units(state_dir):
+    return {rec["unit"] for rec in commit.committed_keys(f"{state_dir}/units")}
+
+
+def _sampled_set(spark, out_dir):
+    routed = commit.read_committed(spark, f"{out_dir}/routed")
     return {
         (r["conv_id"], r["turn_idx"], r["text"])
         for r in routed.filter(F.col("sink") == "sampled_traces")
@@ -56,10 +65,65 @@ def test_resume_equals_uninterrupted(spark, data, tmp_path_factory):
         spark, data, CFG, s2, o2, n_units=4, fail_after_unit=1
     )
     assert crashed is None
-    assert read_manifest(s2) == {0, 1}
+    assert _done_units(s2) == {0, 1}
     counts2 = run_with_checkpoint(spark, data, CFG, s2, o2, n_units=4)
     assert counts1 == counts2
     assert _sampled_set(spark, o1) == _sampled_set(spark, o2)
+
+
+def test_crash_at_unit_commit_resumes_without_the_dangling_version(
+    spark, data, tmp_path_factory, monkeypatch
+):
+    """Crash a checkpoint run at unit 2's commit point: its partials are
+    written to a fresh version dir, but the pointer swap fails. Resume must
+    redo unit 2 into a new version, never read the dangling dir, reclaim
+    it once every unit is committed, and equal an uninterrupted run."""
+    from tests.test_fsutil import _FaultyCommitter
+
+    base = tmp_path_factory.mktemp("state_unit_crash")
+    o1, s1 = str(base / "o1"), str(base / "s1")
+    counts1 = run_with_checkpoint(spark, data, CFG, s1, o1, n_units=4)
+
+    s2, o2 = str(base / "s2"), str(base / "o2")
+    units = f"{s2}/units"
+    # the third pointer swap of the run is unit 2's
+    prev = fsutil.set_committer(_FaultyCommitter(fail_at=3))
+    try:
+        with pytest.raises(OSError, match="injected fault"):
+            run_with_checkpoint(spark, data, CFG, s2, o2, n_units=4)
+    finally:
+        fsutil.set_committer(prev)
+    assert _done_units(s2) == {0, 1}
+    dangling = [s["dir"] for s in commit.snapshots(units) if not s["current"]]
+    dangling = [d for d in dangling if d not in commit._current_dirs(units)]
+    assert len(dangling) == 1 and os.listdir(dangling[0])
+
+    read_dirs = []
+    real_read = commit._read_parquet
+
+    def spy(spark_, path, schema=None):
+        read_dirs.append(path)
+        return real_read(spark_, path, schema)
+
+    monkeypatch.setattr(commit, "_read_parquet", spy)
+    counts2 = run_with_checkpoint(spark, data, CFG, s2, o2, n_units=4)
+
+    assert dangling[0] not in read_dirs
+    assert not os.path.exists(dangling[0])  # reclaimed at the last commit
+    assert _done_units(s2) == {0, 1, 2, 3}
+    assert counts2 == counts1
+    assert _sampled_set(spark, o2) == _sampled_set(spark, o1)
+    # the gauges count committed state only
+    g1, g2 = (
+        {r["metric"]: r["value"] for r in state_metrics(spark, s).collect()}
+        for s in (s1, s2)
+    )
+    assert g2["state_rows"] == g1["state_rows"] and g2["units_done"] == 4
+    committed_files = [
+        f for d in commit._current_dirs(units) for f in os.listdir(d)
+        if f.endswith(".parquet")
+    ]
+    assert g2["state_files"] == len(committed_files)
 
 
 def test_checkpoint_matches_direct_pipeline(spark, data, tmp_path_factory):
@@ -75,14 +139,13 @@ def test_checkpoint_matches_direct_pipeline(spark, data, tmp_path_factory):
     }
     via_state = {(c, t) for c, t, _ in _sampled_set(spark, out)}
     assert direct == via_state
-    total = sum(counts.values())
-    assert total == data.count()
+    assert _sink_total(counts) == data.count()
 
 
 def test_state_table_is_unit_frame_sized(spark, data, tmp_path_factory):
     base = tmp_path_factory.mktemp("state_bounded")
     run_with_checkpoint(spark, data, CFG, str(base / "st"), str(base / "o"), n_units=4)
-    state = spark.read.parquet(str(base / "st" / "units"))
+    state = commit.read_committed(spark, str(base / "st" / "units"))
     # state volume == one row per (window, conv) unit — O(conv-windows),
     # never O(rows) — and window-aligned slices put each unit in exactly
     # one slice (no duplicates across units)
@@ -112,11 +175,8 @@ def test_rows_scanned_independent_of_n_units(spark, data, tmp_path_factory):
     for n_units in (2, 6):
         bounds = unit_bounds(data, CFG, n_units)
         st = str(base / f"st{n_units}")
-        import os
-
-        os.makedirs(st, exist_ok=True)
         totals[n_units] = sum(
-            process_unit(data, CFG, st, u, bounds[u]) for u in range(n_units)
+            process_unit(data, CFG, st, u, bounds) for u in range(n_units)
         )
     assert totals[2] == totals[6] == n_valid
 
@@ -159,10 +219,8 @@ def test_window_expiry_guard(spark, data, tmp_path_factory):
         expire_before_s=int(max_s) + 120,
     )
     assert "sampled_traces" not in counts_exp
-    assert sum(counts_exp.values()) == sum(counts_live.values()) == data.count()
-    from trace_aware_reservoir_otel_spark.plans.commit import read_committed
-
-    routed = read_committed(spark, f"{o_exp}/routed")
+    assert _sink_total(counts_exp) == _sink_total(counts_live) == data.count()
+    routed = commit.read_committed(spark, f"{o_exp}/routed")
     reasons = {r["reason"] for r in routed.select("reason").distinct().collect()}
     assert "window_expired" in reasons
 
@@ -203,7 +261,7 @@ def test_weighted_checkpoint_matches_direct(spark, data, tmp_path_factory):
 
 def test_more_units_than_windows(spark, data, tmp_path_factory):
     """n_units far above the window count: surplus slices are empty; the
-    result is identical and the manifest still resumes correctly."""
+    result is identical and the committed units still resume correctly."""
     base = tmp_path_factory.mktemp("state_many_units")
     o1, o2 = str(base / "o1"), str(base / "o2")
     c1 = run_with_checkpoint(spark, data, CFG, str(base / "s1"), o1, n_units=64)
@@ -223,7 +281,7 @@ def test_resume_rejects_changed_n_units(spark, data, tmp_path_factory):
 
 
 def test_resume_rejects_grown_input(spark, data, tmp_path_factory):
-    """Rows outside the manifest-saved ts bounds at resume would silently
+    """Rows outside the committed ts bounds at resume would silently
     miss pre-aggregation (their windows would sample nothing) — refuse."""
     base = tmp_path_factory.mktemp("state_bounds_guard")
     s = str(base / "st")
@@ -253,4 +311,4 @@ def test_checkpoint_turn_sampling_equals_direct(spark, data, tmp_path_factory):
     got = _routed_histogram(read_committed(spark, f"{out}/routed"))
     assert got == _routed_histogram(run_pipeline(data, cfg).routed)
     assert any(k[3] == "capacity" for k in got)
-    assert sum(counts.values()) == sum(got.values()) == data.count()
+    assert _sink_total(counts) == sum(got.values()) == data.count()

@@ -6,8 +6,10 @@ continuation across a second availableNow run on the same checkpoint."""
 import os
 import time
 
-from trace_aware_reservoir_otel_spark import fsutil
+import pytest
+
 from trace_aware_reservoir_otel_spark.operators.dedup import minhash_index
+from trace_aware_reservoir_otel_spark.plans import commit
 from trace_aware_reservoir_otel_spark.streaming.dedup import (
     read_seen,
     read_survivors,
@@ -74,8 +76,8 @@ def test_streaming_ingest_dedup_sequential_fold(spark, tmp_path):
         seen_by_batch.setdefault(r.batch_id, set()).add(r.doc_id)
     for bid, ids in by_batch.items():
         assert ids <= seen_by_batch[bid]
-    # three applied batches recorded exactly once each
-    applied = [r["batch_id"] for r in fsutil.read_jsonl(f"{out}/applied.jsonl")]
+    # three applied batches, each keyed exactly once in the index pointer
+    applied = commit.committed_keys(f"{idx}/buckets")
     assert sorted(applied) == sorted(set(applied)) and len(applied) == 3
 
     # continuation on the SAME checkpoint: only the new file processes;
@@ -90,8 +92,8 @@ def test_streaming_ingest_dedup_sequential_fold(spark, tmp_path):
         303,
         402,
     }
-    applied2 = [r["batch_id"] for r in fsutil.read_jsonl(f"{out}/applied.jsonl")]
-    assert len(applied2) == 4
+    applied2 = commit.committed_keys(f"{idx}/buckets")
+    assert applied2[:3] == applied and len(set(applied2)) == 4
 
 
 def test_streaming_ingest_dedup_empty_initial_index_accepts_first(spark, tmp_path):
@@ -120,58 +122,70 @@ def test_streaming_ingest_dedup_empty_initial_index_accepts_first(spark, tmp_pat
     assert {r.doc_id for r in read_survivors(spark, out).collect()} == {1, 2, 4}
 
 
+def _one_batch(spark, tmp_path, name):
+    idx, out = str(tmp_path / f"{name}_idx"), str(tmp_path / f"{name}_out")
+    hist = spark.createDataFrame([(0, A)], "doc_id long, text string")
+    minhash_index(hist, idx, num_hashes=8, n=3, bands=4, seed=7)
+    batch = spark.createDataFrame(
+        [(10, A), (11, C)], "doc_id long, text string"
+    )
+    return idx, out, batch
+
+
+def _applied_state(spark, idx, out):
+    return (
+        sorted(r.doc_id for r in read_survivors(spark, out).collect()),
+        sorted(r.doc_id for r in read_seen(spark, out).collect()),
+        commit.current_version(f"{idx}/buckets"),
+        commit.committed_keys(f"{idx}/buckets"),
+    )
+
+
 def test_replay_of_applied_batch_keeps_survivors(spark, tmp_path):
     """Round-5 verdict #1: a foreachBatch replay of an ALREADY-APPLIED
     batch must not recompute survivors (the index already contains the
     batch's own bucket rows — every survivor would self-collide and the
-    sink would be overwritten empty). The fixed ordering checks the
-    applied manifest first and touches nothing."""
-    from trace_aware_reservoir_otel_spark.plans import commit
+    sink would be overwritten empty). The index append is the batch's one
+    commit point: its key in the index pointer is found first on replay
+    and nothing is touched. No other mark is written."""
     from trace_aware_reservoir_otel_spark.streaming.dedup import dedup_batch
 
-    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
-    hist = spark.createDataFrame([(0, A)], "doc_id long, text string")
-    minhash_index(hist, idx, num_hashes=8, n=3, bands=4, seed=7)
-    batch = spark.createDataFrame(
-        [(10, A), (11, C)], "doc_id long, text string"
-    )
+    idx, out, batch = _one_batch(spark, tmp_path, "replay")
     dedup_batch(batch, 0, idx, out)
-    assert {r.doc_id for r in read_survivors(spark, out).collect()} == {11}
-    v1 = commit.current_version(f"{idx}/buckets")
+    applied = _applied_state(spark, idx, out)
+    assert applied[0] == [11] and applied[3] == ["batch=0"]
 
-    dedup_batch(batch, 0, idx, out)  # at-least-once replay after the mark
-    # survivors sink byte-stable and NON-EMPTY; no duplicate index delta;
-    # applied manifest still has exactly one record
-    assert {r.doc_id for r in read_survivors(spark, out).collect()} == {11}
-    assert commit.current_version(f"{idx}/buckets") == v1
-    applied = fsutil.read_jsonl(f"{out}/applied.jsonl")
-    assert [r["batch_id"] for r in applied] == [0]
+    dedup_batch(batch, 0, idx, out)  # at-least-once replay after the commit
+    # survivors sink byte-stable and NON-EMPTY; no duplicate index delta
+    assert _applied_state(spark, idx, out) == applied
+    assert sorted(os.listdir(out)) == ["seen", "survivors"]
 
 
-def test_replay_after_crash_between_append_and_mark(spark, tmp_path):
-    """Round-5 advice #2: crash AFTER the index append committed but
-    BEFORE the applied mark landed. On replay the batch is unmarked but
-    its survivors are already in the index — the keyed append
-    (commit pointer idempotency tag) detects this, restores the mark, and
-    recomputes nothing: survivors stay intact, the index gains no
-    duplicate delta."""
-    from trace_aware_reservoir_otel_spark.plans import commit
+def test_replay_after_crash_before_index_append(spark, tmp_path, monkeypatch):
+    """Crash after the seen and survivors sinks are written and before the
+    keyed index append runs: no key is committed, so the replay recomputes
+    against an index that does not hold the batch yet. It must leave the
+    survivors, seen ids, index version and keys of an uninterrupted run."""
     from trace_aware_reservoir_otel_spark.streaming.dedup import dedup_batch
 
-    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
-    hist = spark.createDataFrame([(0, A)], "doc_id long, text string")
-    minhash_index(hist, idx, num_hashes=8, n=3, bands=4, seed=7)
-    batch = spark.createDataFrame(
-        [(10, A), (11, C)], "doc_id long, text string"
-    )
+    idx, out, batch = _one_batch(spark, tmp_path, "clean")
     dedup_batch(batch, 0, idx, out)
-    v1 = commit.current_version(f"{idx}/buckets")
-    os.remove(f"{out}/applied.jsonl")  # the crash: mark lost, append kept
+    expected = _applied_state(spark, idx, out)
+
+    idx, out, batch = _one_batch(spark, tmp_path, "crash")
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("simulated crash before the index append")
+
+    with monkeypatch.context() as m:
+        m.setattr(commit, "commit_append", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            dedup_batch(batch, 0, idx, out)
+    assert sorted(os.listdir(out)) == ["seen", "survivors"]
+    assert commit.committed_keys(f"{idx}/buckets") == []
 
     dedup_batch(batch, 0, idx, out)
-    assert {r.doc_id for r in read_survivors(spark, out).collect()} == {11}
-    assert commit.current_version(f"{idx}/buckets") == v1
-    assert [r["batch_id"] for r in fsutil.read_jsonl(f"{out}/applied.jsonl")] == [0]
+    assert _applied_state(spark, idx, out) == expected
 
 
 def test_stream_documents_schema(spark, tmp_path):

@@ -29,14 +29,19 @@ On HDFS the pointer swap is rename(2); on object stores the same protocol
 holds with a conditional PUT of the pointer object. Version data dirs are
 written once and never mutated, so they need no atomicity of their own.
 
-Used by the batch sink writers (plans/pipeline.write_sinks,
-plans/state.finalize), which both write the routed table partitioned by
-(sink, window_bucket). The streaming rollover keeps per-bucket dynamic
-partition overwrite instead: its commit unit is one export-bucket
-partition, and its one commit point is the export's record in the
-stream's `metrics.jsonl`, which is also the buckets' mark
-(streaming/pipeline._route_buckets). A snapshot commit per roll would be
-a second commit point beside that record.
+Used by the batch sink writers (plans/pipeline.write_sinks, which the
+checkpoint finalize calls too), which write the routed table partitioned
+by (sink, window_bucket) and the metrics table. `commit_append` is the
+one commit point of the two incremental paths that record what they
+applied: a checkpoint unit (plans/state.process_unit) and a streaming
+dedup batch (streaming/dedup.dedup_batch, through the MinHash index's
+append). Each stamps its append with a `key` record, and
+`committed_keys` is the only place either path looks up what is done:
+there is no side manifest that could disagree with the pointer. The
+streaming rollover keeps per-bucket dynamic partition overwrite instead:
+its commit unit is one export-bucket partition, and its one commit point
+is the export's record in the stream's `metrics.jsonl`, which is also
+the buckets' mark (streaming/pipeline._route_buckets).
 """
 
 from __future__ import annotations
@@ -101,7 +106,7 @@ def commit_append(
     df: DataFrame,
     table_dir: str,
     partition_by: "list[str] | None" = None,
-    key: "str | None" = None,
+    key=None,
 ) -> int:
     """Append df as a new immutable DELTA directory: the next version's
     data is (previous snapshot's dirs + the new dir), recorded in the
@@ -111,12 +116,14 @@ def commit_append(
     costs O(batch) each, not O(table) — the difference between an
     incremental index refresh and a rebuild. Returns the new version.
 
-    `key` (optional) is an idempotency tag recorded in the pointer's
-    accumulated `keys` list (Iceberg's snapshot-summary analog): an
-    at-least-once writer stamps each append with its batch identity and
-    consults `committed_keys` before re-appending, so a replay after a
-    crash between the append-commit and the caller's own applied-mark can
-    be detected instead of re-executed (see streaming/dedup.py)."""
+    `key` (optional) is the append's record, kept in the pointer's
+    accumulated `keys` list (Iceberg's snapshot-summary analog): any JSON
+    value, or a zero-argument callable returning one, called after the
+    data write and before the swap so the record can carry the write's
+    Observation counts. The swap publishes the data and the record
+    together, so an at-least-once writer consults `committed_keys` before
+    re-appending and needs no manifest of its own: a crash before the
+    swap leaves neither, a crash after it leaves both."""
     prev_dirs = _current_dirs(table_dir)
     prev_keys = committed_keys(table_dir)
     version = _next_version(table_dir)
@@ -126,6 +133,8 @@ def commit_append(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(vdir)
     rec: dict = {"version": version, "dirs": prev_dirs + [vdir]}
+    if callable(key):
+        key = key()
     keys = prev_keys + ([key] if key is not None else [])
     if keys:
         rec["keys"] = keys
@@ -133,9 +142,10 @@ def commit_append(
     return version
 
 
-def committed_keys(table_dir: str) -> "list[str]":
-    """Idempotency tags of every append folded into the current snapshot
-    ([] when none were stamped, or after a commit_write reset the chain)."""
+def committed_keys(table_dir: str) -> list:
+    """The `key` records of every append folded into the current
+    snapshot, in commit order ([] when none were stamped, or after a
+    commit_write reset the chain)."""
     recs = fsutil.read_jsonl(_pointer_path(table_dir))
     if not recs:
         return []

@@ -501,16 +501,16 @@ def _metrics_frame(routed: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def run_pipeline(
-    transcripts: DataFrame,
+def routed_result(
+    routed: DataFrame,
     cfg: PipelineConfig,
-    dim_role: "DataFrame | None" = None,
-    dim_tool: "DataFrame | None" = None,
+    raw_cols: "list[str]",
+    persisted: "list[DataFrame] | None" = None,
 ) -> PipelineResult:
-    raw_cols = transcripts.columns
-    persisted: "list[DataFrame]" = []
-    routed = build_routed(transcripts, cfg, dim_role, dim_tool, persisted)
-
+    """Wrap a routed frame as the `PipelineResult` `write_sinks` takes —
+    the batch plan's and the checkpoint finalize's, so both commit the same
+    routed and metrics tables. `raw_cols` are the input columns the dlq
+    frame keeps."""
     sampled = routed.filter(F.col("sink") == "sampled_traces").drop("sink", "reason")
     overflow = routed.filter(F.col("sink") == "overflow").drop("sink")
     dlq = routed.filter(F.col("sink") == "dlq").select(*raw_cols, "reason")
@@ -527,6 +527,17 @@ def run_pipeline(
         cfg=cfg,
         persisted=persisted,
     )
+
+
+def run_pipeline(
+    transcripts: DataFrame,
+    cfg: PipelineConfig,
+    dim_role: "DataFrame | None" = None,
+    dim_tool: "DataFrame | None" = None,
+) -> PipelineResult:
+    persisted: "list[DataFrame]" = []
+    routed = build_routed(transcripts, cfg, dim_role, dim_tool, persisted)
+    return routed_result(routed, cfg, transcripts.columns, persisted)
 
 
 def commit_routed(routed: DataFrame, cfg: PipelineConfig, out_dir: str) -> int:

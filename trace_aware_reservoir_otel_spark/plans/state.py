@@ -13,7 +13,7 @@ The Spark-native analog:
    input once per unit; this replaces that). This is the batch analog of
    the reference's incremental checkpointing (checkpoint.go:82-211), which
    also consumes the stream once, in time order;
- - per unit, the engine writes the `_unit_pre_aggregate` partials for its
+ - per unit, the engine commits the `_unit_pre_aggregate` partials for its
    slice — the per-(window, conv) associative reduction the batch plan
    computes anyway, over the same raw windowed rows
    (`plans.pipeline.unit_source`: no parse or enrich). Because slices
@@ -21,14 +21,23 @@ The Spark-native analog:
    one slice. State
    volume is O(conversation-windows), ~10^3x smaller than the fact and
    identical to the unit frame the uninterrupted plan persists;
+ - each unit has ONE commit point: `plans/commit.commit_append` of its
+   partials to `{state_dir}/units`, keyed by the unit's record (unit,
+   rows_scanned, state_rows; unit 0's also holds n_units and the slice
+   bounds). The pointer swap publishes the partials and the record
+   together, and `commit.committed_keys` is the only done-unit list, so
+   no side manifest can disagree with the data. Partials merge in any
+   order, so each commit is a pure append;
  - because A-Res priorities are pure functions of (seed, window, conv),
    the winner set derived from the union of per-unit partials equals the
    winner set of an uninterrupted run — merge is associative and
    replay-order-free (this is what fixes the reference's restore
    double-count, §2.11.3, by construction);
- - resume = read manifest, skip done units, compute the rest, finalize:
-   merge partials -> late classification (global conv starts) -> one
-   routed pass -> sinks + metrics. The routed pass is the batch plan's own
+ - resume = read the committed keys, skip done units, compute the rest,
+   expire the snapshots a crashed attempt left, finalize: merge partials
+   -> late classification (global conv starts) -> one routed pass ->
+   `plans/pipeline.write_sinks`, so the routed and metrics tables and the
+   returned counts are the batch plan's. The routed pass is the batch plan's own
    routing step, `plans.pipeline.route_units` (capacity, winners, the
    broadcast winner join and `apply_routing`), over rows from the shared
    `plans.pipeline.prepare` chain, so checkpoint runs sample whole
@@ -58,57 +67,32 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from trace_aware_reservoir_otel_spark import fsutil
 from trace_aware_reservoir_otel_spark.config import PipelineConfig
-from trace_aware_reservoir_otel_spark.operators.metrics import (
-    observed_routed,
-    sink_counts,
-)
 from trace_aware_reservoir_otel_spark.plans import commit
 from trace_aware_reservoir_otel_spark.session import local_frame
 from trace_aware_reservoir_otel_spark.plans.pipeline import (
     _merge_pre,
     _unit_pre_aggregate,
     _units_from_pre,
-    commit_routed,
     invalid_key,
     prepare,
     route_units,
+    routed_result,
     unit_source,
+    write_sinks,
 )
 
 
-def _manifest_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "manifest.jsonl")
-
-
-def read_manifest(state_dir: str) -> "set[int]":
-    return {
-        rec["unit"]
-        for rec in fsutil.read_jsonl(_manifest_path(state_dir))
-        if rec.get("status") == "done"
-    }
-
-
-def read_bounds(state_dir: str) -> "dict | None":
-    for rec in fsutil.read_jsonl(_manifest_path(state_dir)):
-        if rec.get("type") == "bounds":
-            return rec
-    return None
-
-
-def _append_manifest(state_dir: str, rec: dict) -> None:
-    # write-temp + atomic rename (fsutil): a crash mid-append leaves the
-    # previous manifest complete, so restart re-runs the unit idempotently
-    fsutil.append_jsonl_atomic(_manifest_path(state_dir), [rec])
+def _units_dir(state_dir: str) -> str:
+    return os.path.join(state_dir, "units")
 
 
 def unit_bounds(
     transcripts: DataFrame, cfg: PipelineConfig, n_units: int
 ) -> "list[tuple[int, int]]":
     """Window-aligned, contiguous epoch-second slices [lo, hi) covering the
-    input's event-time span. One narrow min/max scan of `ts`; the result is
-    persisted in the manifest so resume never rescans."""
+    input's event-time span. One narrow min/max scan of `ts`; the result
+    rides in unit 0's commit record so resume never rescans."""
     row = transcripts.agg(
         F.min(F.unix_timestamp("ts")).alias("lo"),
         F.max(F.unix_timestamp("ts")).alias("hi"),
@@ -148,45 +132,40 @@ def process_unit(
     cfg: PipelineConfig,
     state_dir: str,
     unit: int,
-    bounds: "tuple[int, int]",
+    bounds: "list[tuple[int, int]]",
 ) -> int:
-    """Compute and persist one time-slice's unit partials. Returns the
+    """Compute and commit the unit partials of time slice `bounds[unit]`
+    (`bounds` is the run's whole slicing, which unit 0's commit record
+    keeps). Returns the
     number of input rows this unit actually scanned (post ts-range filter
     — the range predicate reaches the parquet scan, so summed over all
     units this is ONE pass over the input, however many units there are).
 
     Rows with NULL ts go to unit 0 (they cannot be sliced by time; the
     routed pass classifies them as invalid/windowless downstream)."""
-    lo, hi = bounds
+    lo, hi = bounds[unit]
     pred = slice_predicate(lo, hi, include_null_ts=(unit == 0))
     sliced = transcripts.filter(pred & ~invalid_key())
     obs = Observation(f"unit_{unit}_rows")
     observed = sliced.observe(obs, F.count(F.lit(1)).alias("n"))
     rows = unit_source(observed, prepare(observed, cfg), cfg)
-    pre = _unit_pre_aggregate(rows, cfg)
-    out = pre.withColumn("unit_id", F.lit(unit).cast("int")).withColumn(
-        "run_id", F.lit(cfg.run_id)
-    )
     sobs = Observation(f"unit_{unit}_state_rows")
-    out = out.observe(sobs, F.count(F.lit(1)).alias("n"))
-    out.write.mode("overwrite").parquet(f"{state_dir}/units/unit={unit}")
-    n = int(obs.get["n"])
-    _append_manifest(
-        state_dir,
-        {
+    out = _unit_pre_aggregate(rows, cfg).observe(sobs, F.count(F.lit(1)).alias("n"))
+
+    def record() -> dict:
+        # state rows are known at write time (Observation on the write)
+        # so gauges never re-count the persisted parquet
+        rec = {
             "unit": unit,
-            "status": "done",
-            "run_id": cfg.run_id,
-            "lo_s": lo,
-            "hi_s": hi,
-            "rows_scanned": n,
-            # state rows are known at write time (Observation on the write)
-            # so gauges never re-count the persisted parquet
+            "rows_scanned": int(obs.get["n"]),
             "state_rows": int(sobs.get["n"]),
-            "done_at": time.time(),
-        },
-    )
-    return n
+        }
+        if unit == 0:
+            rec.update(n_units=len(bounds), bounds=bounds)
+        return rec
+
+    commit.commit_append(out, _units_dir(state_dir), key=record)
+    return int(obs.get["n"])
 
 
 def finalize(
@@ -198,15 +177,18 @@ def finalize(
     expire_before_s: "int | None" = None,
 ) -> "dict[str, int]":
     """Merge all units' partials into global winners and run the single
-    routed pass through the shared routing step (`route_units`). Pure
-    function of the state table — replay order of units never matters.
-    Sink counts come from the Observation attached to the write (no
-    re-read of written output)."""
-    pre = _merge_pre(
-        spark.read.parquet(f"{state_dir}/units").drop("unit_id", "run_id"), cfg
-    )
-
+    routed pass through the shared routing step (`route_units`), then
+    commit it with the batch plan's `write_sinks`. Pure function of the
+    state table — replay order of units never matters. Returns
+    `write_sinks`' counts: rows per sink from the Observation attached to
+    the write, plus the metrics table's row count."""
     prepared = prepare(transcripts, cfg)
+    # a surplus slice commits a version dir with no parquet file: read
+    # with the partials' schema, derived from the plan that wrote them
+    schema = _unit_pre_aggregate(unit_source(transcripts, prepared, cfg), cfg).schema
+    pre = _merge_pre(
+        commit.read_committed(spark, _units_dir(state_dir), schema), cfg
+    )
     persisted: "list[DataFrame]" = []
     units, late_units = _units_from_pre(
         pre, prepared.filter(~invalid_key()), cfg, persisted
@@ -221,23 +203,9 @@ def finalize(
             late_units = late_units.filter(~expired)
 
     routed = route_units(prepared, units, late_units, cfg, expired=expired)
-    observed, obs = observed_routed(routed)
-    # snapshot-commit (plans/commit.py): the routed table becomes readable
-    # only at the atomic pointer swap — a kill mid-write leaves readers on
-    # the previous complete snapshot, never a half-overwritten partition
-    commit_routed(observed, cfg, out_dir)
-    counts = sink_counts(obs)
-    commit.commit_write(
-        local_frame(
-            spark,
-            [(s, n, cfg.run_id) for s, n in counts.items()],
-            "sink string, rows long, run_id string",
-        ),
-        f"{out_dir}/metrics",
+    return write_sinks(
+        routed_result(routed, cfg, transcripts.columns, persisted), out_dir
     )
-    for df in persisted:
-        df.unpersist()
-    return counts
 
 
 def run_with_checkpoint(
@@ -250,20 +218,22 @@ def run_with_checkpoint(
     fail_after_unit: "int | None" = None,
     expire_before_s: "int | None" = None,
 ) -> "dict[str, int] | None":
-    """Process all pending units (skipping manifest-complete ones), then
+    """Process all pending units (skipping committed ones), then
     finalize. `fail_after_unit` simulates a mid-run crash for tests."""
-    os.makedirs(state_dir, exist_ok=True)
-    saved = read_bounds(state_dir)
-    if saved is not None and saved["n_units"] != n_units:
-        # done-unit ids only mean anything under the slicing that produced
-        # them; silently re-slicing would double-count or skip rows
-        raise ValueError(
-            f"state at {state_dir} was sliced with n_units="
-            f"{saved['n_units']}; resume with that value (got {n_units}) "
-            "or use a fresh state_dir"
-        )
-    if saved is not None:
-        bounds = [tuple(b) for b in saved["bounds"]]
+    units_dir = _units_dir(state_dir)
+    done = commit.committed_keys(units_dir)
+    if done:
+        saved = done[0]  # unit 0 commits first and records the slicing
+        if saved["n_units"] != n_units:
+            # done-unit ids only mean anything under the slicing that
+            # produced them; silently re-slicing would double-count or
+            # skip rows
+            raise ValueError(
+                f"state at {state_dir} was sliced with n_units="
+                f"{saved['n_units']}; resume with that value (got {n_units}) "
+                "or use a fresh state_dir"
+            )
+        bounds = saved["bounds"]
         # the slicing only covers the event-time span it was computed on:
         # rows outside it at resume (input grew between crash and resume)
         # would never be pre-aggregated into any unit and their windows
@@ -284,23 +254,16 @@ def run_with_checkpoint(
             )
     else:
         bounds = unit_bounds(transcripts, cfg, n_units)
-        _append_manifest(
-            state_dir,
-            {
-                "type": "bounds",
-                "n_units": n_units,
-                "bounds": bounds,
-                "window_s": cfg.window_duration_s,
-                "run_id": cfg.run_id,
-            },
-        )
-    done = read_manifest(state_dir)
+    done_units = {rec["unit"] for rec in done}
     for unit in range(n_units):
-        if unit in done:
+        if unit in done_units:
             continue
-        process_unit(transcripts, cfg, state_dir, unit, bounds[unit])
+        process_unit(transcripts, cfg, state_dir, unit, bounds)
         if fail_after_unit is not None and unit >= fail_after_unit:
-            return None  # simulated crash (manifest already has this unit)
+            return None  # simulated crash (this unit is committed)
+    # every unit is committed: reclaim the version dirs of crashed
+    # attempts, which no pointer names (checkpoint GC)
+    commit.expire_snapshots(units_dir)
     return finalize(spark, transcripts, cfg, state_dir, out_dir, expire_before_s)
 
 
@@ -308,19 +271,21 @@ def state_metrics(spark: SparkSession, state_dir: str) -> DataFrame:
     """State-health gauges — analogs of the reference's checkpoint age /
     db size / compaction counters (metrics.go:96-145):
 
-      state_manifest_age_s : seconds since the last manifest append
+      state_manifest_age_s : seconds since the last unit commit (the
+                             units table's pointer swap)
       state_bytes          : on-disk size of the state DATA files (parquet
                              only — _SUCCESS/.crc markers excluded, so the
                              gauge tracks compaction pressure, not marker
                              noise)
       state_files          : parquet data-file count
-      state_rows           : unit rows persisted (from the manifest's
+      state_rows           : unit rows persisted (from the commit records'
                              write-time Observation counts — never
                              re-counts the parquet)
-      units_done           : manifest-complete units
+      units_done           : committed units
     """
-    path = _manifest_path(state_dir)
-    age = time.time() - os.path.getmtime(path) if os.path.exists(path) else -1.0
+    units_dir = _units_dir(state_dir)
+    pointer = commit._pointer_path(units_dir)
+    age = time.time() - os.path.getmtime(pointer) if os.path.exists(pointer) else -1.0
     n_bytes = 0
     n_files = 0
     for root, _dirs, files in os.walk(state_dir):
@@ -329,16 +294,12 @@ def state_metrics(spark: SparkSession, state_dir: str) -> DataFrame:
                 continue
             n_files += 1
             n_bytes += os.path.getsize(os.path.join(root, fn))
-    n_rows = sum(
-        rec.get("state_rows", 0)
-        for rec in fsutil.read_jsonl(path)
-        if rec.get("status") == "done"
-    )
+    done = commit.committed_keys(units_dir)
     rows = [
         ("state_manifest_age_s", float(age)),
         ("state_bytes", float(n_bytes)),
         ("state_files", float(n_files)),
-        ("state_rows", float(n_rows)),
-        ("units_done", float(len(read_manifest(state_dir)))),
+        ("state_rows", float(sum(rec["state_rows"] for rec in done))),
+        ("units_done", float(len(done))),
     ]
     return local_frame(spark, rows, "metric string, value double")

@@ -19,32 +19,27 @@ Replay safety (foreachBatch is at-least-once): once a batch's survivors
 have been appended to the index, RECOMPUTING them is no longer safe — the
 batch's own bucket rows are in the index, every original survivor
 self-collides in the semi-join, and the recomputed survivor set is empty.
-So replay handling never recomputes after an append:
-
- 1. applied batch_ids are recorded in a crash-safe JSONL manifest AFTER
-    the append commits, and `dedup_batch` checks the manifest FIRST — a
-    replayed applied batch returns before touching any sink (the sinks
-    were all written before the mark, so they are already correct);
- 2. the append itself is stamped with a batch_id idempotency key in the
-    index's commit pointer (plans/commit.commit_append `key`), so a crash
-    BETWEEN the append-commit and the applied-mark is detected on replay:
-    the batch restores its missing mark and returns — sinks were written
-    before the append, the index already holds the survivors, nothing is
-    recomputed and nothing is appended twice.
+So replay handling never recomputes after an append. The batch has ONE
+commit point, the index append (plans/commit.commit_append, through
+operators/dedup.minhash_index_append), stamped with the batch_id as its
+key — the append runs even for an empty survivor set, so every applied
+batch leaves its key. `dedup_batch` checks `committed_keys` FIRST: a
+replayed applied batch returns before touching any sink (the sinks were
+written before the append, so they are already correct). A crash before
+the append's pointer swap leaves no key, and the replay recomputes
+against an index that does not yet hold the batch: the batch_id-keyed
+sinks are overwritten with the same rows, and the append runs once.
 
 Scale shape per batch: one probe (SEMI join of batch band rows against
 the committed index — see incremental_dedup_survivors) + one O(batch)
-delta append. Driver-side cost is O(1) per batch (manifest read of
-applied ids). The index grows by survivors only.
+delta append. Driver-side cost per batch is one read of the index's
+commit pointer. The index grows by survivors only.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, types as T
 
-from trace_aware_reservoir_otel_spark import fsutil
 from trace_aware_reservoir_otel_spark.operators.dedup import (
     incremental_dedup_survivors,
     minhash_index_append,
@@ -56,13 +51,6 @@ DOCS_SCHEMA = T.StructType(
         T.StructField("text", T.StringType()),
     ]
 )
-
-_APPLIED = "applied.jsonl"
-
-
-def _applied_ids(state_dir: str) -> set:
-    return {r["batch_id"] for r in fsutil.read_jsonl(os.path.join(state_dir, _APPLIED))}
-
 
 def stream_documents(
     spark: SparkSession, input_dir: str, max_files_per_trigger: int = 1
@@ -90,23 +78,15 @@ def dedup_batch(
     the replay suite can invoke it directly with a repeated batch_id.
 
     Order of operations IS the replay contract (see module docstring):
-    applied-check -> append-key check -> seen sink -> survivor compute ->
-    survivor sink -> keyed index append -> applied mark. The survivor
-    recompute happens only on the path where the index provably does not
-    yet contain this batch (both checks negative), so the self-collision
-    data loss of the pre-fix ordering (compute-then-check) cannot occur."""
+    append-key check -> seen sink -> survivor compute -> survivor sink ->
+    keyed index append. The survivor recompute happens only on the path
+    where the index provably does not yet contain this batch (no key), so
+    the self-collision data loss of the pre-fix ordering
+    (compute-then-check) cannot occur."""
     from trace_aware_reservoir_otel_spark.plans import commit
 
-    if batch_id in _applied_ids(out_dir):
-        return  # replayed applied batch: sinks + index already correct
     if _append_key(batch_id) in commit.committed_keys(f"{index_dir}/buckets"):
-        # crash landed between the index append and the applied mark: the
-        # sinks were written before the append, the index holds the
-        # survivors — restore the missing mark, recompute nothing
-        fsutil.append_jsonl_atomic(
-            os.path.join(out_dir, _APPLIED), [{"batch_id": int(batch_id)}]
-        )
-        return
+        return  # replayed applied batch: sinks + index already correct
     # one job for the whole batch body: survivors feed two sinks and
     # the index append, so pin them once
     batch_df = batch_df.localCheckpoint(eager=True)
@@ -121,9 +101,6 @@ def dedup_batch(
     )
     minhash_index_append(
         surv, index_dir, text_col, id_col, key=_append_key(batch_id)
-    )
-    fsutil.append_jsonl_atomic(
-        os.path.join(out_dir, _APPLIED), [{"batch_id": int(batch_id)}]
     )
 
 
