@@ -41,7 +41,8 @@ there is no side manifest that could disagree with the pointer. The
 streaming rollover keeps per-bucket dynamic partition overwrite instead:
 its commit unit is one export-bucket partition, and its one commit point
 is the export's record in the stream's `metrics.jsonl`, which is also
-the buckets' mark (streaming/pipeline._route_buckets).
+the buckets' mark (streaming/pipeline._route_buckets). A snapshot commit
+per roll would be a second commit point beside that record.
 """
 
 from __future__ import annotations
