@@ -161,6 +161,38 @@ def test_replay_of_applied_batch_keeps_survivors(spark, tmp_path):
     assert sorted(os.listdir(out)) == ["seen", "survivors"]
 
 
+def test_replay_after_crash_between_append_and_mark(spark, tmp_path, monkeypatch):
+    """Crash AFTER the keyed index append committed but BEFORE the stream
+    engine marked the batch done in its commit log. The replay finds the
+    batch's key in the index pointer and recomputes nothing: survivors and
+    seen ids stay intact, the index gains no duplicate delta, and the key
+    is recorded once — the state of an uninterrupted run."""
+    from trace_aware_reservoir_otel_spark.streaming.dedup import dedup_batch
+
+    idx, out, batch = _one_batch(spark, tmp_path, "clean")
+    dedup_batch(batch, 0, idx, out)
+    expected = _applied_state(spark, idx, out)
+
+    idx, out, batch = _one_batch(spark, tmp_path, "crash")
+    real_append = commit.commit_append
+
+    def append_then_crash(*args, **kwargs):
+        real_append(*args, **kwargs)
+        raise RuntimeError("simulated crash after the index append")
+
+    with monkeypatch.context() as m:
+        m.setattr(commit, "commit_append", append_then_crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            dedup_batch(batch, 0, idx, out)
+    assert _applied_state(spark, idx, out) == expected
+
+    with monkeypatch.context() as m:
+        m.setattr(commit, "commit_append", append_then_crash)
+        dedup_batch(batch, 0, idx, out)  # replay: key found, no append
+    assert _applied_state(spark, idx, out) == expected
+    assert sorted(os.listdir(out)) == ["seen", "survivors"]
+
+
 def test_replay_after_crash_before_index_append(spark, tmp_path, monkeypatch):
     """Crash after the seen and survivors sinks are written and before the
     keyed index append runs: no key is committed, so the replay recomputes
