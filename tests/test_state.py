@@ -97,6 +97,12 @@ def test_crash_at_unit_commit_resumes_without_the_dangling_version(
     dangling = [s["dir"] for s in commit.snapshots(units) if not s["current"]]
     dangling = [d for d in dangling if d not in commit._current_dirs(units)]
     assert len(dangling) == 1 and os.listdir(dangling[0])
+    # the gauges skip the dangling dir even before the resume reclaims it
+    g0 = {r["metric"]: r["value"] for r in state_metrics(spark, s2).collect()}
+    assert g0["state_files"] == len([
+        f for d in commit._current_dirs(units) for f in os.listdir(d)
+        if f.endswith(".parquet")
+    ])
 
     read_dirs = []
     real_read = commit._read_parquet

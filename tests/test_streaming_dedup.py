@@ -93,7 +93,7 @@ def test_streaming_ingest_dedup_sequential_fold(spark, tmp_path):
         402,
     }
     applied2 = commit.committed_keys(f"{idx}/buckets")
-    assert applied2[:3] == applied and len(set(applied2)) == 4
+    assert applied2[:3] == applied and len(applied2) == len(set(applied2)) == 4
 
 
 def test_streaming_ingest_dedup_empty_initial_index_accepts_first(spark, tmp_path):

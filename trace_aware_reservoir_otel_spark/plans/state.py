@@ -273,11 +273,12 @@ def state_metrics(spark: SparkSession, state_dir: str) -> DataFrame:
 
       state_manifest_age_s : seconds since the last unit commit (the
                              units table's pointer swap)
-      state_bytes          : on-disk size of the state DATA files (parquet
-                             only — _SUCCESS/.crc markers excluded, so the
-                             gauge tracks compaction pressure, not marker
-                             noise)
-      state_files          : parquet data-file count
+      state_bytes          : on-disk size of the committed state DATA
+                             files (parquet in the units table's current
+                             version dirs only — _SUCCESS/.crc markers
+                             and uncommitted dirs excluded, so the gauge
+                             tracks compaction pressure, not noise)
+      state_files          : committed parquet data-file count
       state_rows           : unit rows persisted (from the commit records'
                              write-time Observation counts — never
                              re-counts the parquet)
@@ -288,12 +289,15 @@ def state_metrics(spark: SparkSession, state_dir: str) -> DataFrame:
     age = time.time() - os.path.getmtime(pointer) if os.path.exists(pointer) else -1.0
     n_bytes = 0
     n_files = 0
-    for root, _dirs, files in os.walk(state_dir):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            n_files += 1
-            n_bytes += os.path.getsize(os.path.join(root, fn))
+    # committed version dirs only: a crashed attempt's dangling dir and
+    # files left by older state layouts are not state
+    for vdir in commit._current_dirs(units_dir):
+        for root, _dirs, files in os.walk(vdir):
+            for fn in files:
+                if not fn.endswith(".parquet"):
+                    continue
+                n_files += 1
+                n_bytes += os.path.getsize(os.path.join(root, fn))
     done = commit.committed_keys(units_dir)
     rows = [
         ("state_manifest_age_s", float(age)),
